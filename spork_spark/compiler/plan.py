@@ -560,9 +560,7 @@ class PlanCompiler:
         """
         child_df = None
         if isinstance(group.child, L.Join) and group.mode == "by" and \
-                self._consumers.get(group.child._id, 0) <= 1 and \
-                self._conf("spark.spork.optimizer.eagerAgg",
-                           "true") == "true":
+                self._consumers.get(group.child._id, 0) <= 1:
             eager = self._try_eager_agg(group, gens)
             if eager is not None:
                 child_df, gens = eager

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _sorted_pairs
+
 
 def item_cooccurrence(df: DataFrame, basket_col: str, item_col: str,
                       min_support: int = 2, max_basket: int = 100,
@@ -64,18 +66,10 @@ def item_cooccurrence(df: DataFrame, basket_col: str, item_col: str,
               .agg(F.sort_array(F.collect_set("__i")).alias("__is")))
     n_baskets = kept.select(F.count(F.lit(1)).alias("__N"))
     # (i < j) pair expansion in place of the basket self-equi-join:
-    # items are unique per basket and sorted, so posexplode anchor +
-    # explode(slice) emits exactly the item_a < item_b pairs the join's
-    # filter kept (the _bucket_pairs/containment_pairs shape)
-    pe = (kept.where(F.size("__is") >= 2)
-              .select(F.posexplode("__is").alias("__k", "item_a"),
-                      F.col("__is")))
-    pairs = (pe.select(
-                 "item_a",
-                 F.explode(F.slice(F.col("__is"), F.col("__k") + 2,
-                                   F.greatest(F.size("__is") - F.col("__k")
-                                              - 1, F.lit(0))))
-                  .alias("item_b"))
+    # items are unique per basket and sorted, so the (i < j) expansion
+    # emits exactly the item_a < item_b pairs the join's filter kept
+    pairs = (_sorted_pairs(kept.where(F.size("__is") >= 2),
+                           "__is", "item_a", "item_b")
                .groupBy("item_a", "item_b")
                .agg(F.count(F.lit(1)).alias("co"))
                .where(F.col("co") >= min_pair))

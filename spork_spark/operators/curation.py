@@ -484,7 +484,7 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.7, k: int = 8,
     # its interpreted-lambda work was recomputing per-vector constants)
     nsq = F.aggregate(F.transform("__q", lambda x: x * x),
                       F.lit(0).cast("long"), lambda acc, x: acc + x)
-    from .dedup import _spread
+    from .dedup import _sorted_pairs, _spread
     q = (_spread(df.select(F.col(id_col),
                            _quantize_vec(vec_col, scale).alias("__q")))
            .join(clusters, on=id_col)
@@ -503,13 +503,7 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.7, k: int = 8,
                     F.struct(F.col(id_col).alias("__id"), F.col("__q"),
                              F.col("__nsq")))).alias("__ps"))
                 .where(F.size("__ps") >= 2))
-    pe = buckets.select(F.posexplode("__ps").alias("__i", "__a"),
-                        F.col("__ps"))
-    mpairs = pe.select(
-        F.col("__a"),
-        F.explode(F.slice(F.col("__ps"), F.col("__i") + 2,
-                          F.greatest(F.size("__ps") - F.col("__i") - 1,
-                                     F.lit(0)))).alias("__b"))
+    mpairs = _sorted_pairs(buckets, "__ps", "__a", "__b")
     dot = F.aggregate(F.zip_with(F.col("__a.__q"), F.col("__b.__q"),
                                  lambda x, y: x * y),
                       F.lit(0).cast("long"), lambda acc, x: acc + x)

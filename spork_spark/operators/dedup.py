@@ -60,9 +60,10 @@ def shingles(text_col, n: int = 5) -> "F.Column":
 
 
 def _shingle_instances(df: DataFrame, id_col: str, text_col: str,
-                       n: int) -> DataFrame:
-    """(id, __s) shingle INSTANCES — one row per character n-gram
-    occurrence, duplicates kept. Generator explode over a sequence of
+                       n: int, carry: tuple = ()) -> DataFrame:
+    """(id, __s, *carry) shingle INSTANCES — one row per character
+    n-gram occurrence, duplicates kept, with the ``carry`` columns
+    riding along unchanged. Generator explode over a sequence of
     start positions plus a native substring, so the whole pipeline
     stays inside WholeStageCodegen (the `shingles()` array route builds
     each doc's array through interpreted higher-order-function lambdas
@@ -70,66 +71,16 @@ def _shingle_instances(df: DataFrame, id_col: str, text_col: str,
     array_distinct). Consumers that need SET semantics dedup downstream
     (min/collect_set are idempotent, so most need nothing)."""
     c = F.col(text_col)
-    return (df.select(F.col(id_col), text_col)
+    return (df.select(F.col(id_col), text_col, *carry)
               .select(F.col(id_col),
                       F.explode(F.sequence(
                           F.lit(1),
                           F.greatest(F.length(c) - (n - 1), F.lit(1))))
                        .alias("__i"),
-                      c.alias("__t"))
+                      c.alias("__t"), *carry)
               .select(F.col(id_col),
-                      F.expr(f"substring(__t, __i, {int(n)})").alias("__s")))
-
-
-def _shingle_sets(df: DataFrame, id_col: str, text_col: str,
-                  n: int, spread: bool = True) -> DataFrame:
-    """(id, __sh) per-doc DISTINCT shingle arrays, built from codegen
-    instance rows + one collect_set aggregate instead of the
-    interpreted `shingles()` HOF projection. The aggregation's id-keyed
-    exchange doubles as the REUSE POINT for verification, which joins
-    this table once per pair side under alias renames — renamed
-    projections above a shared exchange still ReuseExchange, while a
-    renamed HOF projection re-executes per consumer. A doc whose only
-    instance is the null shingle (null text) keeps `shingles()`'s
-    [null] representation (collect_set drops nulls).
-
-    ``spread=False`` skips the single-task-scan repartition probe:
-    _spread's getNumPartitions forces a full physical-planning pass of
-    the input subtree at CONSTRUCTION time, which is wasted (and, for
-    an input that embeds the candidate-pair plan, expensive — measured
-    +13 s of build on lsh_pairs_incremental) whenever the input is
-    already behind a join/aggregate rather than a bare scan.
-
-    The sets carry LONG surrogate ids, not the shingle strings: the
-    distinct vocabulary gets a deterministic rank (row_number ordered
-    by shingle — injective, and stable across re-executions, so the
-    two verify sides agree even when their subplans don't share an
-    exchange) attached back by broadcast join. Consumers only take
-    intersection/union SIZES, which an injective map preserves exactly
-    (parity pinned in the verify A/B: identical pairs and jaccards);
-    the collect_set exchange and every array_intersect/array_union
-    then move/hash 8-byte longs instead of n-char strings (measured
-    −1.2 s on the minhash verify at sf0.1). The single-partition rank
-    window and the broadcast are bounded by the same argument as the
-    banding's vocab broadcast: a character n-gram vocabulary is
-    charset-bounded, and this table is strictly narrower than the
-    banding's 64-hash one. Null-text docs keep their [null] set via
-    the LEFT join (null shingles rank to null, collect_set drops them,
-    the empty-set branch restores [null] as a long array — null
-    set-element semantics are type-independent)."""
-    src = df.select(id_col, text_col)
-    inst = _shingle_instances(_spread(src) if spread else src,
-                              id_col, text_col, n)
-    vocab = inst.where(F.col("__s").isNotNull()).select("__s").distinct()
-    ranked = vocab.select(
-        "__s", F.row_number().over(Window.orderBy("__s")).alias("__sid"))
-    j = inst.join(F.broadcast(ranked), on="__s", how="left")
-    g = j.groupBy(id_col).agg(F.collect_set("__sid").alias("__shs"))
-    return g.select(
-        F.col(id_col),
-        F.when(F.size("__shs") == 0,
-               F.array(F.lit(None).cast("long")))
-         .otherwise(F.col("__shs").cast("array<long>")).alias("__sh"))
+                      F.expr(f"substring(__t, __i, {int(n)})").alias("__s"),
+                      *carry))
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -160,14 +111,21 @@ def _spread(df: DataFrame) -> DataFrame:
     return df
 
 
+def _minhash_coeffs(num_hashes: int, seed: int) -> list:
+    """The (a_j, b_j) universal-hash coefficients of the xxhash64 MinHash
+    family — shared by minhash_signature and the banding kernel, so the
+    column and aggregate signatures stay value-identical."""
+    import random
+    rnd = random.Random(seed)
+    return [(rnd.randrange(1, MERSENNE_PRIME),
+             rnd.randrange(0, MERSENNE_PRIME)) for _ in range(num_hashes)]
+
+
 def minhash_signature(shingle_col, num_hashes: int = 64,
                       seed: int = 42) -> "F.Column":
     """num_hashes-wide MinHash signature: sig[j] = min over shingles of
     ((a_j * h(s) + b_j) mod p), h = xxhash64. Pure Column expressions."""
-    import random
-    rnd = random.Random(seed)
-    coeffs = [(rnd.randrange(1, MERSENNE_PRIME),
-               rnd.randrange(0, MERSENNE_PRIME)) for _ in range(num_hashes)]
+    coeffs = _minhash_coeffs(num_hashes, seed)
     hashed = F.transform(shingle_col, lambda s: F.xxhash64(s))
     # Long arithmetic with wrap-around multiply (Java overflow semantics):
     # not a textbook universal family, but uniform enough for LSH banding
@@ -221,6 +179,28 @@ def _group_members(members: DataFrame, id_col: str) -> DataFrame:
                         .alias("__ids")))
 
 
+def _sorted_pairs(df: DataFrame, arr: str, a: str, b: str,
+                  carry: tuple = ()) -> DataFrame:
+    """(*carry, a, b) for every position pair i < j of the array column
+    ``arr``: element i lands in ``a``, element j in ``b``. Over a sorted,
+    duplicate-free array this is exactly the (a < b) pair set a
+    self-join with an a < b filter keeps. Every bucket and posting-list
+    pair generator here expands in place instead of self-joining: the
+    join's two alias-renamed sides each re-execute the bucket subplan
+    (ReuseExchange does not fire across renamed projections).
+
+    Native posexplode anchor + explode(slice(arr, i + 2, ...)) rather
+    than interpreted transform/flatten struct building: both generators
+    run inside whole-stage codegen. The anchor's position column is
+    named ``__i``."""
+    pe = df.select(*carry, F.posexplode(arr).alias("__i", a), F.col(arr))
+    return pe.select(
+        *carry, a,
+        F.explode(F.slice(F.col(arr), F.col("__i") + 2,
+                          F.greatest(F.size(arr) - F.col("__i") - 1,
+                                     F.lit(0)))).alias(b))
+
+
 def _within_group_pairs(members: DataFrame, id_col: str) -> DataFrame:
     """(id_a < id_b, __gid) — every pair inside an exact-dup group.
     Quadratic in group size, which is exactly the OUTPUT size (those
@@ -230,13 +210,7 @@ def _within_group_pairs(members: DataFrame, id_col: str) -> DataFrame:
     whose two alias-renamed sides each re-executed the members
     subplan."""
     wm = _group_members(members, id_col).where(F.size("__ids") >= 2)
-    pe = wm.select("__gid", F.posexplode("__ids").alias("__i", "id_a"),
-                   F.col("__ids"))
-    return pe.select(
-        "__gid", "id_a",
-        F.explode(F.slice(F.col("__ids"), F.col("__i") + 2,
-                          F.greatest(F.size("__ids") - F.col("__i") - 1,
-                                     F.lit(0)))).alias("id_b"))
+    return _sorted_pairs(wm, "__ids", "id_a", "id_b", carry=("__gid",))
 
 
 def _expand_rep_pairs(rep_pairs: DataFrame, members: DataFrame,
@@ -333,33 +307,57 @@ def _banding_with_sets(df: DataFrame, id_col: str, text_col: str,
                        shingle_n: int, num_hashes: int, bands: int,
                        seed: int, hash_fn: str,
                        spread: bool = True):
-    """(banded, sets) — LSH banding rows AND per-doc distinct-shingle
-    surrogate sets, both derived from ONE shared groupBy(id) aggregate
-    (r11, guide §2.4): the separate minhash_banding + _shingle_sets
-    pair each re-ran the shingle explode + broadcast-vocab join +
-    per-instance aggregation — the two dominant stages of every
-    minhash query executed the same kernel twice. Here one pass
-    computes the num_hashes min() columns AND collect_set of the
-    surrogate id per doc; the banding expansion and both verify sides
-    consume projections of the same exchange, so the kernel runs once.
+    """(banded, sets) — the one shingle/MinHash kernel: LSH banding rows
+    (id, __band, __bh) AND per-doc distinct-shingle surrogate sets
+    (id, __sh). minhash_banding is its banding projection and
+    lsh_pairs_incremental verifies against its sets, so the full and
+    the stored-index LSH paths share the hash expressions, band keys
+    and vocabulary rank by construction, not by copy.
 
-    The shared vocabulary table carries the hash columns AND the
-    surrogate rank, so the per-shingle hashes are computed once per
-    DISTINCT shingle (minhash_banding's broadcast trick) and only one
-    vocab distinct is built instead of two.
+    Both outputs are projections of one groupBy(id) aggregate, but the
+    optimizer prunes each consumer to its OWN id-keyed aggregate: the
+    banding side aggregates the num_hashes min()s (a SortAggregate in
+    md5 mode — binary buffers), the verify side a separate
+    ObjectHashAggregate of collect_set(__sid). What the two sides
+    really share is the distinct-vocabulary (__s) exchange: the hash
+    projection reads it, and the rank window reads it back as a
+    ReusedExchange (pinned by test).
 
-    Differences from _shingle_sets, both invisible to the verify
-    consumers: null-shingle instances are dropped by the inner vocab
-    join (null-text docs therefore have no row — they also have no
-    banding rows, so no candidate pair can reference them), and
-    null-id docs are filtered above the aggregate (collect_set over
-    ids already dropped them from every bucket, so they never paired;
-    the explicit filter also ABSORBS the isnotnull predicates the
-    verify joins would otherwise push per-consumer, which would
-    de-canonicalize the shared exchange — the lsh_pairs_incremental
-    lesson)."""
-    import random
+    The explode keeps shingle INSTANCES: min() and collect_set are
+    idempotent, so a per-doc array_distinct buys nothing. md5 mode's
+    min() runs over the 16-byte UNHEXed digest, not the 32-char hex
+    string: lowercase fixed-width hex sorts exactly like its bytes, so
+    min(unhex(h)) == unhex(min(h)) and the signatures converted back
+    with lower(hex(...)) are byte-identical, while every min buffer
+    compares/copies half the bytes (measured ~2x on the banding
+    aggregate at sf0.1).
 
+    Each DISTINCT shingle is hashed once and re-attached, instead of
+    evaluating num_hashes hash expressions per (doc, shingle) row:
+    sig[j] is a function of the shingle VALUES, so the minimum over
+    join-attached hashes is identical, and vocabularies are tiny next
+    to instance rows (sf0.1: 2 041 distinct vs 1.0M rows). The vocab
+    side is BROADCAST — a character n-gram vocabulary is
+    charset-bounded and the partial distinct collapses it before
+    anything moves — so instance rows never shuffle for this join and
+    the per-doc aggregation runs map-side-partial in the scan stage
+    (the sort-merge shape measured 10.9 s → 2.4 s at sf0.1).
+
+    The sets carry LONG surrogate ids, not shingle strings: a
+    deterministic rank (row_number ordered by shingle — injective and
+    stable across re-executions, so the two verify sides agree even
+    without a shared exchange). Verify consumers take only
+    intersection/union SIZES, which an injective map preserves, while
+    their exchanges and array_intersect/array_union move 8-byte longs
+    (measured −1.2 s on the minhash verify at sf0.1).
+
+    Null-shingle instances are dropped by the inner vocab join, so
+    null-text docs have no row in either output; null-id docs are
+    filtered above the aggregate (collect_set over ids already dropped
+    them from every bucket, so they never paired; the explicit filter
+    also ABSORBS the isnotnull predicates the verify joins would
+    otherwise push per consumer, de-canonicalizing the shared
+    subplan)."""
     rows_per_band = num_hashes // bands
     exploded = _shingle_instances(_spread(df) if spread else df,
                                   id_col, text_col, shingle_n)
@@ -367,10 +365,7 @@ def _banding_with_sets(df: DataFrame, id_col: str, text_col: str,
         hexprs = [F.unhex(F.md5(F.concat(F.lit(f"{j}:"), F.col("__s"))))
                   .alias(f"__h{j}") for j in range(num_hashes)]
     else:
-        rnd = random.Random(seed)
-        coeffs = [(rnd.randrange(1, MERSENNE_PRIME),
-                   rnd.randrange(0, MERSENNE_PRIME))
-                  for _ in range(num_hashes)]
+        coeffs = _minhash_coeffs(num_hashes, seed)
         h = F.xxhash64(F.col("__s"))
         hexprs = [F.pmod(h * a + b, F.lit(MERSENNE_PRIME))
                   .alias(f"__h{j}") for j, (a, b) in enumerate(coeffs)]
@@ -420,18 +415,8 @@ def _bucket_pairs(banded: DataFrame, id_col: str) -> DataFrame:
                      .agg(F.sort_array(F.collect_set(F.col(id_col)))
                           .alias("__ids"))
                      .where(F.size("__ids") >= 2))
-    # native (i < j) expansion — posexplode anchor + explode(slice) —
-    # instead of interpreted transform/flatten struct building (same
-    # pair set, codegen'd generators; containment_pairs rationale)
-    pe = buckets.select(F.posexplode("__ids").alias("__i", "id_a"),
-                        F.col("__ids"))
-    return (pe.select(
-                "id_a",
-                F.explode(F.slice(F.col("__ids"), F.col("__i") + 2,
-                                  F.greatest(F.size("__ids") - F.col("__i")
-                                             - 1, F.lit(0))))
-                 .alias("id_b"))
-              .dropDuplicates(["id_a", "id_b"]))
+    return (_sorted_pairs(buckets, "__ids", "id_a", "id_b")
+            .dropDuplicates(["id_a", "id_b"]))
 
 
 def minhash_banding(df: DataFrame, id_col: str, text_col: str,
@@ -453,72 +438,14 @@ def minhash_banding(df: DataFrame, id_col: str, text_col: str,
     measured 10×+ faster at 5k docs). Banding rows stay NARROW — the
     bucket self-join is quadratic in bucket size, and a dup-heavy corpus
     makes buckets big, so candidate rows must not carry shingle arrays.
-    """
-    import random
 
-    rows_per_band = num_hashes // bands
-    # Shingle INSTANCES, duplicates kept: every signature entry is a
-    # min(), which is idempotent, so the per-doc array_distinct the
-    # array route paid (interpreted HOF, the most expensive expression
-    # in the old plan) buys nothing here.
-    exploded = _shingle_instances(_spread(df) if spread else df,
-                                  id_col, text_col, shingle_n)
-    if hash_fn == "md5":
-        # min() runs over the 16-byte UNHEXed digest, not the 32-char
-        # hex string: lowercase fixed-width hex sorts exactly like its
-        # bytes, so min(unhex(h)) == unhex(min(h)) and the signatures
-        # converted back with lower(hex(...)) are byte-identical —
-        # while every min buffer compares/copies half the bytes
-        # (measured ~2x on the banding aggregate at sf0.1).
-        hexprs = [F.unhex(F.md5(F.concat(F.lit(f"{j}:"), F.col("__s"))))
-                  .alias(f"__h{j}") for j in range(num_hashes)]
-    else:
-        rnd = random.Random(seed)
-        coeffs = [(rnd.randrange(1, MERSENNE_PRIME),
-                   rnd.randrange(0, MERSENNE_PRIME))
-                  for _ in range(num_hashes)]
-        h = F.xxhash64(F.col("__s"))
-        hexprs = [F.pmod(h * a + b, F.lit(MERSENNE_PRIME))
-                  .alias(f"__h{j}") for j, (a, b) in enumerate(coeffs)]
-    # Hash each DISTINCT shingle once and re-attach instead of
-    # evaluating num_hashes hash expressions on every (doc, shingle)
-    # row: sig[j] = min over the doc's shingles of h(j, s) is a function
-    # of the shingle VALUES, so the minimum over join-attached hashes is
-    # identical. Shingle vocabularies are tiny relative to doc-shingle
-    # rows in any corpus worth dedup-ing (sf0.1: 2 041 distinct vs 1.0M
-    # rows → 500× fewer md5 evaluations; measured 34 s → see
-    # OPTIMIZATION_r10.md). The vocab side is BROADCAST: a character
-    # n-gram vocabulary is charset-bounded and the partial distinct
-    # collapses it before anything moves, so the instance rows are never
-    # shuffled for this join at all — the per-doc min aggregation then
-    # runs map-side-partial in the scan stage and the only full-row
-    # exchange is the groupBy(id). (The previous equi-join shape
-    # defaulted to sort-merge: it shuffled the instance rows AND
-    # re-executed the explode subplan on both sides — measured 10.9 s →
-    # 2.4 s at sf0.1 for the banding alone.)
-    hashed = exploded.select("__s").distinct().select(F.col("__s"), *hexprs)
-    joined = exploded.join(F.broadcast(hashed), on="__s")
-    sig_aggs = [F.min(F.col(f"__h{j}")).alias(f"__mh{j}")
-                for j in range(num_hashes)]
-    sig_elem = (lambda j: F.lower(F.hex(F.col(f"__mh{j}")))) \
-        if hash_fn == "md5" else (lambda j: F.col(f"__mh{j}"))
-    sig = (joined.groupBy(id_col)
-               .agg(*sig_aggs)
-               .select(id_col, F.array(*[sig_elem(j)
-                                         for j in range(num_hashes)])
-                       .alias("__sig")))
-    if hash_fn == "md5":
-        band_key = lambda b: F.md5(F.concat_ws("|", F.slice(  # noqa: E731
-            F.col("__sig"), b * rows_per_band + 1, rows_per_band)))
-    else:
-        band_key = lambda b: F.xxhash64(F.slice(  # noqa: E731
-            F.col("__sig"), b * rows_per_band + 1, rows_per_band)
-            .cast("string"))
-    return sig.select(
-        id_col,
-        F.posexplode(F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            band_key)).alias("__band", "__bh"))
+    This is the banding projection of _banding_with_sets. Null-id docs
+    emit no index rows (the kernel filters them out, and
+    lsh_pairs_incremental drops null ids anyway, so no pair changes);
+    null-text docs never did.
+    """
+    return _banding_with_sets(df, id_col, text_col, shingle_n, num_hashes,
+                              bands, seed, hash_fn, spread=spread)[0]
 
 
 def _jaccard_verify(pairs: DataFrame, shing: DataFrame, id_col: str,
@@ -595,13 +522,7 @@ def lsh_pairs_incremental(index: DataFrame, corpus: DataFrame,
     # filtered to pairs touching a new id emits exactly the join's
     # (least, greatest) pair set: (a, b) paired iff some bucket holds
     # both and at least one side is new.
-    pe = buckets.select(F.posexplode("__ms").alias("__i", "__a"),
-                        F.col("__ms"))
-    mp = pe.select(
-        F.col("__a"),
-        F.explode(F.slice(F.col("__ms"), F.col("__i") + 2,
-                          F.greatest(F.size("__ms") - F.col("__i") - 1,
-                                     F.lit(0)))).alias("__b"))
+    mp = _sorted_pairs(buckets, "__ms", "__a", "__b")
     pairs = (mp.where(F.col("__a.__new") | F.col("__b.__new"))
                .select(F.col("__a.__id").alias("id_a"),
                        F.col("__b.__id").alias("id_b"))
@@ -621,9 +542,10 @@ def lsh_pairs_incremental(index: DataFrame, corpus: DataFrame,
                       .distinct())
     docs = corpus.select(id_col, text_col) \
                  .unionByName(new_docs.select(id_col, text_col))
-    shing = _shingle_sets(
+    _, shing = _banding_with_sets(
         docs.join(F.broadcast(touched), on=id_col, how="left_semi"),
-        id_col, text_col, shingle_n, spread=False)
+        id_col, text_col, shingle_n, num_hashes, bands, seed, hash_fn,
+        spread=False)
     return _jaccard_verify(pairs, shing, id_col, threshold)
 
 
@@ -731,22 +653,12 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
     # than a latency-tuned spark.sql.shuffle.partitions.
     nn = df.where(F.col(text_col).isNotNull())
     uniq_gn = nn.select(F.col(id_col), F.col(text_col)).join(gsz, on=id_col)
-    c = F.col(text_col)
-    inst = (uniq_gn
-            .select(F.col(id_col),
-                    F.explode(F.sequence(
-                        F.lit(1),
-                        F.greatest(F.length(c) - (n - 1), F.lit(1))))
-                     .alias("__i"),
-                    c.alias("__t"), F.col("__gn"))
-            .select(F.col(id_col),
-                    F.expr(f"substring(__t, __i, {int(n)})").alias("__g"),
-                    F.col("__gn")))
+    inst = _shingle_instances(uniq_gn, id_col, text_col, n, carry=("__gn",))
     spark = df.sparkSession
     npart = max(spark.sparkContext.defaultParallelism,
                 int(spark.conf.get("spark.sql.shuffle.partitions")))
-    vocab = (inst.repartition(npart, "__g")
-                 .groupBy("__g")
+    vocab = (inst.repartition(npart, "__s")
+                 .groupBy("__s")
                  .agg(F.collect_set(
                      F.struct(F.col(id_col).alias("__id"),
                               F.col("__gn"))).alias("__set")))
@@ -774,10 +686,10 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
     # ReuseExchange computes the vocabulary subplan once. Vocabulary-
     # sized rows with df-capped lists — a cheap exchange.
     lists = (keptv.select(
-                 "__g",
+                 "__s",
                  F.sort_array(F.transform("__set", lambda x: x["__id"]))
                   .alias("__ids"))
-                  .repartition(npart, "__g"))
+                  .repartition(npart, "__s"))
     sizes = (lists.select(F.explode("__ids").alias(id_col))
                   .groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz")))
     # Shared-shingle counts: consecutive shingles of a shared passage
@@ -1271,13 +1183,7 @@ def set_similarity_candidates(df: DataFrame, id_col: str, text_col: str,
                     .agg(F.sort_array(F.collect_list(
                         F.struct("__id", "__n", "__p"))).alias("__ps"))
                     .where(F.size("__ps") >= 2))
-    pe = buckets.select(F.posexplode("__ps").alias("__i", "__a"),
-                        F.col("__ps"))
-    mpairs = pe.select(
-        F.col("__a"),
-        F.explode(F.slice(F.col("__ps"), F.col("__i") + 2,
-                          F.greatest(F.size("__ps") - F.col("__i") - 1,
-                                     F.lit(0)))).alias("__b"))
+    mpairs = _sorted_pairs(buckets, "__ps", "__a", "__b")
     na, nb = F.col("__a.__n"), F.col("__b.__n")
     pa, pb = F.col("__a.__p"), F.col("__b.__p")
     # overlap floor for J>=t: alpha = ceil(t*(na+nb)/(1+t)), exact
@@ -1343,13 +1249,7 @@ def edit_distance_pairs(df: DataFrame, id_col: str,
                  .agg(F.sort_array(F.collect_list(
                      F.struct(F.col("__id"), F.col("__s")))).alias("__ps"))
                  .where(F.size("__ps") >= 2))
-    pe = buckets.select(F.posexplode("__ps").alias("__i", "__a"),
-                        F.col("__ps"))
-    mpairs = pe.select(
-        F.col("__a"),
-        F.explode(F.slice(F.col("__ps"), F.col("__i") + 2,
-                          F.greatest(F.size("__ps") - F.col("__i") - 1,
-                                     F.lit(0)))).alias("__b"))
+    mpairs = _sorted_pairs(buckets, "__ps", "__a", "__b")
     return (mpairs
             .where(F.col("__a.__id") < F.col("__b.__id"))
             .where(F.levenshtein(F.col("__a.__s"), F.col("__b.__s")) <= 1)

@@ -1346,25 +1346,56 @@ def test_edit_distance_grouped_expansion_matches_bruteforce(spark):
 
 
 def test_shingle_sets_matches_hof_shingles(spark):
-    """r10: _shingle_sets carries per-doc sets of LONG surrogate ids —
-    an injective image of the shingles() HOF string sets. Consumers
-    (_jaccard_verify) use only intersection/union sizes, so the pinned
-    contract is pairwise set-arithmetic parity across every doc pair,
-    plus the [null] null-text representation and overlapping/truncated
-    short-text grams."""
+    """The MinHash kernel's verify sets (_banding_with_sets) carry per-doc
+    sets of LONG surrogate ids — an injective image of the shingles()
+    HOF string sets. Consumers (_jaccard_verify) use only
+    intersection/union sizes, so the pinned contract is set-size and
+    pairwise-intersection parity across every non-null doc, including
+    overlapping/truncated short-text grams. Null-text docs have no row:
+    they have no banding rows either, so no candidate pair can reach
+    the verify join with one."""
     rows = [(0, "abcdefghijklmno"), (1, "abc"), (2, ""), (3, None),
             (4, "aaaaaaaaaa"), (5, "abcdefghijklmno"), (6, None)]
     df = spark.createDataFrame(rows, "id bigint, text string")
-    from spork_spark.operators.dedup import _shingle_sets, shingles
-    new = {r.id: r["__sh"] for r in
-           _shingle_sets(df, "id", "text", 5).collect()}
+    from spork_spark.operators.dedup import _banding_with_sets, shingles
+    _, sets = _banding_with_sets(df, "id", "text", 5, 64, 16, 42,
+                                 "xxhash64")
+    new = {r.id: r["__sh"] for r in sets.collect()}
     old = {r.id: r["__sh"] for r in
-           df.select("id", shingles("text", 5).alias("__sh")).collect()}
-    assert set(new) == set(old)
+           df.where(F.col("text").isNotNull())
+             .select("id", shingles("text", 5).alias("__sh")).collect()}
+    assert set(new) == set(old) == {0, 1, 2, 4, 5}
     for i in new:
         assert len(set(new[i])) == len(set(old[i]))
-        if old[i] == [None]:          # null text keeps the [null] set
-            assert new[i] == [None]
         for j in new:
             assert len(set(new[i]) & set(new[j])) == \
                    len(set(old[i]) & set(old[j])), (i, j)
+
+
+def test_minhash_kernel_shares_vocab_exchange(spark):
+    """The kernel's hash vocabulary (banding side) and rank vocabulary
+    (verify side) read ONE distinct-shingle exchange: the optimizer
+    prunes each side to its own id-keyed aggregate, so this exchange is
+    the sharing the one kernel actually provides. Checked on the
+    AQE-off physical plan, where exchange reuse is planned up front."""
+    import re
+    rows = [(0, "the quick brown fox jumps over the lazy dog"),
+            (1, "the quick brown fox jumped over the lazy dog"),
+            (2, "completely different text here"), (3, None)]
+    df = spark.createDataFrame(rows, "id bigint, text string")
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        out = minhash_lsh_pairs(df, "id", "text", threshold=0.3,
+                                collapse_exact=False)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    vocab = [ln for ln in plan.splitlines()
+             if "Exchange hashpartitioning(__s#" in ln]
+    own = {re.search(r"plan_id=(\d+)", ln).group(1)
+           for ln in vocab if "ReusedExchange" not in ln}
+    reused = {re.search(r"plan_id=(\d+)", ln).group(1)
+              for ln in vocab if "ReusedExchange" in ln}
+    assert len(own) == 1 and reused == own, plan
+    assert {(r.id_a, r.id_b) for r in out.collect()} == {(0, 1)}

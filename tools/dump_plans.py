@@ -1,14 +1,33 @@
 """Dump .explain('formatted') for named registry queries to
 plans/<round>/<query>_<tag>.txt (the optimization-round evidence files).
 
+Per-run numbering is stripped so that two dumps of the same
+plan are byte-identical and a before/after pair diffs to its real
+changes only: expression ids (`#123L`), exchange `plan_id=` tags,
+lambda variable counters (`x_12`) and JVM object hashes (`@1a2b3c`).
+
 Usage: python tools/dump_plans.py before q1,q2,... [--round r10]
 """
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+_VOLATILE = [
+    (re.compile(r"#\d+L?"), ""),
+    (re.compile(r",? ?\[plan_id=\d+\]"), ""),
+    (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1"),
+    (re.compile(r"(?<=[\w$])@[0-9a-f]+\b"), ""),
+]
+
+
+def normalize(plan: str) -> str:
+    for pat, rep in _VOLATILE:
+        plan = pat.sub(rep, plan)
+    return plan
 
 
 def main() -> None:
@@ -35,7 +54,7 @@ def main() -> None:
             df.explain("formatted")
         path = f"plans/{rnd}/{name}_{tag}.txt"
         with open(path, "w") as f:
-            f.write(buf.getvalue())
+            f.write(normalize(buf.getvalue()))
         print("wrote", path)
 
 
