@@ -28,7 +28,6 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from ..caching import track
 from ..functions.builtins import ALGEBRAIC_AGGS
@@ -1930,36 +1929,14 @@ class PlanCompiler:
         order = [F.col(n).asc_nulls_first() if asc
                  else F.col(n).desc_nulls_last()
                  for (_, asc), n in zip(node.keys, key_names)]
-        kdf = kdf.orderBy(*order)
-
-        pid = "__pid"
-        # eager localCheckpoint, not persist: the offsets collected below
-        # must match the partition ids the later join sees, and a
-        # recomputed range exchange can re-sample different bounds
-        # (RangePartitioner seeds from the RDD id) — checkpointing freezes
-        # the assignment; the RDD-level blocks free via GC with the
-        # result's lineage instead of pinning a CacheManager entry
-        staged = kdf.withColumn(pid, F.spark_partition_id()) \
-                    .localCheckpoint(eager=True)
-        # shared two-pass offsets core (operators/_scalable.py): rank
-        # needs the exclusive ROW total, dense the exclusive KEY total
-        from ..operators._scalable import partition_offsets
-        offdf, n_parts = partition_offsets(
-            staged, {"__rowoff": F.sum("__cnt"),
-                     "__keyoff": F.count(F.lit(1))}, pid=pid)
-        staged_off = staged.join(F.broadcast(offdf), on=pid, how="left")
-        w = Window.partitionBy(pid).orderBy(*order) \
-                  .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        running = F.sum("__cnt").over(w)
-        wrow = Window.partitionBy(pid).orderBy(*order)
-        ranked_keys = staged_off.select(
-            *key_names,
-            (F.coalesce(F.col("__rowoff"), F.lit(0))
-             + running - F.col("__cnt") + 1)
-            .cast("long").alias("__rank"),
-            (F.coalesce(F.col("__keyoff"), F.lit(0))
-             + F.row_number().over(wrow))
-            .cast("long").alias("__dense"))
+        # shared two-pass kernel (operators/_scalable.py): rank needs
+        # the exclusive ROW total, dense the exclusive KEY total
+        from ..operators._scalable import exclusive_prefix_sum
+        cum, n_parts = exclusive_prefix_sum(
+            kdf, order, {"__rank": F.col("__cnt"), "__dense": F.lit(1)})
+        ranked_keys = cum.select(*key_names,
+                                 (F.col("__rank") + 1).alias("__rank"),
+                                 (F.col("__dense") + 1).alias("__dense"))
 
         out_rank = F.col("__dense") if node.dense else F.col("__rank")
         orig_keys = [ctx.compile(k) for k, _ in node.keys]
@@ -1975,24 +1952,20 @@ class PlanCompiler:
         """Reference design (POCounter/PORank, SURVEY.md §2.1 #18): pass 1
         counts rows per partition (tiny driver collect — one row per
         partition); pass 2 adds prefix-sum offset to a per-partition
-        row_number. No global shuffle, no 1-partition window."""
-        pid, mid = "__pid", "__mid"
-        staged = df.withColumn(pid, F.spark_partition_id()) \
-                   .withColumn(mid, F.monotonically_increasing_id())
-        # eager localCheckpoint for the same reason as _c_rank: pid/mid
-        # captured here must be identical in the count pass and the join
-        # pass, and recompute does not guarantee that; GC-freed, no
-        # CacheManager pin
+        running count (operators/_scalable.py prefix_sums). No global
+        shuffle, no 1-partition window."""
+        staged = df.withColumn("__pid", F.spark_partition_id()) \
+                   .withColumn("__mid", F.monotonically_increasing_id())
+        # eager localCheckpoint, not persist: pid/mid captured here must
+        # be identical in the count pass and the join pass, and
+        # recompute does not guarantee that; the RDD-level blocks free
+        # via GC with the result's lineage instead of pinning a
+        # CacheManager entry
         staged = staged.localCheckpoint(eager=True)
-        from ..operators._scalable import partition_offsets
-        offdf, _ = partition_offsets(
-            staged, {"__off": F.count(F.lit(1))}, pid=pid)
-        staged_off = staged.join(F.broadcast(offdf), on=pid, how="left")
-        w = Window.partitionBy(pid).orderBy(mid)
-        out = staged_off.withColumn(
-            out_name, (F.row_number().over(w)
-                       + F.coalesce(F.col("__off"), F.lit(0))).cast("long"))
-        return out.select(out_name, *df.columns)
+        from ..operators._scalable import prefix_sums
+        out, _ = prefix_sums(staged, ["__mid"], {out_name: F.lit(1)})
+        return out.select((F.col(out_name) + 1).alias(out_name),
+                          *df.columns)
 
     # ---------------------------------------------------------------- set ops
     def _c_union(self, node: L.Union) -> DataFrame:

@@ -1,16 +1,18 @@
-"""Range-partitioned exclusive prefix sum — the scale path for ordered
-cumulative aggregates whose input cardinality can approach row
-cardinality (rfm_segments' frequency/monetary score maps, abc_classes'
-key ranking).
-
-Same two-pass design as the engine's RANK implementation
-(compiler/plan.py _scalable_row_number; reference analog
+"""Two-pass exclusive prefix sum — the engine's one implementation of
+the POCounter/PORank rank design (reference analog
 pig:src/org/apache/pig/backend/hadoop/executionengine/physicalLayer/
-relationalOperators/POCounter.java + PORank.java): pass 1 range-
-partitions the input on the sort order and collects ONE row per
-partition (the per-partition sum — bounded driver traffic at any data
-size); pass 2 adds the exclusive partition offset to a per-partition
-running sum. No single-task global window, no billion-row broadcast.
+relationalOperators/POCounter.java + PORank.java). Every ordered
+cumulative in the engine runs through it: bare RANK's row numbers and
+RANK BY's rank/dense offsets (compiler/plan.py), sorted-neighborhood
+positions (operators/dedup.py), the fenced cumulative sums of
+abc_classes, equifreq_bins and rfm_segments, and shard_plan's token
+prefix (operators/layout.py).
+
+Pass 1 collects ONE row per partition of a frame whose partitions are
+already in global order (the per-partition sums — bounded driver
+traffic at any data size); pass 2 adds each partition's exclusive
+offset to a per-partition running sum. No single-task global window,
+no billion-row broadcast.
 """
 
 from __future__ import annotations
@@ -34,73 +36,67 @@ def cardinality_fence(spark) -> int:
         return DEFAULT_CARDINALITY_FENCE
 
 
-def partition_offsets(staged: DataFrame, aggs: dict, pid: str = "__pid"
-                      ) -> "tuple[DataFrame, int]":
-    """Exclusive per-partition prefix offsets — the shared core of every
-    two-pass POCounter/PORank-style operator in the engine (bare RANK's
-    row numbers and RANK BY's rank/dense offsets in compiler/plan.py,
-    sorted-neighborhood positions in operators/dedup.py, and
-    exclusive_prefix_sum below).
+def prefix_sums(staged: DataFrame, within: list, sums: dict
+                ) -> "tuple[DataFrame, int]":
+    """For each ``name -> value Column`` in ``sums``, add ``name`` = the
+    sum of that value over all rows STRICTLY before the current row
+    (exclusive prefix; the first row gets 0), where rows run in
+    partition order, then ``within`` order inside a partition.
 
-    ``staged`` must already carry a pinned partition id column ``pid``
-    (spark_partition_id over an eager localCheckpoint or a persisted
-    frame — recompute does not guarantee identical ids). ``aggs`` maps
-    offset-column name -> per-partition aggregate Column; for each, the
-    returned frame holds the running total of all LOWER partition ids
-    (exclusive). Driver traffic is one row per partition at any data
-    size; offsets travel back as a broadcast-joinable DataFrame keyed on
-    ``pid``, never a create_map literal (O(1) expression tree at ~1e5
-    partitions). Returns (offsets_df, n_partitions).
+    ``staged`` must hold its partitions in global order with the
+    partition id pinned in ``__pid`` (spark_partition_id over an eager
+    localCheckpoint — recompute does not guarantee identical ids, and a
+    recomputed range exchange can re-sample different bounds). Driver
+    traffic is one row per partition at any data size; offsets travel
+    back as a broadcast-joinable DataFrame keyed on ``__pid``, never a
+    create_map literal (O(1) expression tree at ~1e5 partitions).
+    Returns (frame without ``__pid``, n_partitions).
     """
-    names = list(aggs)
-    rows = staged.groupBy(pid).agg(
-        *[c.alias(n) for n, c in aggs.items()]).collect()
-    offs, acc = [], dict.fromkeys(names, 0)
-    for r in sorted(rows, key=lambda r: r[pid]):
-        offs.append((r[pid], *[acc[n] for n in names]))
-        for n in names:
-            acc[n] += (r[n] or 0)
-    schema = f"{pid} int, " + ", ".join(f"{n} long" for n in names)
+    offs_names = [f"__off{i}" for i in range(len(sums))]
+    values = list(sums.values())
+    rows = staged.groupBy("__pid").agg(
+        *[F.sum(v).alias(o) for v, o in zip(values, offs_names)]).collect()
+    offs, acc = [], [0] * len(values)
+    for r in sorted(rows, key=lambda r: r["__pid"]):
+        offs.append((r["__pid"], *acc))
+        acc = [a + (r[o] or 0) for a, o in zip(acc, offs_names)]
+    schema = "__pid int, " + ", ".join(f"{o} long" for o in offs_names)
     offdf = staged.sparkSession.createDataFrame(
-        offs or [(0,) + (0,) * len(names)], schema)
-    return offdf, len(rows)
+        offs or [(0,) + (0,) * len(values)], schema)
+    w = (Window.partitionBy("__pid").orderBy(*within)
+               .rowsBetween(Window.unboundedPreceding, -1))
+    out = staged.join(F.broadcast(offdf), on="__pid", how="left")
+    out = out.withColumns({
+        name: (F.coalesce(F.sum(v).over(w), F.lit(0))
+               + F.coalesce(F.col(o), F.lit(0))).cast("long")
+        for (name, v), o in zip(sums.items(), offs_names)})
+    return out.drop("__pid", *offs_names), len(rows)
 
 
-def exclusive_prefix_sum(df: DataFrame, order: list, value_col: str,
-                         out_col: str,
-                         num_partitions: int | None = None) -> DataFrame:
-    """Add ``out_col`` = sum of ``value_col`` over all rows STRICTLY
-    before the current row in ``order`` (exclusive prefix; first row
-    gets 0). ``order`` must be a total order (include a tiebreak
-    column) or the prefix is nondeterministic at partition boundaries.
+def exclusive_prefix_sum(df: DataFrame, order: list, sums: dict,
+                         n_rows: int | None = None
+                         ) -> "tuple[DataFrame, int]":
+    """Add, for each ``name -> value Column`` in ``sums``, ``name`` =
+    the sum of that value over all rows STRICTLY before the current row
+    in ``order`` (exclusive prefix; first row gets 0). ``order`` must
+    be a total order (include a tiebreak column) or the prefix is
+    nondeterministic at partition boundaries.
 
-    Shape: one range shuffle on the sort key, one bounded driver
-    collect (a row per partition), per-partition windows at full
-    parallelism. The eager localCheckpoint pins partition ids between
-    the count pass and the window pass (recompute does not guarantee
-    identical ids — the same discipline as _scalable_row_number).
+    The cardinality fence: a caller that already knows its row count
+    passes it as ``n_rows``; at or below cardinality_fence() the sums
+    come from one global window (one task over a small table).
+    Otherwise — or when the count is unknown — one range sort on
+    ``order``, pinned by an eager localCheckpoint, feeds prefix_sums.
+    Returns (frame, n_partitions); the global window counts as one
+    partition.
     """
-    spark = df.sparkSession
-    if num_partitions:
-        n = num_partitions
-    else:
-        # 'spark.sql.shuffle.partitions' may be non-numeric on some
-        # platforms (e.g. 'auto' under external shuffle services) —
-        # same guarded parse as cardinality_fence().
-        try:
-            n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        except Exception:
-            n = 32
-    staged = (df.repartitionByRange(n, *order)
+    if n_rows is not None and n_rows <= cardinality_fence(df.sparkSession):
+        w = (Window.orderBy(*order)
+                   .rowsBetween(Window.unboundedPreceding, -1))
+        return df.withColumns({
+            name: F.coalesce(F.sum(v).over(w), F.lit(0))
+            for name, v in sums.items()}), 1
+    staged = (df.orderBy(*order)
                 .withColumn("__pid", F.spark_partition_id())
                 .localCheckpoint(eager=True))
-    offdf, _ = partition_offsets(staged, {"__off": F.sum(F.col(value_col))})
-    w = (Window.partitionBy("__pid").orderBy(*order)
-               .rowsBetween(Window.unboundedPreceding, -1))
-    return (staged.join(F.broadcast(offdf), on="__pid", how="left")
-                  .withColumn(out_col,
-                              (F.coalesce(F.sum(value_col).over(w),
-                                          F.lit(0))
-                               + F.coalesce(F.col("__off"), F.lit(0)))
-                              .cast("long"))
-                  .drop("__pid", "__off"))
+    return prefix_sums(staged, order, sums)

@@ -248,14 +248,17 @@ def rfm_segments(df: DataFrame, user_col: str = "user_id",
     joined back to the user table. Recency cardinality is bounded
     (days), but frequency/monetary distinct-value cardinality
     approaches USER cardinality (~1e9 at 100 TB), so each map is built
-    behind a counted-cardinality fence
-    (spark.spork.prefixSum.cardinalityFence, default 100k): below it,
-    a single window + broadcast-joined map (cheap, one task over a
-    small table); above it, the range-partitioned two-pass exclusive
-    prefix sum (_scalable.exclusive_prefix_sum — the POCounter/PORank
-    design) with an UN-hinted join so Spark may pick SMJ. Exact
-    integers end to end; both paths produce identical scores (the bin
-    rule depends only on the exclusive cumulative count).
+    by the engine's prefix-sum kernel (_scalable.exclusive_prefix_sum —
+    the POCounter/PORank design) with the counted distinct-value
+    cardinality as its fence (spark.spork.prefixSum.cardinalityFence,
+    default 100k): below it, a single window + broadcast-joined map
+    (cheap, one task over a small table); above it, the
+    range-partitioned two-pass path with an UN-hinted join so Spark may
+    pick SMJ. The join hint follows the same counted cardinality, not
+    the kernel's partition count, which AQE can coalesce to one on a
+    small table. Exact integers end to end; both paths produce
+    identical scores (the bin rule depends only on the exclusive
+    cumulative count).
     """
     from spork_spark.operators._scalable import (cardinality_fence,
                                                  exclusive_prefix_sum)
@@ -296,21 +299,14 @@ def rfm_segments(df: DataFrame, user_col: str = "user_id",
                     .agg(F.count(F.lit(1)).alias("__c"))
         order = F.col("__v").asc() if ascending_is_good \
             else F.col("__v").desc()
-        small = cards[metric] <= fence
-        if small:
-            w = Window.orderBy(order).rowsBetween(
-                Window.unboundedPreceding, -1)
-            cum = dist.withColumn("__cum",
-                                  F.coalesce(F.sum("__c").over(w),
-                                             F.lit(0)))
-        else:
-            cum = exclusive_prefix_sum(dist, [order], "__c", "__cum")
+        cum, _ = exclusive_prefix_sum(dist, [order], {"__cum": F.col("__c")},
+                                      n_rows=cards[metric])
         tot = dist.groupBy().agg(F.sum("__c").alias("__t"))
         return (cum.crossJoin(F.broadcast(tot))
                    .select(F.col("__v").alias(metric),
                            (F.expr(f"(__cum * {n_bins}) div __t") + 1)
                            .cast("int").alias(f"{metric}_score")),
-                small)
+                cards[metric] <= fence)
 
     out = users
     for metric, asc in (("recency_days", False),

@@ -1313,38 +1313,27 @@ def sorted_neighborhood_pairs(df: DataFrame, id_col: str, key_col: str,
     order-based one; like them it produces CANDIDATES — verify with an
     exact similarity downstream.
 
-    Scale shape (no 1-partition global window): ONE repartitionByRange
-    on (key, id) + in-partition sort gives the global order; global
-    positions come from the reference's POCounter/PORank two-pass
-    design (compiler/plan.py _scalable_row_number — per-partition
-    counts, one row per partition at the driver, prefix-sum offsets
-    broadcast back). Neighbors then join on position equality
-    (rn + k == rn), k in 1..window-1 — an equi-join, never a range
-    scan. Ties on key order deterministically by id.
+    Scale shape (no 1-partition global window): global positions come
+    from the engine's two-pass prefix sum (operators/_scalable.py
+    exclusive_prefix_sum — the reference's POCounter/PORank design: ONE
+    range sort on (key, id), per-partition counts, one row per
+    partition at the driver, offsets broadcast back). Neighbors then
+    join on position equality (rn + k == rn), k in 1..window-1 — an
+    equi-join, never a range scan. Ties on key order deterministically
+    by id. The returned frame is lazy; only the range sort runs (and
+    is checkpointed) at call time.
 
     Output: (id_a, id_b, key_a, key_b, dist) with dist = rank distance
     (1 = adjacent), id_a the earlier row in sort order.
     """
     if window < 2:
         raise ValueError("window must be >= 2 (w-1 neighbors per row)")
-    pid, mid = "__pid", "__mid"
+    from spork_spark.operators._scalable import exclusive_prefix_sum
     base = (df.select(F.col(id_col).alias("__id"),
                       F.col(key_col).alias("__key"))
-              .where(F.col(key_col).isNotNull())
-              .repartitionByRange(F.col("__key"), F.col("__id"))
-              .sortWithinPartitions("__key", "__id")
-              .withColumn(pid, F.spark_partition_id())
-              .withColumn(mid, F.monotonically_increasing_id())
-              .persist())
-    from spork_spark.operators._scalable import partition_offsets
-    offdf, _ = partition_offsets(base, {"__off": F.count(F.lit(1))},
-                                 pid=pid)
-    w = Window.partitionBy(pid).orderBy(mid)
-    rn = (base.join(F.broadcast(offdf), on=pid, how="left")
-              .withColumn("__rn", (F.row_number().over(w)
-                                   + F.coalesce(F.col("__off"), F.lit(0)))
-                          .cast("long"))
-              .select("__id", "__key", "__rn"))
+              .where(F.col(key_col).isNotNull()))
+    rn, _ = exclusive_prefix_sum(base, [F.col("__key"), F.col("__id")],
+                                 {"__rn": F.lit(1)})
     ks = F.explode(F.array(*[F.lit(k) for k in range(1, window)]))
     left = rn.select(F.col("__id").alias("id_a"),
                      F.col("__key").alias("key_a"),
@@ -1353,9 +1342,6 @@ def sorted_neighborhood_pairs(df: DataFrame, id_col: str, key_col: str,
              .withColumn("__rn", F.col("__rn_a") + F.col("dist"))
     right = rn.select(F.col("__id").alias("id_b"),
                       F.col("__key").alias("key_b"), "__rn")
-    out = (left.join(right, on="__rn")
-               .select("id_a", "id_b", "key_a", "key_b",
-                       F.col("dist").cast("int").alias("dist")))
-    out = out.localCheckpoint(eager=True)
-    base.unpersist()
-    return out
+    return (left.join(right, on="__rn")
+                .select("id_a", "id_b", "key_a", "key_b",
+                        F.col("dist").cast("int").alias("dist")))

@@ -177,7 +177,9 @@ def _ordered_token_prefix(df: DataFrame, id_col: str, count_col: str,
     staged = (df.withColumn("__k", F.md5(F.concat(
                   F.lit(f"{seed}:"), F.col(id_col).cast("string"))))
                 .withColumn("__n", F.col(count_col).cast("long")))
-    return exclusive_prefix_sum(staged, ["__k", id_col], "__n", "__pre")
+    out, _ = exclusive_prefix_sum(staged, ["__k", id_col],
+                                  {"__pre": F.col("__n")})
+    return out
 
 
 def shard_plan_incremental(batch: DataFrame, manifest: DataFrame,

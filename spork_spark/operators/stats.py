@@ -84,20 +84,19 @@ def equifreq_bins(df: DataFrame, value_col: str, n_bins: int = 10,
 
     Shape: ONE map-side-combined groupBy over the data (the only pass
     that sees every row), then a cumulative sum over the DISTINCT
-    values only — behind the same counted-cardinality fence as
-    abc_classes and rfm_segments (spark.spork.prefixSum.
-    cardinalityFence, default 100k). Cent-quantized scores have bounded
-    cardinality (~10⁴ for a [0,100] metric) and stay on the cheap
-    single-window path; an UNBOUNDED value column (prices, latencies —
-    10⁸+ distinct cent values at 100 TB) crosses the fence and takes
-    the range-partitioned two-pass exclusive prefix sum
-    (_scalable.exclusive_prefix_sum), so no single task ever holds the
-    full distinct-value set. Output is (bin, lo_cents, hi_cents,
+    values only, through the engine's prefix-sum kernel
+    (_scalable.exclusive_prefix_sum) with the distinct count as its
+    cardinality fence (spark.spork.prefixSum.cardinalityFence, default
+    100k) — the same fence abc_classes and rfm_segments pass.
+    Cent-quantized scores have bounded cardinality (~10⁴ for a [0,100]
+    metric) and stay on the cheap single-window path; an UNBOUNDED
+    value column (prices, latencies — 10⁸+ distinct cent values at
+    100 TB) crosses the fence and takes the range-partitioned two-pass
+    path, so no single task ever holds the full distinct-value set. Output is (bin, lo_cents, hi_cents,
     n_values, cnt) — n_bins rows (fewer when a heavy tie swallows
     neighbours).
     """
-    from spork_spark.operators._scalable import (cardinality_fence,
-                                                 exclusive_prefix_sum)
+    from spork_spark.operators._scalable import exclusive_prefix_sum
     v = F.floor(F.col(value_col).cast("double") * scale + 0.5) \
          .cast("long")
     dist = (df.where(F.col(value_col).isNotNull())
@@ -110,13 +109,8 @@ def equifreq_bins(df: DataFrame, value_col: str, n_bins: int = 10,
     # exclusive_prefix_sum, leaving no blocks pinned after return).
     dist = dist.persist()
     try:
-        if dist.count() <= cardinality_fence(df.sparkSession):
-            w = (Window.orderBy("v")
-                       .rowsBetween(Window.unboundedPreceding, -1))
-            cum = dist.withColumn(
-                "cum", F.coalesce(F.sum("c").over(w), F.lit(0)))
-        else:
-            cum = exclusive_prefix_sum(dist, [F.col("v")], "c", "cum")
+        cum, _ = exclusive_prefix_sum(dist, [F.col("v")], {"cum": F.col("c")},
+                                      n_rows=dist.count())
     finally:
         dist.unpersist()
     binned = (cum.crossJoin(F.broadcast(total))
@@ -317,17 +311,16 @@ def abc_classes(df: DataFrame, key_col: str, value_col: str,
     toward the class its FIRST cent falls in (the exclusive prefix).
 
     Shape: ONE map-side-combined groupBy over the data; the cumulative
-    sum runs over KEY-cardinality rows behind a counted-cardinality
-    fence (spark.spork.prefixSum.cardinalityFence, default 100k):
-    below it, one global window task over the small key table; above
-    it (billions of keys), the range-partitioned two-pass exclusive
-    prefix sum on the same (total desc, key) sort
-    (_scalable.exclusive_prefix_sum — the POCounter/PORank design), so
-    no single task ever sees the full key set. Output: (key,
-    total_cents, cum_before_cents, abc_class).
+    sum runs over KEY-cardinality rows through the engine's prefix-sum
+    kernel (_scalable.exclusive_prefix_sum — the POCounter/PORank
+    design), with the counted key cardinality as its fence
+    (spark.spork.prefixSum.cardinalityFence, default 100k): below it,
+    one global window task over the small key table; above it
+    (billions of keys), the range-partitioned two-pass path on the same
+    (total desc, key) sort, so no single task ever sees the full key
+    set. Output: (key, total_cents, cum_before_cents, abc_class).
     """
-    from spork_spark.operators._scalable import (cardinality_fence,
-                                                 exclusive_prefix_sum)
+    from spork_spark.operators._scalable import exclusive_prefix_sum
     cents = F.floor(F.col(value_col).cast("double") * scale + 0.5) \
              .cast("long")
     totals = (df.where(F.col(value_col).isNotNull()
@@ -344,15 +337,9 @@ def abc_classes(df: DataFrame, key_col: str, value_col: str,
     # funnel discipline — zero cached blocks left behind).
     totals = totals.persist()
     try:
-        if totals.count() <= cardinality_fence(df.sparkSession):
-            w = (Window.orderBy(*order)
-                       .rowsBetween(Window.unboundedPreceding, -1))
-            cum = totals.withColumn(
-                "cum_before_cents",
-                F.coalesce(F.sum("total_cents").over(w), F.lit(0)))
-        else:
-            cum = exclusive_prefix_sum(totals, order, "total_cents",
-                                       "cum_before_cents")
+        cum, _ = exclusive_prefix_sum(
+            totals, order, {"cum_before_cents": F.col("total_cents")},
+            n_rows=totals.count())
     finally:
         totals.unpersist()
     ranked = cum.crossJoin(F.broadcast(grand))

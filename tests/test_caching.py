@@ -48,6 +48,12 @@ def test_rank_by_leaves_no_cachemanager_entry(spark):
     # RANK stages via localCheckpoint (RDD-level, GC-freed), never via
     # Dataset.persist — the CacheManager must stay empty
     assert cache_manager_empty(spark)
+    # sorted_neighborhood_pairs stages through the same prefix-sum kernel
+    from spork_spark.operators import sorted_neighborhood_pairs
+    pairs = sorted_neighborhood_pairs(orders.df(), "o_orderkey",
+                                      "o_totalprice")
+    assert pairs.count() > 0
+    assert cache_manager_empty(spark)
 
 
 def test_bare_rank_row_number_no_cachemanager_entry(spark):

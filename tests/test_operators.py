@@ -3,6 +3,8 @@ together, null join keys never match, UNION keeps duplicates, FLATTEN of
 empty bag drops the row, nulls-first ordering, SPLIT routing, COGROUP empty
 bags, RANK forms — the reference e2e corpus's behavioral edges."""
 
+import pytest
+
 from spork_spark import col, fn, lit, flatten
 
 
@@ -327,3 +329,27 @@ def test_sorted_neighborhood_is_partitioning_invariant(spark):
          sorted_neighborhood_pairs(df.repartition(7), "id", "k",
                                    window=4).collect()}
     assert a == b and len(a) == 199 + 198 + 197
+
+
+@pytest.mark.parametrize("caller", ["rank", "rank_by",
+                                    "sorted_neighborhood", "abc_classes"])
+def test_prefix_sum_callers_empty_input(spark, eng, caller):
+    """Empty input through every caller of the two-pass prefix sum
+    (operators/_scalable.py): no rows and no error. The per-partition
+    collect returns nothing, so the offsets frame is the placeholder
+    row. A fence of -1 forces abc_classes onto the two-pass path (an
+    empty table is at or below a fence of 0)."""
+    from spork_spark.operators import abc_classes, sorted_neighborhood_pairs
+    df = spark.createDataFrame([], "id bigint, k bigint, v double")
+    build = {
+        "rank": lambda: eng.from_df(df).rank().df(),
+        "rank_by": lambda: eng.from_df(df).rank((col("v"), True)).df(),
+        "sorted_neighborhood":
+            lambda: sorted_neighborhood_pairs(df, "id", "k"),
+        "abc_classes": lambda: abc_classes(df, "k", "v"),
+    }[caller]
+    spark.conf.set("spark.spork.prefixSum.cardinalityFence", "-1")
+    try:
+        assert build().collect() == []
+    finally:
+        spark.conf.unset("spark.spork.prefixSum.cardinalityFence")

@@ -4,6 +4,8 @@ FOREACH gets map-side partial aggregation (never collect_list), replicated
 joins broadcast, column pruning reaches ReadSchema, whole-stage codegen
 covers the hot path."""
 
+import re
+
 import pytest
 
 from spork_spark import Engine, col, flatten, fn, lit
@@ -450,6 +452,13 @@ def test_rank_offsets_broadcast_not_literal(eng, spark):
     p2 = plan_of(by)
     assert "BroadcastHashJoin" in p2
     assert "map(" not in p2
+    # sorted-neighborhood positions: every window is per __pid
+    from spork_spark.operators import sorted_neighborhood_pairs
+    p3 = plan_of(sorted_neighborhood_pairs(df, "k", "v"))
+    parts = re.findall(r"Window \[.*\], \[([^\]]*)\], \[", p3)
+    assert parts and all(re.fullmatch(r"__pid#\d+", x) for x in parts)
+    assert "BroadcastHashJoin [__pid" in p3
+    assert "map(" not in p3
 
 
 def test_merge_sparse_prunes_below_smj(eng, spark):

@@ -4,7 +4,8 @@ plans/<round>/<query>_<tag>.txt (the optimization-round evidence files).
 Per-run numbering is stripped so that two dumps of the same
 plan are byte-identical and a before/after pair diffs to its real
 changes only: expression ids (`#123L`), exchange `plan_id=` tags,
-lambda variable counters (`x_12`) and JVM object hashes (`@1a2b3c`).
+lambda variable counters (`x_12`), JVM object hashes (`@1a2b3c`) and
+RDD ids (`MapPartitionsRDD[126]`, which checkpoint-staged scans print).
 
 Usage: python tools/dump_plans.py before q1,q2,... [--round r10]
 """
@@ -21,6 +22,7 @@ _VOLATILE = [
     (re.compile(r",? ?\[plan_id=\d+\]"), ""),
     (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1"),
     (re.compile(r"(?<=[\w$])@[0-9a-f]+\b"), ""),
+    (re.compile(r"(?<=RDD)\[\d+\]"), ""),
 ]
 
 
