@@ -40,44 +40,18 @@ compilation shapes.
 """
 from __future__ import annotations
 
-import copy
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.builtins import ALGEBRAIC_AGGS
+from ..functions.builtins import ALGEBRAIC_AGGS, BAG_HOFS
 from ..plans import expressions as E
 
 _SIDE_HOFS = ("FILTER_BAG", "TRANSFORM_BAG", "FOREACH_BAG")
 
 
-def _walk_sub(e: E.Expr, fn):
-    """Rebuild e bottom-up; fn may replace any node (applied pre-order:
-    if fn returns a replacement, children are not visited)."""
-    r = fn(e)
-    if r is not None:
-        return r
-    out = copy.copy(e)
-    for k, v in vars(e).items():
-        if isinstance(v, E.Expr):
-            setattr(out, k, _walk_sub(v, fn))
-        elif isinstance(v, list):
-            setattr(out, k, [_walk_sub(x, fn) if isinstance(x, E.Expr)
-                             else x for x in v])
-    return out
-
-
-def _any_node(e: E.Expr, pred) -> bool:
-    if pred(e):
-        return True
-    for v in vars(e).values():
-        if isinstance(v, E.Expr) and _any_node(v, pred):
-            return True
-        if isinstance(v, list) and any(
-                isinstance(x, E.Expr) and _any_node(x, pred) for x in v):
-            return True
-    return False
+def _is_cross(e: E.Expr) -> bool:
+    return isinstance(e, E.Func) and e.name.upper() == "CROSS_BAG"
 
 
 # ---------------------------------------------------------------------------
@@ -118,17 +92,9 @@ def try_fuse_topk(pc, group, gens, child_df: DataFrame, ctx, keys):
             return True
         if isinstance(e, E.Col) and e.name == bag_name:
             return False
-        if isinstance(e, E.Func) and e.name.upper() in (
-                "SORT_BAG", "LIMIT_BAG", "DISTINCT_BAG", "CROSS_BAG",
-                "FILTER_BAG", "TRANSFORM_BAG", "FOREACH_BAG", "TOP"):
+        if isinstance(e, E.Func) and e.name.upper() in BAG_HOFS:
             return False
-        for v in vars(e).values():
-            if isinstance(v, E.Expr) and not scan(v):
-                return False
-            if isinstance(v, list) and any(
-                    isinstance(x, E.Expr) and not scan(x) for x in v):
-                return False
-        return True
+        return all(scan(c) for c in E.children(e))
 
     for g in gens:
         if not scan(g):
@@ -179,7 +145,7 @@ def try_fuse_topk(pc, group, gens, child_df: DataFrame, ctx, keys):
     def subst(e):
         return E.Col(bag_name) if is_topk(e) else None
 
-    return pre, [_walk_sub(g, subst) for g in gens]
+    return pre, [E.transform(g, subst) for g in gens]
 
 
 # ---------------------------------------------------------------------------
@@ -264,12 +230,10 @@ def try_fuse_inner_cross(pc, group, gens):
     # -- locate exactly one two-way CROSS_BAG -----------------------------
     crosses: dict[str, E.Func] = {}
 
-    def find_cross(e):
-        if isinstance(e, E.Func) and e.name.upper() == "CROSS_BAG":
-            crosses[repr(e)] = e
-        return False
     for g in gens:
-        _any_node(g, find_cross)
+        for e in E.nodes(g):
+            if _is_cross(e):
+                crosses[repr(e)] = e
     if len(crosses) != 1:
         return None
     cx = next(iter(crosses.values()))
@@ -278,10 +242,7 @@ def try_fuse_inner_cross(pc, group, gens):
             or not isinstance(cx.args[3], E.Lit):
         return None                          # n-way fold — out of scope
     ba, bb = cx.args[0], cx.args[1]
-    if _any_node(ba, lambda x: isinstance(x, E.Func)
-                 and x.name.upper() == "CROSS_BAG") \
-            or _any_node(bb, lambda x: isinstance(x, E.Func)
-                         and x.name.upper() == "CROSS_BAG"):
+    if any(_is_cross(x) for x in (*E.nodes(ba), *E.nodes(bb))):
         return None
 
     child_df = pc._compile(group.child)
@@ -305,14 +266,12 @@ def try_fuse_inner_cross(pc, group, gens):
     # -- transforms of the cross (pair-level FOREACH) ---------------------
     transforms: dict[str, E.Func] = {}
 
-    def find_tx(e):
-        if isinstance(e, E.Func) and e.name.upper() in (
-                "TRANSFORM_BAG", "FOREACH_BAG") and len(e.args) == 2 \
-                and repr(e.args[0]) == cx_key:
-            transforms[repr(e)] = e
-        return False
     for g in gens:
-        _any_node(g, find_tx)
+        for e in E.nodes(g):
+            if isinstance(e, E.Func) and e.name.upper() in (
+                    "TRANSFORM_BAG", "FOREACH_BAG") and len(e.args) == 2 \
+                    and repr(e.args[0]) == cx_key:
+                transforms[repr(e)] = e
     tx_fields: dict[str, dict[str, str]] = {}   # tx repr → field → col
     tx_cols: dict[str, list[tuple[str, E.Expr]]] = {}
     used = set(pair_names)
@@ -369,9 +328,7 @@ def try_fuse_inner_cross(pc, group, gens):
                 if ff is not None:
                     return E.Func("COUNT_STAR", []) if nm == "COUNT_STAR" \
                         else E.Func("COUNT", [E.Col(ff)])
-            if nm in ("FILTER_BAG", "TRANSFORM_BAG", "FOREACH_BAG",
-                      "SORT_BAG", "LIMIT_BAG", "DISTINCT_BAG",
-                      "CROSS_BAG", "TOP"):
+            if nm in BAG_HOFS:
                 raise ValueError             # unfusable bag use
         if isinstance(e, E.Col) and e.name == bag_name:
             raise ValueError                 # raw-bag aggregate — bail
@@ -384,10 +341,8 @@ def try_fuse_inner_cross(pc, group, gens):
             alias, inner = None, g
             if isinstance(inner, E.Aliased):
                 alias, inner = inner.name, inner.child
-            kind = pc._classify_generator(inner, keys) \
-                if not _any_node(inner, lambda x: isinstance(x, E.Func)
-                                 and x.name.upper() == "CROSS_BAG") \
-                else None
+            kind = None if any(_is_cross(x) for x in E.nodes(inner)) \
+                else pc._classify_generator(inner, keys)
             if kind == "group":
                 out_plan.append((kind, inner, alias))
                 continue
@@ -407,7 +362,7 @@ def try_fuse_inner_cross(pc, group, gens):
                 if not (isinstance(sub, E.Func)
                         and sub.name.upper() in ALGEBRAIC_AGGS):
                     return None              # UDAF / non-algebraic
-                rw = _walk_sub(sub, rewrite_ref)
+                rw = E.transform(sub, rewrite_ref)
                 is_count = sub.name.upper() in ("COUNT", "COUNT_STAR")
                 agg_parts.append((tmp, rw, is_count))
             if not pc._is_key_scalar(remainder, keys,

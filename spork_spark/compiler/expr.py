@@ -26,7 +26,8 @@ from pyspark.sql import types as T
 from pyspark.sql.column import Column
 from pyspark.sql.window import Window
 
-from ..functions.builtins import REGISTRY, TYPED_REGISTRY
+from ..functions.builtins import (ALGEBRAIC_AGGS, BAG_HOFS, REGISTRY,
+                                  TYPED_REGISTRY)
 from ..plans import expressions as E
 
 # Pig scalar type name → Spark type (SURVEY.md §1.2)
@@ -336,20 +337,13 @@ class ExprCompiler:
         metrics is illegal (casts over fused aggregates are instead
         peeled and probed post-agg — compiler/plan.py
         _try_fuse_group_agg)."""
-        if isinstance(e, E.Func):
-            name = e.name.upper()
-            from ..functions.builtins import ALGEBRAIC_AGGS
-            if name in self._NONDET_BUILTINS or name in self.udfs \
-                    or name in ALGEBRAIC_AGGS or name in self.udafs:
-                return False
-        for v in vars(e).values():
-            if isinstance(v, E.Expr) and not self._probe_safe(v):
-                return False
-            if isinstance(v, list) and any(
-                    isinstance(x, E.Expr) and not self._probe_safe(x)
-                    for x in v):
-                return False
-        return True
+        return not any(
+            isinstance(n, E.Func) and (
+                n.name.upper() in self._NONDET_BUILTINS
+                or n.name.upper() in self.udfs
+                or n.name.upper() in ALGEBRAIC_AGGS
+                or n.name.upper() in self.udafs)
+            for n in E.nodes(e))
 
     def _c_bincond(self, e: E.BinCond) -> Column:
         return F.when(self.compile(e.cond), self.compile(e.iftrue)) \
@@ -441,30 +435,12 @@ class ExprCompiler:
             return True
         if isinstance(e, E.Lambda):
             return False
-        for v in vars(e).values():
-            if isinstance(v, E.Expr) and self._contains_lambda_var(v):
-                return True
-            if isinstance(v, list) and any(
-                    isinstance(x, E.Expr) and self._contains_lambda_var(x)
-                    for x in v):
-                return True
-        return False
+        return any(self._contains_lambda_var(c) for c in E.children(e))
 
-    _BAG_HOF_NAMES = frozenset({"FILTER_BAG", "TRANSFORM_BAG", "FOREACH_BAG",
-                                "SORT_BAG", "LIMIT_BAG", "DISTINCT_BAG",
-                                "CROSS_BAG", "TOP"})
-
-    def _mentions_bag_hof(self, e: E.Expr) -> bool:
-        if isinstance(e, E.Func) and e.name.upper() in self._BAG_HOF_NAMES:
-            return True
-        for v in vars(e).values():
-            if isinstance(v, E.Expr) and self._mentions_bag_hof(v):
-                return True
-            if isinstance(v, list) and any(
-                    isinstance(x, E.Expr) and self._mentions_bag_hof(x)
-                    for x in v):
-                return True
-        return False
+    @staticmethod
+    def _mentions_bag_hof(e: E.Expr) -> bool:
+        return any(isinstance(n, E.Func) and n.name.upper() in BAG_HOFS
+                   for n in E.nodes(e))
 
     def _as_pyfunc(self, lam: E.Lambda):
         """Compile a Lambda into a Python callable over pyspark Columns,

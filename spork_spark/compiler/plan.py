@@ -22,7 +22,6 @@ because they are about plan generation (SURVEY.md §4.1 conclusion):
 
 from __future__ import annotations
 
-import dataclasses
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..caching import track
-from ..functions.builtins import ALGEBRAIC_AGGS
+from ..functions.builtins import ALGEBRAIC_AGGS, BAG_HOFS
 from ..plans import expressions as E
 from ..plans import logical as L
 from .expr import ExprCompiler
@@ -148,36 +147,25 @@ class PlanCompiler:
         — keep the plain fused compile). ``reserved`` holds the group
         key names: a temp named like a key would be ambiguous on the
         aggregated frame."""
-        import copy
-
         base = prefix
         while base in reserved:
             base = f"__post_{base}"
         parts: list[tuple[str, E.Expr]] = []
 
-        def walk(n: E.Expr) -> E.Expr:
-            if isinstance(n, E.Func) and (n.name.upper() in ALGEBRAIC_AGGS
-                                          or n.name.upper() in self.udafs):
-                nm = base if not parts else f"{base}__{len(parts)}"
-                parts.append((nm, n))
-                return E.Col(nm)
-            out = copy.copy(n)
-            for k, v in vars(n).items():
-                if isinstance(v, E.Expr):
-                    setattr(out, k, walk(v))
-                elif isinstance(v, list):
-                    setattr(out, k, [walk(x) if isinstance(x, E.Expr)
-                                     else x for x in v])
-            return out
+        def cut(n: E.Expr) -> E.Expr | None:
+            if not self._is_agg_call(n):
+                return None
+            nm = base if not parts else f"{base}__{len(parts)}"
+            parts.append((nm, n))
+            return E.Col(nm)
 
-        remainder = walk(e)
+        remainder = E.transform(e, cut)
         if len(parts) == 1 and isinstance(remainder, E.Col) \
                 and remainder.name == parts[0][0]:
             return None                     # bare aggregate — no split
         return parts, remainder
 
-    def _agg_arg_casts(self, e: E.Expr, inside_agg: bool = False,
-                       out: list | None = None) -> list:
+    def _agg_arg_casts(self, e: E.Expr) -> list:
         """Collect Cast subexpressions that sit INSIDE an aggregate's
         arguments — those evaluate once per input row, so their
         discard probes are row-level (probe-safe on the aggregation
@@ -186,21 +174,15 @@ class PlanCompiler:
         instead (_split_post_agg): probed on the aggregated frame,
         one row per group, no aggregate ever nests inside an observe
         metric."""
-        if out is None:
-            out = []
-        if isinstance(e, E.Cast) and inside_agg:
-            out.append(e)                  # nested casts each warn
-        if isinstance(e, E.Func) and (e.name.upper() in ALGEBRAIC_AGGS
-                                      or e.name.upper() in self.udafs):
-            inside_agg = True
-        for v in vars(e).values():
-            if isinstance(v, E.Expr):
-                self._agg_arg_casts(v, inside_agg, out)
-            elif isinstance(v, list):
-                for x in v:
-                    if isinstance(x, E.Expr):
-                        self._agg_arg_casts(x, inside_agg, out)
-        return out
+        if self._is_agg_call(e):           # nested casts each warn
+            return [n for n in E.nodes(e) if isinstance(n, E.Cast)]
+        return [c for ch in E.children(e) for c in self._agg_arg_casts(ch)]
+
+    def _is_agg_call(self, e: E.Expr) -> bool:
+        """A call to an algebraic builtin aggregate or a registered
+        UDAF."""
+        return isinstance(e, E.Func) and (e.name.upper() in ALGEBRAIC_AGGS
+                                          or e.name.upper() in self.udafs)
 
     def _conf(self, key: str, default: str) -> str:
         try:
@@ -360,54 +342,19 @@ class PlanCompiler:
         mode = self._conf("spark.spork.window.repartitionFirst", "false")
         if mode not in ("true", "range"):
             return df
-        keysets = []
-
-        def walk(e):
-            if isinstance(e, E.WindowFunc):
-                keysets.append(tuple(repr(p) for p in e.partition_by))
-                return
-            for f in dataclasses.fields(e) if dataclasses.is_dataclass(e) \
-                    else ():
-                v = getattr(e, f.name)
-                for x in (v if isinstance(v, (list, tuple)) else [v]):
-                    if isinstance(x, E.Expr):
-                        walk(x)
-                    elif isinstance(x, tuple):
-                        for y in x:
-                            if isinstance(y, E.Expr):
-                                walk(y)
-
-        for g in gens:
-            walk(g)
-        if not keysets or len(set(keysets)) != 1 or not keysets[0]:
+        wfs = [n for g in gens for n in E.nodes(g)
+               if isinstance(n, E.WindowFunc)]
+        keysets = {tuple(repr(p) for p in w.partition_by) for w in wfs}
+        if len(keysets) != 1 or not wfs[0].partition_by:
             return df
         ctx = self._ctx(df)
-        first = next(e for e in self._iter_windowfuncs(gens))
         try:
-            keys = [ctx.compile(p) for p in first.partition_by]
+            keys = [ctx.compile(p) for p in wfs[0].partition_by]
         except Exception:
             return df
         if mode == "range":
             return df.repartitionByRange(*keys)
         return df.repartition(*keys)
-
-    def _iter_windowfuncs(self, gens):
-        def it(e):
-            if isinstance(e, E.WindowFunc):
-                yield e
-                return
-            if dataclasses.is_dataclass(e):
-                for f in dataclasses.fields(e):
-                    v = getattr(e, f.name)
-                    for x in (v if isinstance(v, (list, tuple)) else [v]):
-                        if isinstance(x, E.Expr):
-                            yield from it(x)
-                        elif isinstance(x, tuple):
-                            for y in x:
-                                if isinstance(y, E.Expr):
-                                    yield from it(y)
-        for g in gens:
-            yield from it(g)
 
     def _apply_generators(self, df: DataFrame, gens: list[E.Expr]) -> DataFrame:
         """Plain projection path, incl. FLATTEN via explode/struct-expand."""
@@ -747,6 +694,12 @@ class PlanCompiler:
         joins: join multiplicity scales partial sums exactly as it scales
         raw rows, and min/max are multiplicity-invariant.
 
+        The aggregates may sit anywhere in a generator — under unary
+        minus, a BINCOND, a CASE branch or a scalar function — and each
+        one is rewritten onto its partial column wherever it sits; one
+        off-shape aggregate anywhere keeps the whole FOREACH on the
+        normal path.
+
         Returns (joined-with-partials DataFrame, rewritten generators) or
         None when the shape doesn't apply (the normal fusion path runs).
         """
@@ -754,26 +707,19 @@ class PlanCompiler:
         aggs: list[tuple[E.Func, str, str | None]] = []   # (node, fn, field)
 
         def walk(e):
-            if isinstance(e, E.Func):
-                name = e.name.upper()
-                if name in ALGEBRAIC_AGGS or name in self.udafs:
-                    if name not in self._EAGER_AGGS:
-                        return False          # AVG/VAR/UDAF…: not eager
-                    if name == "COUNT_STAR" and len(e.args) == 0:
-                        aggs.append((e, name, None))
-                        return True
-                    if len(e.args) == 1 and isinstance(e.args[0], E.Deref) \
-                            and isinstance(e.args[0].field, str):
-                        aggs.append((e, name, e.args[0].field))
-                        return True
-                    return False              # COUNT(bag)/odd shapes: bail
-            for v in vars(e).values():
-                if isinstance(v, E.Expr) and not walk(v):
-                    return False
-                if isinstance(v, list) and not all(
-                        walk(x) for x in v if isinstance(x, E.Expr)):
-                    return False
-            return True
+            if not self._is_agg_call(e):
+                return all(walk(c) for c in E.children(e))
+            name = e.name.upper()
+            if name not in self._EAGER_AGGS:
+                return False                  # AVG/VAR/UDAF…: not eager
+            if name == "COUNT_STAR" and len(e.args) == 0:
+                aggs.append((e, name, None))
+                return True
+            if len(e.args) == 1 and isinstance(e.args[0], E.Deref) \
+                    and isinstance(e.args[0].field, str):
+                aggs.append((e, name, e.args[0].field))
+                return True
+            return False                      # COUNT(bag)/odd shapes: bail
 
         for g in gens:
             if not walk(g.child if isinstance(g, E.Aliased) else g):
@@ -781,9 +727,8 @@ class PlanCompiler:
         fields = {f for _, _, f in aggs if f is not None}
         if not fields:
             return None                       # nothing pins a fact side
-        key_refs = set()
-        for k in group.keys:
-            key_refs.update(self._expr_col_refs(k))
+        key_refs = {n.name for k in group.keys for n in E.nodes(k)
+                    if isinstance(n, E.Col)}
 
         # -- locate the fact input on the inner-join spine ----------------
         def cols_of(node):
@@ -813,15 +758,14 @@ class PlanCompiler:
                 if not all(isinstance(k, E.Col) for k in tkeys):
                     return None
                 # sibling-side keys at this level must avoid fact columns
-                sib_refs = set()
-                for k in node.keys[1 - side]:
-                    sib_refs.update(self._expr_col_refs(k))
+                sib_refs = {n.name for k in node.keys[1 - side]
+                            for n in E.nodes(k) if isinstance(n, E.Col)}
                 if sib_refs & tcols:
                     return None
                 if side == 0 and isinstance(tgt, L.Join):
                     deeper = find(tgt, above_sibling_cols | {
-                        r for k in node.keys[0]
-                        for r in self._expr_col_refs(k)})
+                        n.name for k in node.keys[0]
+                        for n in E.nodes(k) if isinstance(n, E.Col)})
                     if deeper is not None:
                         anc, t, tk = deeper
                         return ([(node, 0)] + anc, t, tk)
@@ -877,40 +821,34 @@ class PlanCompiler:
 
         # -- rewrite generators onto the partial columns ------------------
         def rewrite(e):
-            if isinstance(e, E.Func):
-                name = e.name.upper()
-                sig = None
-                if name == "COUNT_STAR" and len(e.args) == 0:
-                    sig = (name, None)
-                elif name in self._EAGER_AGGS and len(e.args) == 1 and \
-                        isinstance(e.args[0], E.Deref) and \
-                        isinstance(e.args[0].field, str):
-                    sig = (name, e.args[0].field)
-                if sig is not None:
-                    if name == "AVG":
-                        # AVG = SUM(partial sums) / SUM(partial counts);
-                        # the double cast defeats Pig's truncating integer
-                        # '/' when the field is integral (AVG returns
-                        # double for int/long inputs — SURVEY.md §2.4)
-                        ssum = E.Cast("double", E.Func(
-                            "SUM", [E.Col(partial_of[("SUM", sig[1])])]))
-                        scnt = E.Func(
-                            "SUM", [E.Col(partial_of[("COUNT", sig[1])])])
-                        return E.BinOp("/", ssum, scnt)
-                    if sig in partial_of:
-                        return E.Func(self._EAGER_FINAL[name],
-                                      [E.Col(partial_of[sig])])
-                return E.Func(e.name, [rewrite(a) if isinstance(a, E.Expr)
-                                       else a for a in e.args])
-            if isinstance(e, E.Aliased):
-                return E.Aliased(rewrite(e.child), e.name)
-            if isinstance(e, E.BinOp):
-                return E.BinOp(e.op, rewrite(e.left), rewrite(e.right))
-            if isinstance(e, E.Cast):
-                return E.Cast(e.pig_type, rewrite(e.child))
-            return e
+            if not isinstance(e, E.Func):
+                return None
+            name = e.name.upper()
+            sig = None
+            if name == "COUNT_STAR" and len(e.args) == 0:
+                sig = (name, None)
+            elif name in self._EAGER_AGGS and len(e.args) == 1 and \
+                    isinstance(e.args[0], E.Deref) and \
+                    isinstance(e.args[0].field, str):
+                sig = (name, e.args[0].field)
+            if sig is None:
+                return None
+            if name == "AVG":
+                # AVG = SUM(partial sums) / SUM(partial counts); the
+                # double cast defeats Pig's truncating integer '/' when
+                # the field is integral (AVG returns double for int/long
+                # inputs — SURVEY.md §2.4)
+                ssum = E.Cast("double", E.Func(
+                    "SUM", [E.Col(partial_of[("SUM", sig[1])])]))
+                scnt = E.Func("SUM", [E.Col(partial_of[("COUNT", sig[1])])])
+                return E.BinOp("/", ssum, scnt)
+            if sig in partial_of:
+                return E.Func(self._EAGER_FINAL[name],
+                              [E.Col(partial_of[sig])])
+            return None
 
-        return self._compile(new_node), [rewrite(g) for g in gens]
+        return self._compile(new_node), [E.transform(g, rewrite)
+                                         for g in gens]
 
     def _grouped_agg(self, group: L.Group, child_df: DataFrame,
                      ctx: ExprCompiler, keys: list[E.Expr],
@@ -981,16 +919,8 @@ class PlanCompiler:
             *[a[n] for _, n in native], *[b[n] for _, n in pandas_])
 
     def _mentions_udaf(self, e: E.Expr) -> bool:
-        if isinstance(e, E.Func) and e.name.upper() in self.udafs:
-            return True
-        for v in vars(e).values():
-            if isinstance(v, E.Expr) and self._mentions_udaf(v):
-                return True
-            if isinstance(v, list) and any(
-                    isinstance(x, E.Expr) and self._mentions_udaf(x)
-                    for x in v):
-                return True
-        return False
+        return any(isinstance(n, E.Func) and n.name.upper() in self.udafs
+                   for n in E.nodes(e))
 
     def _compile_group_ref(self, e: E.Expr, keys: list[E.Expr],
                            alias: str | None, agg_df: DataFrame):
@@ -1033,7 +963,9 @@ class PlanCompiler:
         the worst possible trade for the commonest key idiom. A
         whole-`group` ref qualifies only under zero keys (GROUP ALL →
         'all') or a single key; a multi-key struct rebuild is left to
-        the unfused path."""
+        the unfused path. Every node counts, CASE conditions and values
+        included: a CASE over an aggregate is not a key scalar (the
+        fused path splits its aggregates out instead)."""
         def ok(n: E.Expr) -> bool:
             if isinstance(n, E.Col):
                 if n.name in extra:       # split-out aggregate temp col
@@ -1046,20 +978,10 @@ class PlanCompiler:
                 # positional key deref must be in range (group.$5 with
                 # 2 keys falls back to the unfused path's own error)
                 return not isinstance(n.field, int) or n.field < len(keys)
-            if isinstance(n, E.Lambda) or isinstance(n, E.Star):
+            if isinstance(n, (E.Lambda, E.Star)) or self._is_agg_call(n) \
+                    or (isinstance(n, E.Func) and n.name.upper() in BAG_HOFS):
                 return False
-            if isinstance(n, E.Func):
-                nm = n.name.upper()
-                if nm in ALGEBRAIC_AGGS or nm in self.udafs \
-                        or nm in self._HOF_NAMES:
-                    return False
-            for v in vars(n).values():
-                if isinstance(v, E.Expr) and not ok(v):
-                    return False
-                if isinstance(v, list) and any(
-                        isinstance(x, E.Expr) and not ok(x) for x in v):
-                    return False
-            return True
+            return all(ok(c) for c in E.children(n))
 
         return ok(e)
 
@@ -1067,11 +989,9 @@ class PlanCompiler:
         """Rewrite group-key references in a keyexpr generator to the
         aggregated frame's key columns (GROUP ALL → the literal
         'all')."""
-        import copy
-
         key_names = [self._key_name(k, i) for i, k in enumerate(keys)]
 
-        def walk(n: E.Expr) -> E.Expr:
+        def key_col(n: E.Expr) -> E.Expr | None:
             if isinstance(n, E.Col) and n.name == GROUP_COL:
                 return E.Col(key_names[0]) if keys else E.Lit("all")
             if isinstance(n, E.Deref) and isinstance(n.child, E.Col) \
@@ -1079,19 +999,9 @@ class PlanCompiler:
                 fld = n.field
                 return E.Col(fld if isinstance(fld, str)
                              else key_names[fld])
-            out = copy.copy(n)
-            for k, v in vars(n).items():
-                if isinstance(v, E.Expr):
-                    setattr(out, k, walk(v))
-                elif isinstance(v, list):
-                    setattr(out, k, [walk(x) if isinstance(x, E.Expr)
-                                     else x for x in v])
-            return out
+            return None
 
-        return walk(e)
-
-    _HOF_NAMES = {"FILTER_BAG", "TRANSFORM_BAG", "FOREACH_BAG", "SORT_BAG",
-                  "LIMIT_BAG", "DISTINCT_BAG", "CROSS_BAG", "TOP"}
+        return E.transform(e, key_col)
 
     _DISTINCT_FUSABLE = {"COUNT": "COUNT_DISTINCT", "SUM": "SUM_DISTINCT"}
 
@@ -1103,29 +1013,23 @@ class PlanCompiler:
         (COUNT_DISTINCT/SUM_DISTINCT) so it fuses into groupBy().agg()
         and gets Catalyst's expand + two-phase partial aggregation instead
         of materializing and deduplicating per-group bags — the same
-        motivation as the reference's CombinerOptimizer (SURVEY.md §4.3)."""
-        if (isinstance(e, E.Func) and e.name.upper() in self._DISTINCT_FUSABLE
-                and len(e.args) == 1 and isinstance(e.args[0], E.Func)
-                and e.args[0].name.upper() == "DISTINCT_BAG"
-                and len(e.args[0].args) == 1
-                and isinstance(e.args[0].args[0], (E.Deref, E.Col))):
-            return E.Func(self._DISTINCT_FUSABLE[e.name.upper()],
-                          [e.args[0].args[0]])
-        filt = self._normalize_filter_agg(e, first_col)
-        if filt is not None:
-            return filt
-        if isinstance(e, E.Func):
-            return E.Func(e.name,
-                          [self._normalize_distinct_agg(a, first_col)
-                           for a in e.args])
-        if isinstance(e, E.BinOp):
-            return E.BinOp(e.op,
-                           self._normalize_distinct_agg(e.left, first_col),
-                           self._normalize_distinct_agg(e.right, first_col))
-        if isinstance(e, E.Cast):
-            return E.Cast(e.pig_type,
-                          self._normalize_distinct_agg(e.child, first_col))
-        return e
+        motivation as the reference's CombinerOptimizer (SURVEY.md §4.3).
+        Lambda bodies are left alone: an aggregate there runs per bag
+        element, not per group."""
+        def fuse(n: E.Expr) -> E.Expr | None:
+            if isinstance(n, E.Lambda):
+                return n
+            if (isinstance(n, E.Func)
+                    and n.name.upper() in self._DISTINCT_FUSABLE
+                    and len(n.args) == 1 and isinstance(n.args[0], E.Func)
+                    and n.args[0].name.upper() == "DISTINCT_BAG"
+                    and len(n.args[0].args) == 1
+                    and isinstance(n.args[0].args[0], (E.Deref, E.Col))):
+                return E.Func(self._DISTINCT_FUSABLE[n.name.upper()],
+                              [n.args[0].args[0]])
+            return self._normalize_filter_agg(n, first_col)
+
+        return E.transform(e, fuse)
 
     _FILTER_FUSABLE = {"COUNT", "COUNT_STAR", "SUM", "AVG", "MIN", "MAX"}
 
@@ -1174,60 +1078,32 @@ class PlanCompiler:
         """Rewrite a lambda body into a row-level expression: t.f → Col(f).
         Returns None if the body uses the tuple var other than via a named
         field deref (positional/whole-tuple uses keep the bag path)."""
-        if isinstance(e, E.Deref) and isinstance(e.child, E.LambdaVar) \
-                and e.child.name == param and isinstance(e.field, str):
-            return E.Col(e.field)
-        if isinstance(e, (E.LambdaVar, E.Lambda)):
+        def field_ref(n: E.Expr) -> E.Expr | None:
+            if isinstance(n, E.Deref) and isinstance(n.child, E.LambdaVar) \
+                    and n.child.name == param and isinstance(n.field, str):
+                return E.Col(n.field)
             return None
-        if isinstance(e, (E.Lit, E.Col, E.Pos, E.Star, E.RangeProj)):
-            return e
-        out = e.__class__(**{k: v for k, v in vars(e).items() if k != "_id"})
-        for k, v in vars(out).items():
-            if k == "_id":
-                continue
-            if isinstance(v, E.Expr):
-                sub = self._delambda(v, param)
-                if sub is None:
-                    return None
-                setattr(out, k, sub)
-            elif isinstance(v, list):
-                subs = []
-                for x in v:
-                    if isinstance(x, E.Expr):
-                        sx = self._delambda(x, param)
-                        if sx is None:
-                            return None
-                        subs.append(sx)
-                    else:
-                        subs.append(x)
-                setattr(out, k, subs)
+
+        out = E.transform(e, field_ref)
+        if any(isinstance(n, (E.LambdaVar, E.Lambda)) for n in E.nodes(out)):
+            return None
         return out
 
     def _contains_inner_plan(self, e: E.Expr) -> bool:
         """Nested-FOREACH constructs (bag HOFs / lambdas) can't fuse into
         groupBy().agg() — they need the materialized bag."""
-        if isinstance(e, E.Lambda):
-            return True
-        if isinstance(e, E.Func) and e.name.upper() in self._HOF_NAMES:
-            return True
-        for v in vars(e).values():
-            if isinstance(v, E.Expr) and self._contains_inner_plan(v):
-                return True
-            if isinstance(v, list) and any(
-                    isinstance(x, E.Expr) and self._contains_inner_plan(x)
-                    for x in v):
-                return True
-        return False
+        return any(isinstance(n, E.Lambda)
+                   or (isinstance(n, E.Func) and n.name.upper() in BAG_HOFS)
+                   for n in E.nodes(e))
 
     def _is_algebraic_agg(self, e: E.Expr) -> bool:
         """True if e is AGG(args…) over bag fields, incl. scalar expressions
         on top of aggregates (e.g. SUM(x.a)/COUNT(x), ROUND_TO(SUM(x.a),2))."""
         if self._contains_inner_plan(e):
             return False
+        if self._is_agg_call(e):
+            return True
         if isinstance(e, E.Func):
-            if e.name.upper() in ALGEBRAIC_AGGS or \
-                    e.name.upper() in self.udafs:
-                return True
             # scalar fn over aggregates: ≥1 algebraic arg, rest literals
             args_ok = all(self._is_algebraic_agg(a) or isinstance(a, E.Lit)
                           for a in e.args)
@@ -1239,24 +1115,6 @@ class PlanCompiler:
         if isinstance(e, E.Cast):
             return self._is_algebraic_agg(e.child)
         return False
-
-    @staticmethod
-    def _iter_funcs(e: E.Expr):
-        """Every Func node in an expression tree (iterative walk over the
-        dataclass fields, list/tuple children included)."""
-        import dataclasses
-        stack = [e]
-        while stack:
-            n = stack.pop()
-            if isinstance(n, E.Func):
-                yield n
-            if dataclasses.is_dataclass(n):
-                for f in dataclasses.fields(n):
-                    v = getattr(n, f.name)
-                    if isinstance(v, E.Expr):
-                        stack.append(v)
-                    elif isinstance(v, (list, tuple)):
-                        stack.extend(x for x in v if isinstance(x, E.Expr))
 
     def _percentile_fusion_map(self, gens: list[E.Expr],
                                first_col: str | None) -> dict:
@@ -1283,8 +1141,9 @@ class PlanCompiler:
                 rw = self._rewrite_bag_refs(inner, first_col)
             except Exception:
                 continue
-            for node in self._iter_funcs(rw):
-                if node.name.upper() == "PERCENTILE" \
+            for node in E.nodes(rw):
+                if isinstance(node, E.Func) \
+                        and node.name.upper() == "PERCENTILE" \
                         and len(node.args) == 2 \
                         and isinstance(node.args[1], E.Lit) \
                         and isinstance(node.args[1].value, (int, float)) \
@@ -1298,28 +1157,23 @@ class PlanCompiler:
         """Inside a fused aggregate, `bag.field` / `rel.field` refs become
         direct column refs on the pre-group child. COUNT(bag) counts tuples
         whose FIRST field is non-null (pig:src/org/apache/pig/builtin/
-        COUNT.java) → count(first_col); COUNT_STAR(bag) counts all."""
-        if isinstance(e, E.Deref):
-            if isinstance(e.field, str):
-                return E.Col(e.field)
-            return e
-        if isinstance(e, E.Func):
-            name = e.name.upper()
-            if name in ("COUNT", "COUNT_STAR") and len(e.args) == 1 and \
-                    isinstance(e.args[0], E.Col):
-                if name == "COUNT" and first_col is not None:
+        COUNT.java) → count(first_col); COUNT_STAR(bag) counts all.
+        Lambda bodies are left alone (their derefs read the bound
+        element, not the pre-group row)."""
+        def unbag(n: E.Expr) -> E.Expr | None:
+            if isinstance(n, E.Lambda):
+                return n
+            if isinstance(n, E.Deref):
+                return E.Col(n.field) if isinstance(n.field, str) else n
+            if isinstance(n, E.Func) and len(n.args) == 1 \
+                    and n.name.upper() in ("COUNT", "COUNT_STAR") \
+                    and isinstance(n.args[0], E.Col):
+                if n.name.upper() == "COUNT" and first_col is not None:
                     return E.Func("COUNT", [E.Col(first_col)])
                 return E.Func("COUNT_STAR", [])
-            return E.Func(e.name,
-                          [self._rewrite_bag_refs(a, first_col)
-                           for a in e.args])
-        if isinstance(e, E.BinOp):
-            return E.BinOp(e.op, self._rewrite_bag_refs(e.left, first_col),
-                           self._rewrite_bag_refs(e.right, first_col))
-        if isinstance(e, E.Cast):
-            return E.Cast(e.pig_type,
-                          self._rewrite_bag_refs(e.child, first_col))
-        return e
+            return None
+
+        return E.transform(e, unbag)
 
     def _c_group(self, node: L.Group) -> DataFrame:
         """Unfused GROUP: the bag escapes → materialize (group, bag).
@@ -1437,22 +1291,11 @@ class PlanCompiler:
         of a cogrouped relation are `group` and the bags, so a foreign
         Col means the expression needs the materialized frame)."""
         refs: set[str] = set()
-        stack = [e]
-        import dataclasses
-        while stack:
-            n = stack.pop()
+        for n in E.nodes(e):
             if isinstance(n, E.Col):
-                if n.name in bag_names:
-                    refs.add(n.name)
-                    continue
-                return None          # group (or unknown) inside an agg
-            if dataclasses.is_dataclass(n):
-                for f in dataclasses.fields(n):
-                    v = getattr(n, f.name)
-                    if isinstance(v, E.Expr):
-                        stack.append(v)
-                    elif isinstance(v, (list, tuple)):
-                        stack.extend(x for x in v if isinstance(x, E.Expr))
+                if n.name not in bag_names:
+                    return None      # group (or unknown) inside an agg
+                refs.add(n.name)
         return refs
 
     def _try_fuse_cogroup_agg(self, node: L.ForEach) -> DataFrame | None:
@@ -1776,7 +1619,8 @@ class PlanCompiler:
         if not flats:
             return None
         for k in node.keys[idx]:
-            if not set(self._expr_col_refs(k)) <= non_flat:
+            if not {n.name for n in E.nodes(k)
+                    if isinstance(n, E.Col)} <= non_flat:
                 return None                    # key depends on the flatten
         child_df = self._compile(inp.child)
         ctx = self._ctx(child_df)
@@ -1816,23 +1660,6 @@ class PlanCompiler:
             explodes.append((tmp, alias))
         return self._apply_generators(child_df, new_gens), explodes
 
-    @staticmethod
-    def _expr_col_refs(e: E.Expr) -> list[str]:
-        """All column names referenced anywhere in an expression tree."""
-        out: list[str] = []
-
-        def walk(x):
-            if isinstance(x, E.Col):
-                out.append(x.name)
-            if isinstance(x, E.Expr):
-                for f in dataclasses.fields(x):
-                    walk(getattr(x, f.name))
-            elif isinstance(x, (list, tuple)):
-                for v in x:
-                    walk(v)
-        walk(e)
-        return out
-
     def _disambiguate(self, dfs: list[DataFrame], node) -> list[DataFrame]:
         """Pig join output schema qualifies colliding names as alias::col;
         non-colliding names stay bare (Pig's resolution rule)."""
@@ -1845,24 +1672,12 @@ class PlanCompiler:
             if renames:
                 df = df.withColumnsRenamed(renames)
                 # key exprs referencing the bare name must follow the rename
-                node.keys[idx] = [self._qualify(k, renames)
-                                  for k in node.keys[idx]]
+                node.keys[idx] = [E.transform(
+                    k, lambda n: E.Col(renames[n.name])
+                    if isinstance(n, E.Col) and n.name in renames else None)
+                    for k in node.keys[idx]]
             out.append(df)
         return out
-
-    @staticmethod
-    def _qualify(e: E.Expr, renames: dict[str, str]) -> E.Expr:
-        if isinstance(e, E.Col) and e.name in renames:
-            return E.Col(renames[e.name])
-        if isinstance(e, E.BinOp):
-            return E.BinOp(e.op, PlanCompiler._qualify(e.left, renames),
-                           PlanCompiler._qualify(e.right, renames))
-        if isinstance(e, E.Func):
-            return E.Func(e.name, [PlanCompiler._qualify(a, renames)
-                                   for a in e.args])
-        if isinstance(e, E.Cast):
-            return E.Cast(e.pig_type, PlanCompiler._qualify(e.child, renames))
-        return e
 
     def _c_cross(self, node: L.Cross) -> DataFrame:
         dfs = self._compile(node.inputs[0]), *[self._compile(i)

@@ -493,3 +493,12 @@ ALGEBRAIC_AGGS = {
     # grouping-set id is evaluated inside the Aggregate (fused path only)
     "GROUPING_ID",
 }
+
+# Bag-level functions the aggregate fusions cannot fuse: the bag
+# higher-order functions nested-FOREACH inner operators compile to
+# (SURVEY.md §2.3), and TOP. A generator calling one needs the
+# materialized bag.
+BAG_HOFS = frozenset({
+    "FILTER_BAG", "TRANSFORM_BAG", "FOREACH_BAG", "SORT_BAG", "LIMIT_BAG",
+    "DISTINCT_BAG", "CROSS_BAG", "TOP",
+})

@@ -1281,7 +1281,7 @@ class PigParser:
             src_cols = set()
         found: dict[tuple[str, str], str] = {}
 
-        def rewrite(e: E.Expr) -> E.Expr:
+        def rewrite(e: E.Expr) -> E.Expr | None:
             if (isinstance(e, E.Deref) and isinstance(e.child, E.Col)
                     and isinstance(e.field, str)
                     and e.child.name in self.rels
@@ -1290,20 +1290,9 @@ class PigParser:
                 if key not in found:
                     found[key] = f"__sc_{e.child.name}_{e.field}"
                 return E.Col(found[key])
-            if isinstance(e, (E.Lit, E.Col, E.Pos, E.Star, E.RangeProj, E.LambdaVar)):
-                return e
-            out = e.__class__(**vars(e))
-            for k, v in vars(out).items():
-                if k == "_id":
-                    continue
-                if isinstance(v, E.Expr):
-                    setattr(out, k, rewrite(v))
-                elif isinstance(v, list):
-                    setattr(out, k, [rewrite(x) if isinstance(x, E.Expr)
-                                     else x for x in v])
-            return out
+            return None
 
-        new = [rewrite(x) for x in exprs]
+        new = [E.transform(x, rewrite) for x in exprs]
         for (rel_nm, field), uniq in found.items():
             scalar = (self.rels[rel_nm].as_scalar(field)
                       .foreach(E.Aliased(E.Col(field), uniq)))
@@ -1381,21 +1370,13 @@ class PigParser:
         def lower_inner_expr(e: E.Expr, var: E.LambdaVar) -> E.Expr:
             """Inner expressions reference bag-tuple fields by name →
             rebind Col/Pos onto the lambda variable."""
-            if isinstance(e, E.Col):
-                return E.Deref(var, e.name)
-            if isinstance(e, E.Pos):
-                return E.Deref(var, e.index)
-            out = e.__class__(**vars(e))
-            for k, v in vars(out).items():
-                if k == "_id":
-                    continue
-                if isinstance(v, E.Expr):
-                    setattr(out, k, lower_inner_expr(v, var))
-                elif isinstance(v, list):
-                    setattr(out, k, [lower_inner_expr(x, var)
-                                     if isinstance(x, E.Expr) else x
-                                     for x in v])
-            return out
+            def rebind(n: E.Expr) -> E.Expr | None:
+                if isinstance(n, E.Col):
+                    return E.Deref(var, n.name)
+                if isinstance(n, E.Pos):
+                    return E.Deref(var, n.index)
+                return None
+            return E.transform(e, rebind)
 
         def inner_bag_ref() -> tuple[str, E.Expr]:
             """A bag reference inside the block: a prior inner alias or the
@@ -1490,24 +1471,8 @@ class PigParser:
         self.expect("kw", "generate")
 
         def subst_bags(e: E.Expr) -> E.Expr:
-            if isinstance(e, E.Col) and e.name in bag_env:
-                return bag_env[e.name]
-            if isinstance(e, E.Deref) and isinstance(e.child, E.Col) \
-                    and e.child.name in bag_env \
-                    and e.child.name != "group":
-                return E.Deref(subst_bags(e.child), e.field)
-            if isinstance(e, (E.Lit, E.Pos, E.Star, E.RangeProj, E.LambdaVar)):
-                return e
-            out = e.__class__(**vars(e))
-            for k, v in vars(out).items():
-                if k == "_id":
-                    continue
-                if isinstance(v, E.Expr):
-                    setattr(out, k, subst_bags(v))
-                elif isinstance(v, list):
-                    setattr(out, k, [subst_bags(x) if isinstance(x, E.Expr)
-                                     else x for x in v])
-            return out
+            return E.transform(e, lambda n: bag_env.get(n.name)
+                               if isinstance(n, E.Col) else None)
 
         def lower_gen(g: E.Expr) -> E.Expr:
             # a bare inner alias keeps its name: GENERATE group, c;

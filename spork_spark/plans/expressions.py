@@ -16,11 +16,33 @@ semantics. pyspark Columns are opaque; dataclass trees are not.
 Python operator overloads are provided so engine users can write
 ``col("a") + 1`` / ``(col("x") > 2) & col("b").is_null()`` — same surface
 style as pyspark itself.
+
+Traversal — the one definition of an expression's children, shared by
+every compiler and parser rewrite (Pig's DepthFirstWalker +
+LogicalExpressionVisitor role, pig:src/org/apache/pig/newplan/):
+
+- ``children(e)`` yields, in field order, every Expr that one of
+  ``e``'s dataclass fields holds: the field value itself, each item of
+  a list value, and the Expr items of a tuple in either place. The
+  tuples are why one shared rule is needed —
+  ``CaseWhen.branches`` holds ``(cond, value)`` pairs and
+  ``WindowFunc.order_by`` holds ``(expr, ascending)`` pairs, and a
+  walker that only looks at Exprs and lists of Exprs silently skips
+  every CASE condition and window ordering. Non-Expr data (names,
+  literal values, ``DerefMulti.fields``, a window frame) is never a
+  child.
+- ``nodes(e)`` iterates the whole tree pre-order, left to right.
+- ``transform(e, fn)`` rebuilds the tree pre-order: when ``fn(node)``
+  returns an Expr it replaces the node and its subtree is not visited;
+  when it returns None the node is rebuilt from its transformed
+  children. Rewrites that must stop at a boundary (a ``Lambda`` body,
+  say) return the node itself from ``fn``.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass, field, fields, replace
 from typing import Any
 
 
@@ -249,6 +271,53 @@ class WindowFunc(Expr):
     # optional frame: ("rows" | "range", start, end); start/end are ints
     # (negative = preceding) or None for unbounded
     frame: tuple | None = None
+
+
+# -- traversal ---------------------------------------------------------------
+
+def children(e: Expr) -> Iterator[Expr]:
+    """Direct Expr children of ``e`` (the rule is in the module
+    docstring)."""
+    for f in fields(e):
+        v = getattr(e, f.name)
+        for slot in (v if isinstance(v, list) else (v,)):
+            if isinstance(slot, Expr):
+                yield slot
+            elif isinstance(slot, tuple):
+                yield from (x for x in slot if isinstance(x, Expr))
+
+
+def nodes(e: Expr) -> Iterator[Expr]:
+    """Every node of the tree rooted at ``e``, pre-order."""
+    stack = [e]
+    while stack:
+        n = stack.pop()
+        yield n
+        stack.extend(reversed(list(children(n))))
+
+
+def transform(e: Expr, fn: Callable[[Expr], Expr | None]) -> Expr:
+    """Rebuild ``e`` pre-order: ``fn``'s replacement is used as is (its
+    subtree is not visited); None rebuilds the node from its
+    transformed children."""
+    r = fn(e)
+    if r is not None:
+        return r
+
+    def slot(x):
+        if isinstance(x, Expr):
+            return transform(x, fn)
+        if isinstance(x, tuple):
+            return tuple(transform(y, fn) if isinstance(y, Expr) else y
+                         for y in x)
+        return x
+
+    new = {}
+    for f in fields(e):
+        v = getattr(e, f.name)
+        new[f.name] = [slot(x) for x in v] if isinstance(v, list) \
+            else slot(v)
+    return replace(e, **new)
 
 
 # -- public constructors ----------------------------------------------------

@@ -2,7 +2,12 @@
 divergences the compiler must own — int division, anchored matches,
 null-on-failure casts, bincond, null comparisons."""
 
+import dataclasses
+
+import pytest
+
 from spork_spark import col, lit, fn, bincond
+from spork_spark.plans import expressions as E
 
 
 def rows(rel):
@@ -137,3 +142,60 @@ def test_window_frame_rows_between(eng, spark):
               .order_by(col("k"), col("i")).df().collect())
     assert [(r.run, r.mov) for r in out] == \
         [(10.0, 10.0), (30.0, 30.0), (60.0, 50.0), (5.0, 5.0)]
+
+
+# Each Expr-bearing field annotation in plans/expressions.py and the value
+# shape that fills it with marker nodes. A node type whose field shape is
+# not listed here fails test_children_yield_every_expr_slot.
+_EXPR_SLOTS = {
+    "Expr": lambda m: m(),
+    "Expr | None": lambda m: m(),
+    "list[Expr]": lambda m: [m(), m()],
+    "list[tuple[Expr, Expr]]": lambda m: [(m(), m()), (m(), m())],
+    "list[tuple[Expr, bool]]": lambda m: [(m(), True), (m(), False)],
+}
+
+
+def _marked(cls):
+    """An instance of ``cls`` whose Expr slots hold fresh marker nodes
+    (returned in field order) and whose other fields hold non-Expr data,
+    lists and tuples included."""
+    markers = []
+
+    def marker():
+        markers.append(lit(len(markers)))
+        return markers[-1]
+
+    values = {}
+    for f in dataclasses.fields(cls):
+        shape = _EXPR_SLOTS.get(f.type)
+        if shape is not None:
+            values[f.name] = shape(marker)
+        else:
+            assert "Expr" not in f.type, \
+                f"{cls.__name__}.{f.name}: unknown Expr slot shape {f.type}"
+            values[f.name] = ["x", 1] if f.type.startswith("list") else \
+                ("rows", -1, None) if f.type.startswith("tuple") else "x"
+    return cls(**values), markers
+
+
+_NODE_TYPES = sorted(E.Expr.__subclasses__(), key=lambda c: c.__name__)
+
+
+@pytest.mark.parametrize("cls", _NODE_TYPES, ids=lambda c: c.__name__)
+def test_children_yield_every_expr_slot(cls):
+    """The traversal contract (plans/expressions.py): children() yields
+    exactly the Exprs a node holds — directly, in lists, and inside the
+    tuples of CaseWhen.branches / WindowFunc.order_by — nodes() is
+    pre-order, and transform() rebuilds the node around replaced
+    children, keeping its non-Expr data."""
+    node, markers = _marked(cls)
+    assert [id(c) for c in E.children(node)] == [id(m) for m in markers]
+    assert [id(n) for n in E.nodes(node)] == \
+        [id(node)] + [id(m) for m in markers]
+    swapped = {id(m): lit(f"r{i}") for i, m in enumerate(markers)}
+    out = E.transform(node, lambda n: swapped.get(id(n)))
+    assert type(out) is cls and out is not node
+    assert [c.value for c in E.children(out)] == \
+        [f"r{i}" for i in range(len(markers))]
+    assert repr(E.transform(node, lambda n: None)) == repr(node)

@@ -784,3 +784,60 @@ def test_cogroup_agg_fusion_bails_on_group_deref(eng, spark):
         assert sorted(map(tuple, plain.collect())) == rows
     finally:
         eng.spark.conf.set("spark.spork.optimizer.fuseCogroupAgg", "true")
+
+
+_A_ROWS = [(1, 10), (1, 20), (2, 5), (3, -1)]
+_D_ROWS = [(1, "x"), (2, "y"), (3, "x")]
+_SCALAR = "m = FOREACH (GROUP a ALL) GENERATE MAX(a.v) AS mx;\n"
+_JOINED = "j = JOIN a BY k, d BY dk;\n"
+_BY_NAME = "r = FOREACH (GROUP j BY name) GENERATE group, "
+
+
+@pytest.mark.parametrize("script,twin,expected,eager", [
+    pytest.param(
+        _SCALAR + "r = FOREACH a GENERATE k, "
+                  "(CASE WHEN v == m.mx THEN 1 ELSE 0 END);",
+        _SCALAR + "r = FOREACH a GENERATE k, (v == m.mx ? 1 : 0);",
+        [(1, 0), (1, 1), (2, 0), (3, 0)], False, id="scalar_ref_in_case"),
+    pytest.param(
+        "r = FOREACH (GROUP a BY k) GENERATE group, COUNT(a) AS n, "
+        "(CASE WHEN SUM(a.v) > 0 THEN 1 ELSE 0 END);",
+        "r = FOREACH (GROUP a BY k) GENERATE group, COUNT(a) AS n, "
+        "(SUM(a.v) > 0 ? 1 : 0);",
+        [(1, 2, 1), (2, 1, 1), (3, 1, 0)], False, id="case_over_agg"),
+    pytest.param(_JOINED + _BY_NAME + "-SUM(j.v);",
+                 _JOINED + _BY_NAME + "0 - SUM(j.v);",
+                 [("x", -29), ("y", -5)], True, id="eager_under_neg"),
+    pytest.param(_JOINED + _BY_NAME + "(SUM(j.v) > 0 ? SUM(j.v) : 0);",
+                 _JOINED + _BY_NAME + "SUM(j.v);",
+                 [("x", 29), ("y", 5)], True, id="eager_under_bincond"),
+    # no twin that reaches the eager path: these are the rows the
+    # materialized-bag plan computes for the same generator
+    pytest.param(_JOINED + _BY_NAME +
+                 "(CASE WHEN SUM(j.v) > 0 THEN 1 ELSE 0 END);",
+                 None, [("x", 1), ("y", 1)], True, id="eager_under_case"),
+])
+def test_rewrites_reach_case_and_unary_children(eng, spark, script, twin,
+                                                expected, eager):
+    """Every compiler and parser rewrite walks the same children, CASE
+    branches and unary operands included: scalar references inside a
+    CASE bind, a CASE over an aggregate splits its aggregate out, and
+    eager aggregation rewrites every aggregate it pre-aggregated, under
+    unary minus, BINCOND or CASE alike. Each form returns its working
+    twin's rows."""
+    from spork_spark.parser import run_script
+    rels = {"a": eng.from_df(spark.createDataFrame(_A_ROWS, "k int, v int"),
+                             alias="a"),
+            "d": eng.from_df(spark.createDataFrame(_D_ROWS,
+                                                   "dk int, name string"),
+                             alias="d")}
+
+    def run(s):
+        return run_script(eng, s, relations=rels)["r"].df()
+
+    df = run(script)
+    assert sorted(map(tuple, df.collect())) == expected
+    if twin is not None:
+        assert sorted(map(tuple, run(twin).collect())) == expected
+    analyzed = df._jdf.queryExecution().analyzed().toString()
+    assert ("__ea_" in analyzed) == eager

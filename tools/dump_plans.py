@@ -1,13 +1,17 @@
 """Dump .explain('formatted') for named registry queries to
 plans/<round>/<query>_<tag>.txt (the optimization-round evidence files).
 
+A name written ``golden/<stem>`` runs the golden script
+tests/golden/<stem>.pig at the golden harness's scale factor and dumps
+its ``out`` alias to plans/<round>/golden/<stem>_<tag>.txt.
+
 Per-run numbering is stripped so that two dumps of the same
 plan are byte-identical and a before/after pair diffs to its real
 changes only: expression ids (`#123L`), exchange `plan_id=` tags,
 lambda variable counters (`x_12`), JVM object hashes (`@1a2b3c`) and
 RDD ids (`MapPartitionsRDD[126]`, which checkpoint-staged scans print).
 
-Usage: python tools/dump_plans.py before q1,q2,... [--round r10]
+Usage: python tools/dump_plans.py before q1,golden/case_when,... [--round r10]
 """
 import contextlib
 import io
@@ -41,20 +45,27 @@ def main() -> None:
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import bench
     import __spark_entry__ as m
-    from spork_spark import get_spark
+    from spork_spark import Engine, get_spark
+    from spork_spark.parser import run_script
+    from tests.test_golden_scripts import GOLDEN_DIR, SF
     spark = get_spark(master="local[4]",
                       extra_conf={**bench.LATENCY_PROFILE,
                                   "spark.ui.enabled": "false",
                                   "spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     qs = m.queries()
-    os.makedirs(f"plans/{rnd}", exist_ok=True)
+    eng = Engine(spark)
     for name in names:
-        df = qs[name](spark, sf)
+        if name.startswith("golden/"):
+            src = (GOLDEN_DIR / f"{name[len('golden/'):]}.pig").read_text()
+            df = run_script(eng, src, params={"sf": SF})["out"].df()
+        else:
+            df = qs[name](spark, sf)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         path = f"plans/{rnd}/{name}_{tag}.txt"
+        os.makedirs(os.path.dirname(path), exist_ok=True)
         with open(path, "w") as f:
             f.write(normalize(buf.getvalue()))
         print("wrote", path)
