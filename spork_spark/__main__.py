@@ -15,72 +15,8 @@ import argparse
 import re
 import sys
 
-
-def _strip_comments(buf: str) -> tuple[str, bool]:
-    """Blank '--' line comments and '/* */' block comments to spaces
-    (newlines and overall length preserved, so line-anchored regexes and
-    match spans keep working), string-aware — mirrors the tokenizer's
-    comment handling (parser/pig.py). Returns (stripped, open_block):
-    open_block is True when the buffer ends inside an unterminated
-    '/*' (the statement cannot be complete yet)."""
-    out = list(buf)
-    i, n, in_s = 0, len(buf), None
-    open_block = False
-    while i < n:
-        c = buf[i]
-        if in_s:
-            if c == "\\":
-                i += 2
-                continue
-            if c == in_s:
-                in_s = None
-            i += 1
-        elif c in ("'", '"'):
-            in_s = c
-            i += 1
-        elif c == "-" and buf[i:i + 2] == "--":
-            j = buf.find("\n", i)
-            j = n if j < 0 else j
-            for k in range(i, j):
-                out[k] = " "
-            i = j
-        elif buf[i:i + 2] == "/*":
-            j = buf.find("*/", i + 2)
-            end = n if j < 0 else j + 2
-            open_block = j < 0
-            for k in range(i, end):
-                if out[k] != "\n":
-                    out[k] = " "
-            i = end
-        else:
-            i += 1
-    return "".join(out), open_block
-
-
-def _blank_strings(s: str) -> str:
-    """Blank string-literal CONTENTS to spaces (quotes kept) so textual
-    scans (macro/%declare harvesting, brace counting) cannot be fooled
-    by keywords or braces inside literals. Length-preserving: match
-    spans on the blanked copy index into the original text."""
-    out = list(s)
-    i, n, in_s = 0, len(s), None
-    while i < n:
-        c = s[i]
-        if in_s:
-            if c == "\\":
-                out[i] = " "
-                if i + 1 < n:
-                    out[i + 1] = " "
-                i += 2
-                continue
-            if c == in_s:
-                in_s = None
-            else:
-                out[i] = " "
-        elif c in ("'", '"'):
-            in_s = c
-        i += 1
-    return "".join(out)
+from .parser.pig import (_MACRO_HEAD_RE, _balanced_block, _blank_strings,
+                         _strip_comments)
 
 
 def _statement_complete(buf: str) -> bool:
@@ -116,8 +52,6 @@ def _statement_complete(buf: str) -> bool:
 
 
 _DECL_RE = re.compile(r"(?m)^[ \t]*%(?:declare|default)\b[^\n]*$")
-_MACRO_START_RE = re.compile(
-    r"DEFINE\s+\w+\s*\([^)]*\)\s+RETURNS\s+\S+\s*\{", re.I)
 
 
 def _only_preproc(buf: str) -> bool:
@@ -142,14 +76,8 @@ def _textual_state(chunk: str) -> list[str]:
     text, _ = _strip_comments(chunk)
     scan = _blank_strings(text)
     out = [text[m.start():m.end()] + "\n" for m in _DECL_RE.finditer(scan)]
-    for m in _MACRO_START_RE.finditer(scan):
-        depth, i = 1, m.end()
-        while i < len(scan) and depth:
-            if scan[i] == "{":
-                depth += 1
-            elif scan[i] == "}":
-                depth -= 1
-            i += 1
+    for m in _MACRO_HEAD_RE.finditer(scan):
+        i = _balanced_block(scan, m.end() - 1)
         while i < len(scan) and scan[i] in " \t\n;":
             i += 1
             if scan[i - 1] == ";":

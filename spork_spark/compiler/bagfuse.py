@@ -46,6 +46,7 @@ from pyspark.sql.window import Window
 
 from ..functions.builtins import ALGEBRAIC_AGGS, BAG_HOFS
 from ..plans import expressions as E
+from .plan import _null_safe_eq
 
 _SIDE_HOFS = ("FILTER_BAG", "TRANSFORM_BAG", "FOREACH_BAG")
 
@@ -387,10 +388,7 @@ def try_fuse_inner_cross(pc, group, gens):
     gkb = [f"{n}__b" for n in gk]
     db = db.select(*[F.col(n).alias(nb) for n, nb in zip(gk, gkb)],
                    *[F.col(f).alias(n) for f, n in zip(b_fields, names_b)])
-    cond = None
-    for ka, kb in zip(gk, gkb):
-        c = da[ka].eqNullSafe(db[kb])
-        cond = c if cond is None else (cond & c)
+    cond = _null_safe_eq([da[ka] for ka in gk], [db[kb] for kb in gkb])
     pair = da.join(db, cond).select(*gk, *pair_names)
     for k in sorted(tx_cols):
         pctx = pc._ctx(pair)
@@ -410,10 +408,8 @@ def try_fuse_inner_cross(pc, group, gens):
     agg_df = agg_df.select(*[F.col(n).alias(r)
                              for n, r in zip(gk, gkr)],
                            *[tmp for tmp, _, _ in agg_parts])
-    cond2 = None
-    for n, r in zip(gk, gkr):
-        c = base_keys[n].eqNullSafe(agg_df[r])
-        cond2 = c if cond2 is None else (cond2 & c)
+    cond2 = _null_safe_eq([base_keys[n] for n in gk],
+                          [agg_df[r] for r in gkr])
     joined = base_keys.join(agg_df, cond2, "left").select(
         *[base_keys[n] for n in gk],
         *[F.coalesce(agg_df[tmp], F.lit(0).cast("long")).alias(tmp)

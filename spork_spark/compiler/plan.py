@@ -22,9 +22,11 @@ because they are about plan generation (SURVEY.md §4.1 conclusion):
 
 from __future__ import annotations
 
+import functools
+import operator
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -35,6 +37,23 @@ from ..plans import logical as L
 from .expr import ExprCompiler
 
 GROUP_COL = "group"
+
+
+def _null_safe_eq(left: list[Column], right: list[Column]) -> Column:
+    """AND of `l <=> r` over paired key columns. GROUP/COGROUP collect
+    null keys into one group (Pig "Nulls" contract — unlike JOIN, where
+    null keys never match), so every join that re-pairs grouped keys
+    compares them null-safely."""
+    return functools.reduce(operator.and_, (l.eqNullSafe(r)
+                                            for l, r in zip(left, right)))
+
+
+def _group_col(names: list[str]) -> Column:
+    """The `group` value over its key columns: the key itself for one
+    key, a struct of the keys for several."""
+    if len(names) == 1:
+        return F.col(names[0])
+    return F.struct(*[F.col(n) for n in names])
 
 
 class PlanCompiler:
@@ -129,7 +148,7 @@ class PlanCompiler:
         throwaway context so the caller's own compilation never
         double-registers a probe; flag-off returns the input untouched
         (plans stay byte-identical)."""
-        if not self._warnings_on() or not keys:
+        if not keys or not self._warnings_on():
             return df
         kctx = ExprCompiler(df, self.udfs, self.udafs, probes=[])
         for k in keys:
@@ -488,12 +507,8 @@ class PlanCompiler:
 
     # ------------------------------------------------------- group & fusion
     def _group_key_cols(self, ctx: ExprCompiler, keys: list[E.Expr]) -> list:
-        cols = []
-        for i, k in enumerate(keys):
-            name = k.name if isinstance(k, E.Col) else \
-                (k.name if isinstance(k, E.Aliased) else f"group_{i}")
-            cols.append(ctx.compile(k).alias(name))
-        return cols
+        return [ctx.compile(k).alias(self._key_name(k, i))
+                for i, k in enumerate(keys)]
 
     def _try_fuse_group_agg(self, group: L.Group,
                             gens: list[E.Expr]) -> DataFrame | None:
@@ -521,12 +536,10 @@ class PlanCompiler:
             ctx = self._ctx(child_df)
         # Same-column PERCENTILEs fuse into one shared buffer (map
         # computed over all generators; compiled per-node in _c_func)
-        if self._conf("spark.spork.optimizer.fusePercentiles",
-                      "true") == "true":
-            pm = self._percentile_fusion_map(
-                gens, child_df.columns[0] if child_df.columns else None)
-            if pm:
-                ctx.pctl_multi = pm
+        pm = self._percentile_fusion_map(
+            gens, child_df.columns[0] if child_df.columns else None)
+        if pm:
+            ctx.pctl_multi = pm
         # an agg output named like a group key would be ambiguous on
         # the aggregated frame — such columns compute under a safe
         # name and alias back in the final projection
@@ -853,7 +866,12 @@ class PlanCompiler:
     def _grouped_agg(self, group: L.Group, child_df: DataFrame,
                      ctx: ExprCompiler, keys: list[E.Expr],
                      agg_cols: list[tuple]) -> DataFrame:
-        """One groupBy().agg() — unless the generators mix grouped-agg
+        """The GROUP spine: the only place a GROUP mode (all/by/cube/
+        rollup/gsets) becomes a Spark aggregation. ``agg_cols`` holds
+        (column, name, is_udaf) triples — fused partial aggregates, or
+        the materialized bag alone (_c_group).
+
+        One groupBy().agg() — unless the generators mix grouped-agg
         pandas UDAFs with JVM aggregates, which Spark forbids in a single
         Aggregate (INVALID_PANDAS_UDF_PLACEMENT). Then: two aggregations
         over the same child, null-safe-joined on the keys. Both sides hash-
@@ -909,11 +927,8 @@ class PlanCompiler:
         # the reducer (pig:…/mapReduceLayer/CombinerOptimizer.java).
         a = grouped().agg(*[c for c, _ in native])
         b = grouped().agg(*[c for c, _ in pandas_])
-        knames = a.columns[:len(self._group_key_cols(ctx, keys))]
-        cond = None
-        for k in knames:
-            c = a[k].eqNullSafe(b[k])
-            cond = c if cond is None else (cond & c)
+        knames = a.columns[:len(keys)]
+        cond = _null_safe_eq([a[k] for k in knames], [b[k] for k in knames])
         return a.join(b, cond).select(
             *[a[k] for k in knames],
             *[a[n] for _, n in native], *[b[n] for _, n in pandas_])
@@ -925,16 +940,11 @@ class PlanCompiler:
     def _compile_group_ref(self, e: E.Expr, keys: list[E.Expr],
                            alias: str | None, agg_df: DataFrame):
         """Compile a reference to the group key in the fused plan."""
-        key_names = [k.name if isinstance(k, E.Col) else
-                     (k.name if isinstance(k, E.Aliased) else f"group_{i}")
-                     for i, k in enumerate(keys)]
+        key_names = [self._key_name(k, i) for i, k in enumerate(keys)]
         if isinstance(e, E.Col) and e.name == GROUP_COL:
             if not keys:                       # GROUP ALL → group = 'all'
                 return F.lit("all").alias(alias or GROUP_COL)
-            if len(keys) == 1:
-                return F.col(key_names[0]).alias(alias or GROUP_COL)
-            return F.struct(*[F.col(n) for n in key_names]) \
-                    .alias(alias or GROUP_COL)
+            return _group_col(key_names).alias(alias or GROUP_COL)
         if isinstance(e, E.Deref) and isinstance(e.child, E.Col) \
                 and e.child.name == GROUP_COL:
             name = e.field if isinstance(e.field, str) else key_names[e.field]
@@ -1178,45 +1188,26 @@ class PlanCompiler:
     def _c_group(self, node: L.Group) -> DataFrame:
         """Unfused GROUP: the bag escapes → materialize (group, bag).
 
-        collect_list(struct(*)) is the reference's bag; this is the slow
-        path by design (SURVEY.md §4.3) — the fusion above avoids it
-        whenever the consumer is aggregate-only.
+        collect_list(struct(*)) is the reference's bag, and it is just
+        one more aggregate on the GROUP spine (_grouped_agg), the same
+        one the fused path uses; this is the slow path by design
+        (SURVEY.md §4.3) — the fusion above avoids it whenever the
+        consumer is aggregate-only.
         """
         df = self._compile(node.child)
         ctx = self._ctx(df)
         bag_alias = getattr(node, "bag_alias", "bag")
         bag = F.collect_list(F.struct(*[F.col(c) for c in df.columns])) \
                .alias(bag_alias)
-        if node.mode == "all":
-            return df.groupBy().agg(bag).select(
-                F.lit("all").alias(GROUP_COL), F.col(bag_alias))
         keys = self._expand_star_keys(df, node.keys)
-        key_cols = self._group_key_cols(ctx, keys)
         df = self._probe_keys(df, keys)     # group-key cast discards
-        key_names = [self._key_name(k, i) for i, k in enumerate(keys)]
-        if node.mode == "cube":
-            grouped = df.cube(*key_cols).agg(bag)
-        elif node.mode == "rollup":
-            grouped = df.rollup(*key_cols).agg(bag)
-        elif node.mode == "gsets":
-            # mixed CUBE/ROLLUP: the bag escapes through groupingSets
-            # too — same raw-expression grouping + rename as the fused
-            # path (groupingSets matches set members by expression
-            # equality, so aliased copies would group as all-null)
-            raw = [ctx.compile(k) for k in keys]
-            sets = [[raw[i] for i in s] for s in node.gsets]
-            grouped = df.groupingSets(sets, *raw).agg(bag)
-            for old, new in zip(grouped.columns[:len(key_names)],
-                                key_names):
-                if old != new:
-                    grouped = grouped.withColumnRenamed(old, new)
-        else:
-            grouped = df.groupBy(*key_cols).agg(bag)
-        if len(key_names) == 1:
-            group_col = F.col(key_names[0]).alias(GROUP_COL)
-        else:
-            group_col = F.struct(*[F.col(n) for n in key_names]).alias(GROUP_COL)
-        out = grouped.select(group_col, F.col(bag_alias))
+        grouped = self._grouped_agg(node, df, ctx, keys,
+                                    [(bag, bag_alias, False)])
+        out = grouped.select(
+            self._compile_group_ref(E.Col(GROUP_COL), keys, None, grouped),
+            F.col(bag_alias))
+        if node.mode == "all":
+            return out
         placed = self._apply_partitioner(node, out, [GROUP_COL])
         if placed is not None:
             return placed
@@ -1300,21 +1291,19 @@ class PlanCompiler:
 
     def _try_fuse_cogroup_agg(self, node: L.ForEach) -> DataFrame | None:
         """FOREACH (FILTER* (COGROUP …)) whose bag uses are ALL algebraic
-        aggregates — and whose filters are IsEmpty tests — compiles to
-        per-side groupBy().agg() + the same null-safe full-outer key
-        join, WITHOUT materializing the bags: the exchanges then carry
-        one partial-aggregate row per key instead of collect_list'ing
-        every input column of every row (the COGROUP+IsEmpty anti-join
-        idiom shuffled 11-column structs to count them). Empty-bag
-        semantics are preserved exactly: an absent side leaves its
-        aggregate columns null after the outer join — which IS Pig's
+        aggregates — and whose filters are IsEmpty tests — runs the
+        COGROUP spine (_cogroup_sides) with each side's partial
+        aggregates in place of its bag: the exchanges then carry one
+        partial-aggregate row per key instead of collect_list'ing every
+        input column of every row (the COGROUP+IsEmpty anti-join idiom
+        shuffled 11-column structs to count them). Empty-bag semantics
+        are preserved exactly: an absent side leaves its aggregate
+        columns null after the outer join — which IS Pig's
         SUM/AVG/MIN/MAX over an empty bag — and COUNT/COUNT_STAR
         coalesce to 0; IsEmpty(bag) ⇔ the side's group-presence count
-        is null. Gated by spark.spork.optimizer.fuseCogroupAgg (default
-        on); disabled under the warnings surface (the fallback bag path
-        carries the cast probes)."""
-        if self._conf("spark.spork.optimizer.fuseCogroupAgg",
-                      "true") != "true" or self._warnings_on():
+        is null. Disabled under the warnings surface (the fallback bag
+        path carries the cast probes)."""
+        if self._warnings_on():
             return None
         terms: list[E.Expr] = []
         cur = node.child
@@ -1335,8 +1324,6 @@ class PlanCompiler:
             # shape would silently drop it, so fall back to the bag
             # path (r10 advisor).
             return None
-        if any(len(ks) != 1 for ks in cur.keys):
-            return None               # single-key cogroups only (v1)
         bag_names = [getattr(inp, "alias", None) or f"bag_{i}"
                      for i, inp in enumerate(cur.inputs)]
         if len(set(bag_names)) != len(bag_names) or GROUP_COL in bag_names:
@@ -1374,28 +1361,17 @@ class PlanCompiler:
                               inner.name.upper()))
         if not any(pg[0] == "agg" for pg in plan_gens):
             return None
-        # per-side partial aggregation (replaces per-side collect_list)
-        side_frames = []
-        for idx, (inp, keys) in enumerate(zip(cur.inputs, cur.keys)):
-            df = self._compile(inp)
-            ctx = self._ctx(df)
+
+        def partials(idx: int, df: DataFrame, ctx: ExprCompiler) -> list:
+            # presence count + this side's aggregates (replaces its bag)
             first = df.columns[0] if df.columns else None
-            kname = "__k" if idx == 0 else f"__r{idx}"
-            key_col = ctx.compile(keys[0]).alias(kname)
-            aggs = [F.count(F.lit(1)).alias(f"__n{idx}")]
-            for gi, pg in enumerate(plan_gens):
-                if pg[0] == "agg" and pg[1] == idx:
-                    rw = self._rewrite_bag_refs(pg[2], first)
-                    aggs.append(ctx.compile(rw).alias(f"__a{gi}"))
-            side_frames.append(df.groupBy(key_col).agg(*aggs))
-        out = side_frames[0]
-        for idx, g in enumerate(side_frames[1:], 1):
-            rname = f"__r{idx}"
-            out = out.join(g, on=F.col("__k").eqNullSafe(F.col(rname)),
-                           how="full")
-            out = out.withColumn("__k", F.coalesce(F.col("__k"),
-                                                   F.col(rname))) \
-                     .drop(rname)
+            return [F.count(F.lit(1)).alias(f"__n{idx}")] + [
+                ctx.compile(self._rewrite_bag_refs(pg[2], first))
+                   .alias(f"__a{gi}")
+                for gi, pg in enumerate(plan_gens)
+                if pg[0] == "agg" and pg[1] == idx]
+
+        out, knames = self._cogroup_sides(cur, partials)
         inner_flags = cur.inner or [False] * len(cur.inputs)
         for idx, is_inner in enumerate(inner_flags):
             if is_inner:
@@ -1408,11 +1384,12 @@ class PlanCompiler:
             # count (observable as part-file count under STORE);
             # _c_cogroup honors it with a group-keyed repartition, so
             # the fused shape must too (r10 advisor).
-            out = out.repartition(cur.parallel, F.col("__k"))
+            out = out.repartition(cur.parallel,
+                                  *[F.col(k) for k in knames])
         final = []
         for gi, pg in enumerate(plan_gens):
             if pg[0] == "group":
-                final.append(F.col("__k").alias(pg[1]))
+                final.append(_group_col(knames).alias(pg[1]))
             else:
                 c = F.col(f"__a{gi}")
                 if pg[4] in ("COUNT", "COUNT_STAR"):
@@ -1420,53 +1397,61 @@ class PlanCompiler:
                 final.append(c.alias(pg[3]))
         return out.select(*final)
 
-    def _c_cogroup(self, node: L.CoGroup) -> DataFrame:
-        """COGROUP a BY k, b BY k → (group, bag_a, bag_b): per-input
-        groupBy+collect_list, then FULL OUTER join on key; absent groups get
-        EMPTY (not null) bags; per-input INNER filters empties
-        (SURVEY.md §2.1 #8)."""
-        inner = node.inner or [False] * len(node.inputs)
-        sides = []
+    def _cogroup_sides(self, node: L.CoGroup, side_aggs) \
+            -> tuple[DataFrame, list[str]]:
+        """The COGROUP spine: per input, groupBy(keys).agg(<that side's
+        aggregates>), then a FULL OUTER join of the sides on the keys.
+        ``side_aggs(idx, df, ctx)`` gives input idx's aggregate columns
+        — its bag (_c_cogroup) or its partial aggregates
+        (_try_fuse_cogroup_agg). Returns the joined frame and its key
+        column names (__k0, __k1, …). The key join is null-safe
+        (_null_safe_eq) with the keys coalesced: a USING join would
+        split the null-key group per side."""
+        knames = [f"__k{i}" for i in range(len(node.keys[0]))]
+        out = None
         for idx, (inp, keys) in enumerate(zip(node.inputs, node.keys)):
             df = self._compile(inp)
             ctx = self._ctx(df)
-            bag_name = getattr(inp, "alias", None) or f"bag_{idx}"
-            key_cols = [ctx.compile(k).alias(f"__k{i}")
-                        for i, k in enumerate(keys)]
-            bag_type = T.ArrayType(df.schema)
+            key_cols = [ctx.compile(k).alias(n)
+                        for k, n in zip(keys, knames)]
             df = self._probe_keys(df, keys)  # cogroup-key cast discards
-            g = df.groupBy(*key_cols).agg(
-                F.collect_list(F.struct(*[F.col(c) for c in df.columns]))
-                 .alias(bag_name))
-            sides.append((g, bag_name, bag_type))
-        out, _, _ = sides[0]
-        knames = [f"__k{i}" for i in range(len(node.keys[0]))]
-        for idx, (g, _, _) in enumerate(sides[1:], 1):
-            # Null-SAFE key join: GROUP/COGROUP collect null keys into one
-            # group (Pig "Nulls" contract — unlike JOIN, where null keys
-            # never match). A USING join would split the null group per
-            # side, so join on <=> and coalesce the key columns.
+            g = df.groupBy(*key_cols).agg(*side_aggs(idx, df, ctx))
+            if out is None:
+                out = g
+                continue
             rk = [f"__r{idx}_{i}" for i in range(len(knames))]
             for old, new in zip(knames, rk):
                 g = g.withColumnRenamed(old, new)
-            cond = None
-            for lname, rname in zip(knames, rk):
-                c = F.col(lname).eqNullSafe(F.col(rname))
-                cond = c if cond is None else cond & c
-            out = out.join(g, on=cond, how="full")
+            out = out.join(g, on=_null_safe_eq(
+                [F.col(n) for n in knames], [F.col(n) for n in rk]),
+                how="full")
             for lname, rname in zip(knames, rk):
                 out = out.withColumn(lname,
                                      F.coalesce(F.col(lname), F.col(rname))) \
                          .drop(rname)
+        return out, knames
+
+    def _c_cogroup(self, node: L.CoGroup) -> DataFrame:
+        """COGROUP a BY k, b BY k → (group, bag_a, bag_b): the COGROUP
+        spine (_cogroup_sides) with each side's bag as its aggregate;
+        absent groups get EMPTY (not null) bags; per-input INNER filters
+        empties (SURVEY.md §2.1 #8)."""
+        inner = node.inner or [False] * len(node.inputs)
+        bag_names = [getattr(inp, "alias", None) or f"bag_{idx}"
+                     for idx, inp in enumerate(node.inputs)]
+        bag_types = []
+
+        def bag(idx: int, df: DataFrame, ctx: ExprCompiler) -> list:
+            bag_types.append(T.ArrayType(df.schema))
+            return [F.collect_list(F.struct(*[F.col(c) for c in df.columns]))
+                    .alias(bag_names[idx])]
+
+        out, knames = self._cogroup_sides(node, bag)
         bag_cols = [F.coalesce(F.col(bag_name),
                                F.array().cast(bag_type)).alias(bag_name)
-                    for _, bag_name, bag_type in sides]
-        if len(knames) == 1:
-            group_col = F.col(knames[0]).alias(GROUP_COL)
-        else:
-            group_col = F.struct(*[F.col(n) for n in knames]).alias(GROUP_COL)
-        out = out.select(group_col, *bag_cols)
-        for (_, bag_name, _), is_inner in zip(sides, inner):
+                    for bag_name, bag_type in zip(bag_names, bag_types)]
+        out = out.select(_group_col(knames).alias(GROUP_COL), *bag_cols)
+        for bag_name, is_inner in zip(bag_names, inner):
             if is_inner:
                 out = out.filter(F.size(F.col(bag_name)) > 0)
         placed = self._apply_partitioner(node, out, [GROUP_COL])
@@ -1754,11 +1739,8 @@ class PlanCompiler:
                                  (F.col("__dense") + 1).alias("__dense"))
 
         out_rank = F.col("__dense") if node.dense else F.col("__rank")
-        orig_keys = [ctx.compile(k) for k, _ in node.keys]
-        cond = None
-        for oc, n in zip(orig_keys, key_names):
-            c = oc.eqNullSafe(ranked_keys[n])
-            cond = c if cond is None else cond & c
+        cond = _null_safe_eq([ctx.compile(k) for k, _ in node.keys],
+                             [ranked_keys[n] for n in key_names])
         joined = df.join(F.broadcast(ranked_keys) if n_parts <= 1
                          else ranked_keys, on=cond)
         return joined.select(out_rank.alias(node.name), *df.columns)

@@ -195,36 +195,116 @@ _MACRO_HEAD_RE = re.compile(
     r"DEFINE\s+(\w+)\s*\(([^)]*)\)\s+RETURNS\s+(\w+)\s*\{", re.IGNORECASE)
 
 
-def _balanced_block(src: str, open_idx: int) -> tuple[str, int]:
-    """Return (body, end_idx_after_close) for the brace block opening at
-    open_idx (handles nested braces, e.g. nested FOREACH)."""
-    depth, i = 0, open_idx
-    while i < len(src):
-        if src[i] == "{":
+def _strip_comments(buf: str) -> tuple[str, bool]:
+    """Blank '--' line comments and '/* */' block comments to spaces
+    (newlines and overall length preserved, so line-anchored regexes and
+    match spans keep working), string-aware — mirrors the tokenizer's
+    comment handling. Returns (stripped, open_block):
+    open_block is True when the buffer ends inside an unterminated
+    '/*' (the statement cannot be complete yet)."""
+    out = list(buf)
+    i, n, in_s = 0, len(buf), None
+    open_block = False
+    while i < n:
+        c = buf[i]
+        if in_s:
+            if c == "\\":
+                i += 2
+                continue
+            if c == in_s:
+                in_s = None
+            i += 1
+        elif c in ("'", '"'):
+            in_s = c
+            i += 1
+        elif c == "-" and buf[i:i + 2] == "--":
+            j = buf.find("\n", i)
+            j = n if j < 0 else j
+            for k in range(i, j):
+                out[k] = " "
+            i = j
+        elif buf[i:i + 2] == "/*":
+            j = buf.find("*/", i + 2)
+            end = n if j < 0 else j + 2
+            open_block = j < 0
+            for k in range(i, end):
+                if out[k] != "\n":
+                    out[k] = " "
+            i = end
+        else:
+            i += 1
+    return "".join(out), open_block
+
+
+def _blank_strings(s: str) -> str:
+    """Blank string-literal CONTENTS to spaces (quotes kept) so textual
+    scans (macro/%declare harvesting, brace counting) cannot be fooled
+    by keywords or braces inside literals. Length-preserving: match
+    spans on the blanked copy index into the original text."""
+    out = list(s)
+    i, n, in_s = 0, len(s), None
+    while i < n:
+        c = s[i]
+        if in_s:
+            if c == "\\":
+                out[i] = " "
+                if i + 1 < n:
+                    out[i + 1] = " "
+                i += 2
+                continue
+            if c == in_s:
+                in_s = None
+            else:
+                out[i] = " "
+        elif c in ("'", '"'):
+            in_s = c
+        i += 1
+    return "".join(out)
+
+
+def _balanced_block(scan: str, open_idx: int) -> int:
+    """Index just past the brace that closes the block opening at
+    open_idx (nested braces, e.g. nested FOREACH). ``scan`` is the
+    comment-stripped, string-blanked copy, so braces inside literals
+    and comments do not count."""
+    depth = 0
+    for i in range(open_idx, len(scan)):
+        if scan[i] == "{":
             depth += 1
-        elif src[i] == "}":
+        elif scan[i] == "}":
             depth -= 1
             if depth == 0:
-                return src[open_idx + 1:i], i + 1
-        i += 1
+                return i + 1
     raise PigSyntaxError("unterminated macro block")
+
+
+def _macro_scan(src: str) -> str:
+    """Same-length copy of src with comments and string contents
+    blanked: macro heads, IMPORTs and braces are found on it, and its
+    match spans slice the original text."""
+    return _blank_strings(_strip_comments(src)[0])
 
 
 def expand_macros(src: str) -> str:
     """Inline IMPORTs, collect DEFINE…RETURNS macros, expand call sites.
     Macro-internal aliases are prefixed per-expansion to avoid collisions
     (Pig's alias masking)."""
-    for m in list(_IMPORT_RE.finditer(src)):
-        with open(m.group(1)) as f:
-            src = src.replace(m.group(0), f.read())
+    if not re.search(r"define|import", src, re.IGNORECASE):
+        return src        # no head or IMPORT possible: skip the scans
+    for m in reversed(list(_IMPORT_RE.finditer(_macro_scan(src)))):
+        with open(src[m.start(1):m.end(1)]) as f:
+            src = src[:m.start()] + f.read() + src[m.end():]
 
     macros: dict[str, tuple[list[str], str, str]] = {}
     while True:
-        m = _MACRO_HEAD_RE.search(src)
+        scan = _macro_scan(src)
+        m = _MACRO_HEAD_RE.search(scan)
         if not m:
             break
-        body, end = _balanced_block(src, src.index("{", m.start()))
-        end = src.index(";", end - 1) + 1 if ";" in src[end:end + 3] \
+        open_idx = m.end() - 1
+        end = _balanced_block(scan, open_idx)
+        body = src[open_idx + 1:end - 1]
+        end = scan.index(";", end - 1) + 1 if ";" in scan[end:end + 3] \
             else end
         params = [p.strip() for p in m.group(2).split(",") if p.strip()]
         macros[m.group(1).lower()] = (params, m.group(3), body)

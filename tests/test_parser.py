@@ -184,6 +184,30 @@ def test_param_values_are_text_not_re_templates():
     assert r"matches '\\d+'" in out
 
 
+def test_macro_block_ignores_braces_in_strings():
+    """A '}' inside a string literal in a macro body does not close the
+    macro: the body is brace-matched on a string-blanked copy."""
+    from spork_spark.parser import preprocess
+    out = preprocess("DEFINE m(x) RETURNS y { $y = FILTER $x BY s == '}'; };"
+                     "\nb = m(a);\n", None)
+    assert out.split() == ["b", "=", "FILTER", "a", "BY", "s", "==", "'}';"]
+
+
+def test_commented_out_macro_is_not_defined():
+    """A DEFINE inside a block comment is dead text: it must not replace
+    the live definition of the same macro."""
+    from spork_spark.parser import preprocess
+    out = preprocess("""
+        DEFINE m(x) RETURNS y { $y = FILTER $x BY v > 1; };
+        /* older version:
+        DEFINE m(x) RETURNS y { $y = FILTER $x BY v > 0; };
+        */
+        b = m(a);
+    """, None)
+    assert "b = FILTER a BY v > 1;" in out
+    assert "FILTER a BY v > 0" not in out
+
+
 def test_describe_prints_pig_schema_syntax(eng):
     """DESCRIBE renders Pig's schema syntax — bags as {(…)}, Spark↔Pig
     scalar names translated — not Spark's printSchema tree."""

@@ -699,27 +699,44 @@ def test_percentile_fusion_shares_one_buffer(eng, li):
     """Same-column PERCENTILEs fuse into ONE percentile(c, array(...))
     aggregate (exact percentile is holistic — each unfused percentage
     buffers the whole column), and the fused values are identical to
-    the unfused compile."""
-    def q():
-        bag = col("lineitem")
+    one FOREACH per percentage (a lone PERCENTILE per column has
+    nothing to share a buffer with)."""
+    bag = col("lineitem")
+
+    def q(*pcts):
         return (li.group_by(col("l_returnflag"))
                   .foreach(col("group").alias("f"),
-                           fn("PERCENTILE", bag.get("l_extendedprice"),
-                              lit(0.5)).alias("p50"),
-                           fn("PERCENTILE", bag.get("l_extendedprice"),
-                              lit(0.95)).alias("p95")))
-    fused = q()
+                           *[fn("PERCENTILE", bag.get("l_extendedprice"),
+                                lit(pct)).alias(f"p{i}")
+                             for i, pct in enumerate(pcts)]))
+    fused = q(0.5, 0.95)
     p = plan_of(fused)
     assert "[0.5,0.95]" in p              # one shared array-percentile
     assert p.count("percentile(l_extendedprice") <= 2  # partial+final only
-    eng.spark.conf.set("spark.spork.optimizer.fusePercentiles", "false")
-    try:
-        plain = q()
-        assert "[0.5,0.95]" not in plan_of(plain)
-        assert sorted(map(tuple, fused.df().collect())) == \
-               sorted(map(tuple, plain.df().collect()))
-    finally:
-        eng.spark.conf.set("spark.spork.optimizer.fusePercentiles", "true")
+    p50, p95 = q(0.5), q(0.95)
+    assert "[0.5" not in plan_of(p50) and "0.95]" not in plan_of(p95)
+    singles = [dict(map(tuple, r.df().collect())) for r in (p50, p95)]
+    assert sorted(map(tuple, fused.df().collect())) == \
+           sorted((f, singles[0][f], singles[1][f]) for f in singles[0])
+
+
+def _cogroup_pair(eng, a, b, by, gens):
+    """Run one COGROUP script twice: anti-joined with IsEmpty(tb) (the
+    aggregate-only shape) and with COUNT_STAR(tb) == 0 (the same test,
+    but not an IsEmpty term, so the bags materialize; COUNT would skip
+    tb tuples whose first field is null). Returns the two frames."""
+    from spork_spark.parser import run_script
+    rels_in = {"ta": eng.from_df(a, alias="ta"),
+               "tb": eng.from_df(b, alias="tb")}
+    out = []
+    for test in ("IsEmpty(tb)", "COUNT_STAR(tb) == 0"):
+        script = f"""
+            cg = COGROUP ta BY {by}, tb BY {by};
+            anti = FILTER cg BY {test};
+            out = FOREACH anti GENERATE {gens};
+        """
+        out.append(run_script(eng, script, relations=rels_in)["out"].df())
+    return out
 
 
 def test_cogroup_agg_fusion_skips_bags(eng, spark):
@@ -727,30 +744,46 @@ def test_cogroup_agg_fusion_skips_bags(eng, spark):
     per-side partial aggregation (no collect_list), with values — incl.
     null keys and empty-bag COUNT/SUM semantics — identical to the
     materialized-bag path."""
-    from spork_spark.parser import run_script
     a = spark.createDataFrame(
         [(1, 10.0), (1, 5.0), (2, 1.0), (None, 7.0)], "k int, v double")
     b = spark.createDataFrame(
         [(2, "x"), (3, "y"), (None, "z")], "k int, s string")
-    rels_in = {"ta": eng.from_df(a, alias="ta"),
-               "tb": eng.from_df(b, alias="tb")}
-    script = """
-        cg = COGROUP ta BY k, tb BY k;
-        anti = FILTER cg BY IsEmpty(tb);
-        out = FOREACH anti GENERATE group AS k, COUNT_STAR(ta) AS n,
-                                    SUM(ta.v) AS sv;
-    """
-    rels = run_script(eng, script, relations=rels_in)
-    fused = rels["out"].df()
+    fused, plain = _cogroup_pair(
+        eng, a, b, "k", "group AS k, COUNT_STAR(ta) AS n, SUM(ta.v) AS sv")
     assert "collect_list" not in plan_of(fused)
-    eng.spark.conf.set("spark.spork.optimizer.fuseCogroupAgg", "false")
-    try:
-        plain = run_script(eng, script, relations=rels_in)["out"].df()
-        assert "collect_list" in plan_of(plain)
-        assert sorted(map(tuple, fused.collect()), key=str) == \
-               sorted(map(tuple, plain.collect()), key=str)
-    finally:
-        eng.spark.conf.set("spark.spork.optimizer.fuseCogroupAgg", "true")
+    assert "collect_list" in plan_of(plain)
+    assert sorted(map(tuple, fused.collect()), key=str) == \
+           sorted(map(tuple, plain.collect()), key=str)
+
+
+def test_cogroup_agg_fusion_multi_key(eng, spark):
+    """A two-key COGROUP with aggregate-only consumers takes the same
+    fused path as a one-key COGROUP: no collect_list, and the rows —
+    null keys in either position forming their own groups, the struct
+    `group`, COUNT_STAR 0 over the empty tb bag, SUM null over only
+    nulls — equal the materialized-bag twin's."""
+    a = spark.createDataFrame(
+        [(1, 1, 10.0), (1, 1, 5.0), (1, 2, 1.0), (2, 1, 4.0),
+         (None, 1, 7.0), (None, 1, 2.0), (1, None, 3.0), (None, None, 8.0),
+         (3, 3, None)],
+        "k1 int, k2 int, v double")
+    b = spark.createDataFrame(
+        [(1, 2, "x"), (2, 1, "y"), (None, 1, "z"), (4, 4, "w")],
+        "k1 int, k2 int, s string")
+    fused, plain = _cogroup_pair(
+        eng, a, b, "(k1, k2)",
+        "group AS g, COUNT_STAR(ta) AS n, SUM(ta.v) AS sv, "
+        "COUNT_STAR(tb) AS nb")
+    assert "collect_list" not in plan_of(fused)
+    assert "collect_list" in plan_of(plain)
+    assert fused.columns == plain.columns == ["g", "n", "sv", "nb"]
+    rows = sorted(map(tuple, fused.collect()), key=str)
+    assert rows == sorted(map(tuple, plain.collect()), key=str)
+    assert sorted(((tuple(g), n, sv, nb) for g, n, sv, nb in rows),
+                  key=str) == sorted([((1, 1), 2, 15.0, 0),
+                                      ((1, None), 1, 3.0, 0),
+                                      ((None, None), 1, 8.0, 0),
+                                      ((3, 3), 1, None, 0)], key=str)
 
 
 def test_cogroup_agg_fusion_bails_on_group_deref(eng, spark):
@@ -777,13 +810,6 @@ def test_cogroup_agg_fusion_bails_on_group_deref(eng, spark):
     rows = sorted(map(tuple, df.collect()))
     assert df.columns == ["kf", "n"]
     assert rows == [(1, 1), (1, 1)]  # field value per struct group
-    # identical to the explicitly unfused path
-    eng.spark.conf.set("spark.spork.optimizer.fuseCogroupAgg", "false")
-    try:
-        plain = run_script(eng, script, relations=rels_in)["out"].df()
-        assert sorted(map(tuple, plain.collect())) == rows
-    finally:
-        eng.spark.conf.set("spark.spork.optimizer.fuseCogroupAgg", "true")
 
 
 _A_ROWS = [(1, 10), (1, 20), (2, 5), (3, -1)]
