@@ -12,56 +12,26 @@ environment, and errors return to the prompt instead of exiting.
 from __future__ import annotations
 
 import argparse
-import re
 import sys
 
-from .parser.pig import (_MACRO_HEAD_RE, _balanced_block, _blank_strings,
-                         _strip_comments)
+from .parser.pig import _code_view, _live_declares, _macro_defs
 
 
 def _statement_complete(buf: str) -> bool:
-    """True when the buffer holds >= 1 complete statement: every {...}
-    block closed, no open string or block comment, and the last
-    significant character is ';' (comments ignored)."""
-    stripped, open_block = _strip_comments(buf)
-    if open_block:
-        return False
-    depth, in_s, last_sig = 0, None, ""
-    i, n = 0, len(stripped)
-    while i < n:
-        c = stripped[i]
-        if in_s:
-            if c == "\\":
-                i += 2
-                continue
-            if c == in_s:
-                in_s = None
-            last_sig = c
-        elif c in ("'", '"'):
-            in_s = c
-            last_sig = c
-        else:
-            if c == "{":
-                depth += 1
-            elif c == "}":
-                depth -= 1
-            if not c.isspace():
-                last_sig = c
-        i += 1
-    return in_s is None and depth <= 0 and last_sig == ";"
-
-
-_DECL_RE = re.compile(r"(?m)^[ \t]*%(?:declare|default)\b[^\n]*$")
+    """True when the buffer holds >= 1 complete statement: no open
+    string, backtick command or block comment, every {...} block
+    closed, and the last code character is ';'."""
+    view, open_span = _code_view(buf)
+    return not open_span and view.count("{") <= view.count("}") \
+        and view.rstrip().endswith(";")
 
 
 def _only_preproc(buf: str) -> bool:
     """%declare/%default are LINE-terminated (no ';' required)."""
-    stripped, open_block = _strip_comments(buf)
-    if open_block:
-        return False
-    lines = [ln.strip() for ln in stripped.splitlines()]
-    lines = [ln for ln in lines if ln]
-    return bool(lines) and all(ln.startswith("%") for ln in lines)
+    view, open_span = _code_view(buf)
+    lines = [ln.strip() for ln in view.splitlines() if ln.strip()]
+    return not open_span and bool(lines) \
+        and all(ln.startswith("%") for ln in lines)
 
 
 def _textual_state(chunk: str) -> list[str]:
@@ -69,21 +39,13 @@ def _textual_state(chunk: str) -> list[str]:
     DEFINEs (brace-scanned, nested blocks included) and
     %declare/%default lines — so they can be replayed before later
     statements (macro expansion and param substitution are pure text
-    passes; replaying them is idempotent). Scanning runs on a comment-
-    stripped, string-blanked copy (a commented-out or quoted DEFINE
-    must NOT be harvested); extraction indexes back into the comment-
-    stripped text, so harvested macro bodies keep their literals."""
-    text, _ = _strip_comments(chunk)
-    scan = _blank_strings(text)
-    out = [text[m.start():m.end()] + "\n" for m in _DECL_RE.finditer(scan)]
-    for m in _MACRO_HEAD_RE.finditer(scan):
-        i = _balanced_block(scan, m.end() - 1)
-        while i < len(scan) and scan[i] in " \t\n;":
-            i += 1
-            if scan[i - 1] == ";":
-                break
-        out.append(text[m.start():i] + "\n")
-    return out
+    passes; replaying them is idempotent). Both are found on the code
+    view with the finders preprocessing uses, so a commented-out or
+    quoted DEFINE or %declare is NOT harvested; harvested text slices
+    the chunk, so macro bodies keep their literals."""
+    view, _ = _code_view(chunk)
+    return [m.group().strip() + "\n" for m in _live_declares(chunk, view)] \
+        + [chunk[m.start():end] + "\n" for m, _, end in _macro_defs(view)]
 
 
 def grunt(engine, params: dict) -> int:
@@ -110,8 +72,7 @@ def grunt(engine, params: dict) -> int:
             # A piped session may end without the final ';' — silently
             # dropping the trailing statement (and exiting 0) would
             # diverge from file mode, which parses whatever is there.
-            leftover, _ = _strip_comments(buf)
-            if not leftover.strip():
+            if not _code_view(buf)[0].strip():
                 return 0
             try:
                 p.run("".join(prelude) + buf, params)

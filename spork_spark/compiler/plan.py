@@ -48,12 +48,17 @@ def _null_safe_eq(left: list[Column], right: list[Column]) -> Column:
                                             for l, r in zip(left, right)))
 
 
-def _group_col(names: list[str]) -> Column:
+def _group_col(names: list[str], fields: list[str] | None = None
+               ) -> Column:
     """The `group` value over its key columns: the key itself for one
-    key, a struct of the keys for several."""
+    key, a struct of the keys for several (its fields renamed to
+    ``fields`` when given)."""
     if len(names) == 1:
         return F.col(names[0])
-    return F.struct(*[F.col(n) for n in names])
+    cols = [F.col(n) for n in names]
+    if fields:
+        cols = [c.alias(f) for c, f in zip(cols, fields)]
+    return F.struct(*cols)
 
 
 class PlanCompiler:
@@ -828,7 +833,8 @@ class PlanCompiler:
             inputs = list(node.inputs)
             inputs[side] = new_node
             nj = L.Join(inputs, [list(ks) for ks in node.keys],
-                        node.how, node.strategy, node.parallel)
+                        node.how, node.strategy, node.parallel,
+                        node.input_names)
             nj.alias = getattr(node, "alias", None)
             new_node = nj
 
@@ -1324,8 +1330,7 @@ class PlanCompiler:
             # shape would silently drop it, so fall back to the bag
             # path (r10 advisor).
             return None
-        bag_names = [getattr(inp, "alias", None) or f"bag_{i}"
-                     for i, inp in enumerate(cur.inputs)]
+        bag_names = cur.input_names
         if len(set(bag_names)) != len(bag_names) or GROUP_COL in bag_names:
             return None
         parsed_terms = []
@@ -1371,7 +1376,7 @@ class PlanCompiler:
                 for gi, pg in enumerate(plan_gens)
                 if pg[0] == "agg" and pg[1] == idx]
 
-        out, knames = self._cogroup_sides(cur, partials)
+        out, knames, group = self._cogroup_sides(cur, partials)
         inner_flags = cur.inner or [False] * len(cur.inputs)
         for idx, is_inner in enumerate(inner_flags):
             if is_inner:
@@ -1389,7 +1394,7 @@ class PlanCompiler:
         final = []
         for gi, pg in enumerate(plan_gens):
             if pg[0] == "group":
-                final.append(_group_col(knames).alias(pg[1]))
+                final.append(group.alias(pg[1]))
             else:
                 c = F.col(f"__a{gi}")
                 if pg[4] in ("COUNT", "COUNT_STAR"):
@@ -1403,8 +1408,10 @@ class PlanCompiler:
         aggregates>), then a FULL OUTER join of the sides on the keys.
         ``side_aggs(idx, df, ctx)`` gives input idx's aggregate columns
         — its bag (_c_cogroup) or its partial aggregates
-        (_try_fuse_cogroup_agg). Returns the joined frame and its key
-        column names (__k0, __k1, …). The key join is null-safe
+        (_try_fuse_cogroup_agg). Returns the joined frame, its key
+        column names (__k0, __k1, …) and the `group` column over them,
+        whose fields are named after the first input's keys as GROUP
+        names them (_key_name). The key join is null-safe
         (_null_safe_eq) with the keys coalesced: a USING join would
         split the null-key group per side."""
         knames = [f"__k{i}" for i in range(len(node.keys[0]))]
@@ -1429,7 +1436,8 @@ class PlanCompiler:
                 out = out.withColumn(lname,
                                      F.coalesce(F.col(lname), F.col(rname))) \
                          .drop(rname)
-        return out, knames
+        fields = [self._key_name(k, i) for i, k in enumerate(node.keys[0])]
+        return out, knames, _group_col(knames, fields)
 
     def _c_cogroup(self, node: L.CoGroup) -> DataFrame:
         """COGROUP a BY k, b BY k → (group, bag_a, bag_b): the COGROUP
@@ -1437,8 +1445,7 @@ class PlanCompiler:
         absent groups get EMPTY (not null) bags; per-input INNER filters
         empties (SURVEY.md §2.1 #8)."""
         inner = node.inner or [False] * len(node.inputs)
-        bag_names = [getattr(inp, "alias", None) or f"bag_{idx}"
-                     for idx, inp in enumerate(node.inputs)]
+        bag_names = node.input_names
         bag_types = []
 
         def bag(idx: int, df: DataFrame, ctx: ExprCompiler) -> list:
@@ -1446,11 +1453,11 @@ class PlanCompiler:
             return [F.collect_list(F.struct(*[F.col(c) for c in df.columns]))
                     .alias(bag_names[idx])]
 
-        out, knames = self._cogroup_sides(node, bag)
+        out, _, group = self._cogroup_sides(node, bag)
         bag_cols = [F.coalesce(F.col(bag_name),
                                F.array().cast(bag_type)).alias(bag_name)
                     for bag_name, bag_type in zip(bag_names, bag_types)]
-        out = out.select(_group_col(knames).alias(GROUP_COL), *bag_cols)
+        out = out.select(group.alias(GROUP_COL), *bag_cols)
         for bag_name, is_inner in zip(bag_names, inner):
             if is_inner:
                 out = out.filter(F.size(F.col(bag_name)) > 0)
@@ -1485,7 +1492,7 @@ class PlanCompiler:
                 if d is not None:
                     dfs[idx], explodes = d
                     post_explodes.extend(explodes)
-        dfs = self._disambiguate(dfs, node)
+        dfs = self._disambiguate(dfs, node.input_names, node.keys)
         left = dfs[0]
         lkeys = [self._ctx(left).compile(k) for k in node.keys[0]]
         # key-cast discard probes ride each join INPUT (POCast warns at
@@ -1645,29 +1652,32 @@ class PlanCompiler:
             explodes.append((tmp, alias))
         return self._apply_generators(child_df, new_gens), explodes
 
-    def _disambiguate(self, dfs: list[DataFrame], node) -> list[DataFrame]:
-        """Pig join output schema qualifies colliding names as alias::col;
-        non-colliding names stay bare (Pig's resolution rule)."""
+    def _disambiguate(self, dfs: list[DataFrame], names: list[str],
+                      keys: list[list[E.Expr]]) -> list[DataFrame]:
+        """Pig join/cross output schema qualifies colliding names as
+        name::col, name being the input's relation name; non-colliding
+        names stay bare (Pig's resolution rule)."""
         from collections import Counter
         counts = Counter(c for df in dfs for c in df.columns)
         out = []
         for idx, df in enumerate(dfs):
-            alias = getattr(node.inputs[idx], "alias", None) or f"in{idx}"
-            renames = {c: f"{alias}::{c}" for c in df.columns if counts[c] > 1}
+            renames = {c: f"{names[idx]}::{c}" for c in df.columns
+                       if counts[c] > 1}
             if renames:
                 df = df.withColumnsRenamed(renames)
                 # key exprs referencing the bare name must follow the rename
-                node.keys[idx] = [E.transform(
+                keys[idx] = [E.transform(
                     k, lambda n: E.Col(renames[n.name])
                     if isinstance(n, E.Col) and n.name in renames else None)
-                    for k in node.keys[idx]]
+                    for k in keys[idx]]
             out.append(df)
         return out
 
     def _c_cross(self, node: L.Cross) -> DataFrame:
         dfs = self._compile(node.inputs[0]), *[self._compile(i)
                                                for i in node.inputs[1:]]
-        dfs = self._disambiguate(list(dfs), _CrossShim(node.inputs))
+        dfs = self._disambiguate(list(dfs), node.input_names,
+                                 [[] for _ in node.inputs])
         out = dfs[0]
         for df in dfs[1:]:
             out = out.crossJoin(df)
@@ -1856,10 +1866,3 @@ def _pipe_with_cwd(command: str):
             raise RuntimeError(
                 f"STREAM command exited with status {rc}: {command!r}")
     return run
-
-
-class _CrossShim:
-    """Adapter so _disambiguate can treat CROSS like a keyless join."""
-    def __init__(self, inputs):
-        self.inputs = inputs
-        self.keys = [[] for _ in inputs]

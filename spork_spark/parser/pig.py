@@ -37,6 +37,7 @@ import os
 import re
 import sys
 from dataclasses import dataclass
+from pathlib import Path
 
 from ..plans import expressions as E
 from ..plans.relation import Engine, Relation
@@ -51,11 +52,15 @@ _TOKEN_RE = re.compile(r"""
   | (?P<number>\d+\.\d+([eE][+-]?\d+)?[fF]?|\d+[eE][+-]?\d+[fF]?|\d+[lLfF]?)
   | (?P<string>'(?:[^'\\]|\\.)*')
   | (?P<backtick>`[^`]*`)
+  | (?P<dqstring>"(?:[^"\\]|\\.)*")
+  | (?P<open_comment>/\*.*)
+  | (?P<open_quote>'(?:[^'\\]|\\.)*\\?\Z|"(?:[^"\\]|\\.)*\\?\Z|`.*)
   | (?P<dcolon>::)
   | (?P<op>==|!=|<=|>=|\#|\?|:|<|>|\+|-|\*|/|%|\(|\)|\{|\}|\[|\]|,|;|\.\.|\.|=)
   | (?P<dollar>\$\d+)
   | (?P<param>\$[A-Za-z_]\w*)
   | (?P<ident>[A-Za-z_]\w*)
+  | (?P<bad>.)
 """, re.VERBOSE | re.DOTALL)
 
 _KEYWORDS = {
@@ -79,16 +84,34 @@ class Tok:
 
 
 def tokenize(src: str) -> list[Tok]:
-    toks, i = [], 0
-    while i < len(src):
-        m = _TOKEN_RE.match(src, i)
-        if not m:
-            raise PigSyntaxError(f"bad character {src[i]!r} at {i}")
-        i = m.end()
+    """Split src into tokens with the one Pig lexer, ``_TOKEN_RE``
+    (pig:src/org/apache/pig/parser/QueryLexer.g). Every text pass reads
+    that lexer: this tokenizer, parameter and macro expansion, the
+    grunt-command split and the grunt prompt (through ``_code_view``).
+    The lexical rules:
+
+      - ``--`` comments run to the end of the line; ``/* */`` comments do
+        not nest;
+      - string literals are single-quoted, with backslash escapes;
+      - a backtick command runs to the next backtick, with no escapes;
+      - ``"`` quotes only grunt shell arguments (``sh echo "a;b"``): the
+        parser rejects it, but it spans like a string so the split cannot
+        break inside it.
+
+    The scan is total: every character falls in exactly one match. An
+    unterminated ``/*``, quote or backtick span runs to the end of the
+    text (groups ``open_comment``, ``open_quote``), and any other
+    character is a one-character ``bad`` match. Whitespace and comments
+    are dropped; a ``bad``, open or ``"`` match raises PigSyntaxError."""
+    toks = []
+    for m in _TOKEN_RE.finditer(src):
         kind = m.lastgroup
-        text = m.group()
         if kind in ("ws", "comment"):
             continue
+        if kind in ("bad", "dqstring") or kind in _OPEN:
+            raise PigSyntaxError(f"bad character {src[m.start()]!r} at "
+                                 f"{m.start()}")
+        text = m.group()
         if kind == "ident" and text.lower() in _KEYWORDS:
             toks.append(Tok("kw", text.lower(), m.start()))
         elif kind == "dcolon":
@@ -97,6 +120,39 @@ def tokenize(src: str) -> list[Tok]:
             toks.append(Tok(kind, text, m.start()))
     toks.append(Tok("eof", "", len(src)))
     return toks
+
+
+_NOT_NEWLINE = re.compile(r"[^\n]")
+_OPEN = ("open_comment", "open_quote")
+_BLANKED = ("comment", "string", "backtick", "dqstring") + _OPEN
+
+
+def _splice(src: str, edits) -> str:
+    """src with each (start, end, text) of ``edits`` — in order, not
+    overlapping — put in place of src[start:end]."""
+    out, last = [], 0
+    for start, end, text in edits:
+        out += [src[last:start], text]
+        last = end
+    return "".join(out) + src[last:]
+
+
+def _code_view(src: str) -> tuple[str, bool]:
+    """The lexer's code view of src: a same-length copy in which
+    comments are blanked and the contents of strings and backtick
+    commands are blanked (delimiters kept), newlines everywhere kept.
+    Textual passes match on the view and slice src with its spans, so
+    nothing inside a comment or a literal can look like code. The flag
+    is True when src ends inside an open span."""
+    spans = [m for m in _TOKEN_RE.finditer(src) if m.lastgroup in _BLANKED]
+
+    def blank(m: re.Match) -> tuple[int, int, str]:
+        s, e = m.span()
+        if m.lastgroup not in ("comment", "open_comment"):
+            s, e = s + 1, e - (m.lastgroup != "open_quote")  # delimiters
+        return s, e, _NOT_NEWLINE.sub(" ", src[s:e])
+    return (_splice(src, map(blank, spans)),
+            bool(spans) and spans[-1].lastgroup in _OPEN)
 
 
 class PigSyntaxError(SyntaxError):
@@ -156,9 +212,21 @@ def read_param_file(path: str) -> dict[str, str]:
     return params
 
 
+def _live_declares(src: str, view: str | None = None) -> list[re.Match]:
+    """The %declare/%default lines of src that are code: matched on src,
+    kept when the code view keeps their '%' (one inside a comment or a
+    literal is dead text)."""
+    if "%declare" not in src and "%default" not in src:
+        return []
+    view = _code_view(src)[0] if view is None else view
+    return [m for m in _DECLARE_RE.finditer(src)
+            if view[m.start(1) - 1] == "%"]
+
+
 def substitute_params(src: str, params: dict[str, str] | None) -> str:
     params = dict(params or {})
-    def grab(m):
+    declares = _live_declares(src)
+    for m in declares:
         kind, name, val = m.groups()
         if len(val) >= 2 and val[0] == "`" and val[-1] == "`":
             # Pig command substitution (pig:…/tools/parameters/
@@ -173,8 +241,7 @@ def substitute_params(src: str, params: dict[str, str] | None) -> str:
             val = val.strip("'\"")
         if kind == "declare" or name not in params:
             params[name] = val
-        return ""
-    src = _DECLARE_RE.sub(grab, src)
+    src = _splice(src, ((m.start(), m.end(), "") for m in declares))
     for k, v in params.items():
         # function replacement: values are TEXT, not re templates — a
         # regex value like '\d+' must neither crash ("bad escape") nor
@@ -193,125 +260,54 @@ _IMPORT_RE = re.compile(r"^\s*IMPORT\s+'([^']+)'\s*;\s*$",
                         re.IGNORECASE | re.MULTILINE)
 _MACRO_HEAD_RE = re.compile(
     r"DEFINE\s+(\w+)\s*\(([^)]*)\)\s+RETURNS\s+(\w+)\s*\{", re.IGNORECASE)
+_BRACE_RE = re.compile(r"[{}]")
+_COMMA_RE = re.compile(",")
 
 
-def _strip_comments(buf: str) -> tuple[str, bool]:
-    """Blank '--' line comments and '/* */' block comments to spaces
-    (newlines and overall length preserved, so line-anchored regexes and
-    match spans keep working), string-aware — mirrors the tokenizer's
-    comment handling. Returns (stripped, open_block):
-    open_block is True when the buffer ends inside an unterminated
-    '/*' (the statement cannot be complete yet)."""
-    out = list(buf)
-    i, n, in_s = 0, len(buf), None
-    open_block = False
-    while i < n:
-        c = buf[i]
-        if in_s:
-            if c == "\\":
-                i += 2
-                continue
-            if c == in_s:
-                in_s = None
-            i += 1
-        elif c in ("'", '"'):
-            in_s = c
-            i += 1
-        elif c == "-" and buf[i:i + 2] == "--":
-            j = buf.find("\n", i)
-            j = n if j < 0 else j
-            for k in range(i, j):
-                out[k] = " "
-            i = j
-        elif buf[i:i + 2] == "/*":
-            j = buf.find("*/", i + 2)
-            end = n if j < 0 else j + 2
-            open_block = j < 0
-            for k in range(i, end):
-                if out[k] != "\n":
-                    out[k] = " "
-            i = end
-        else:
-            i += 1
-    return "".join(out), open_block
-
-
-def _blank_strings(s: str) -> str:
-    """Blank string-literal CONTENTS to spaces (quotes kept) so textual
-    scans (macro/%declare harvesting, brace counting) cannot be fooled
-    by keywords or braces inside literals. Length-preserving: match
-    spans on the blanked copy index into the original text."""
-    out = list(s)
-    i, n, in_s = 0, len(s), None
-    while i < n:
-        c = s[i]
-        if in_s:
-            if c == "\\":
-                out[i] = " "
-                if i + 1 < n:
-                    out[i + 1] = " "
-                i += 2
-                continue
-            if c == in_s:
-                in_s = None
-            else:
-                out[i] = " "
-        elif c in ("'", '"'):
-            in_s = c
-        i += 1
-    return "".join(out)
-
-
-def _balanced_block(scan: str, open_idx: int) -> int:
-    """Index just past the brace that closes the block opening at
-    open_idx (nested braces, e.g. nested FOREACH). ``scan`` is the
-    comment-stripped, string-blanked copy, so braces inside literals
-    and comments do not count."""
-    depth = 0
-    for i in range(open_idx, len(scan)):
-        if scan[i] == "{":
-            depth += 1
-        elif scan[i] == "}":
-            depth -= 1
+def _macro_defs(view: str):
+    """Yield (head match, close, end) for each DEFINE … RETURNS … {…}
+    macro in the code view: close is just past the brace that closes
+    its body (nested blocks, e.g. nested FOREACH, counted), end also
+    past an optional ';' within the next three characters."""
+    pos = 0
+    while m := _MACRO_HEAD_RE.search(view, pos):
+        depth = 0
+        for b in _BRACE_RE.finditer(view, m.end() - 1):
+            depth += 1 if b.group() == "{" else -1
             if depth == 0:
-                return i + 1
-    raise PigSyntaxError("unterminated macro block")
-
-
-def _macro_scan(src: str) -> str:
-    """Same-length copy of src with comments and string contents
-    blanked: macro heads, IMPORTs and braces are found on it, and its
-    match spans slice the original text."""
-    return _blank_strings(_strip_comments(src)[0])
+                break
+        else:
+            raise PigSyntaxError("unterminated macro block")
+        close = pos = b.end()
+        if ";" in view[close:close + 3]:
+            pos = view.index(";", close) + 1
+        yield m, close, pos
 
 
 def expand_macros(src: str) -> str:
     """Inline IMPORTs, collect DEFINE…RETURNS macros, expand call sites.
     Macro-internal aliases are prefixed per-expansion to avoid collisions
-    (Pig's alias masking)."""
+    (Pig's alias masking). Every match runs on the code view, so
+    nothing inside a comment or a literal is a head, a call or an
+    alias."""
     if not re.search(r"define|import", src, re.IGNORECASE):
         return src        # no head or IMPORT possible: skip the scans
-    for m in reversed(list(_IMPORT_RE.finditer(_macro_scan(src)))):
-        with open(src[m.start(1):m.end(1)]) as f:
-            src = src[:m.start()] + f.read() + src[m.end():]
-
-    macros: dict[str, tuple[list[str], str, str]] = {}
-    while True:
-        scan = _macro_scan(src)
-        m = _MACRO_HEAD_RE.search(scan)
-        if not m:
-            break
-        open_idx = m.end() - 1
-        end = _balanced_block(scan, open_idx)
-        body = src[open_idx + 1:end - 1]
-        end = scan.index(";", end - 1) + 1 if ";" in scan[end:end + 3] \
-            else end
-        params = [p.strip() for p in m.group(2).split(",") if p.strip()]
-        macros[m.group(1).lower()] = (params, m.group(3), body)
-        src = src[:m.start()] + src[end:]
-
-    if not macros:
+    view = _code_view(src)[0]
+    imports = list(_IMPORT_RE.finditer(view))
+    if imports:
+        src = _splice(src, [(m.start(), m.end(),
+                             Path(src[m.start(1):m.end(1)]).read_text())
+                            for m in imports])
+        view = _code_view(src)[0]
+    defs = list(_macro_defs(view))
+    if not defs:
         return src
+    macros: dict[str, tuple[list[str], str, str]] = {}
+    for m, close, _ in defs:
+        params = [p.strip() for p in m.group(2).split(",") if p.strip()]
+        macros[m.group(1).lower()] = (params, m.group(3),
+                                      src[m.end():close - 1])
+    src = _splice(src, ((m.start(), end, "") for m, _, end in defs))
 
     names = "|".join(re.escape(k) for k in macros)
     call_re = re.compile(
@@ -320,14 +316,21 @@ def expand_macros(src: str) -> str:
     # RETURNS void macros are called as bare statements — `cleanup(a);`
     # (pig:…/parser/QueryParserDriver: macro with no return alias)
     void_re = re.compile(
-        r"^(\s*)(" + names + r")\s*\(([^)]*)\)\s*;",
+        r"^(\s*)()(" + names + r")\s*\(([^)]*)\)\s*;",
         re.IGNORECASE | re.MULTILINE)
     counter = [0]
 
-    def expand_body(name: str, argstr: str, lhs: str | None,
-                    indent: str) -> str:
+    def expand(m: re.Match, src: str) -> str:
+        indent = src[m.start(1):m.end(1)]
+        lhs, name = m.group(2) or None, m.group(3)
         params, ret, body = macros[name.lower()]
-        args = [a.strip() for a in argstr.split(",")] if argstr.strip() else []
+        # arguments split at the commas of the code view: a comma
+        # inside a string literal does not split
+        a0, a1 = m.span(4)
+        cuts = [a0 - 1] + [c.start() for c in
+                           _COMMA_RE.finditer(m.string, a0, a1)] + [a1]
+        args = [src[i + 1:j].strip() for i, j in zip(cuts, cuts[1:])] \
+            if m.group(4).strip() else []
         if len(args) != len(params):
             raise PigSyntaxError(
                 f"macro {name} expects {len(params)} args, got {len(args)}")
@@ -347,26 +350,25 @@ def expand_macros(src: str) -> str:
         if lhs is not None:
             # the return alias is referenced as $name inside the body
             text = re.sub(rf"\${ret}\b", lambda m: lhs, text)
-        # prefix macro-internal aliases to avoid clobbering outer scope
-        internal = set(re.findall(r"^\s*(\w+)\s*=", text, re.MULTILINE))
+        # prefix macro-internal aliases to avoid clobbering outer scope;
+        # only code is renamed, never a literal or a comment
+        view = _code_view(text)[0]
+        internal = set(re.findall(r"^\s*(\w+)\s*=", view, re.MULTILINE))
         internal.discard(lhs)
-        for alias in internal:
-            text = re.sub(rf"\b{alias}\b", f"__m{counter[0]}_{alias}", text)
+        if internal:
+            alias_re = re.compile(
+                r"\b(?:" + "|".join(map(re.escape, internal)) + r")\b")
+            text = _splice(text, ((a.start(), a.end(),
+                                   f"__m{counter[0]}_{a.group()}")
+                                  for a in alias_re.finditer(view)))
         return indent + text
-
-    def expand(m):
-        indent, lhs, name, argstr = m.groups()
-        return expand_body(name, argstr, lhs, indent)
-
-    def expand_void(m):
-        indent, name, argstr = m.groups()
-        return expand_body(name, argstr, None, indent)
 
     prev = None
     while prev != src:
         prev = src
-        src = call_re.sub(expand, src)
-        src = void_re.sub(expand_void, src)
+        for rx in (call_re, void_re):
+            src = _splice(src, [(m.start(), m.end(), expand(m, src))
+                                for m in rx.finditer(_code_view(src)[0])])
     return src
 
 
@@ -386,7 +388,8 @@ _GRUNT_CMDS = {"fs", "sh", "rmf", "cat", "mkdir", "rm", "cp", "mv", "ls",
                "exec", "run", "kill", "pwd", "cd", "copytolocal",
                "copyfromlocal", "aliases", "help"}
 
-_GRUNT_HEAD = re.compile(r"^\s*([A-Za-z_]\w*)\b")
+_GRUNT_HEAD = re.compile(r"\s*([A-Za-z_]\w*)\b")
+_STMT_MARK_RE = re.compile(r"[{};]")
 
 
 def _extract_grunt_statements(src: str) -> tuple[str, list[str]]:
@@ -394,47 +397,25 @@ def _extract_grunt_statements(src: str) -> tuple[str, list[str]]:
     tokenization, replacing each with a `__grunt__ N;` marker. Grunt
     lines carry shell metacharacters, quotes, and paths that the Pig
     tokenizer rightly rejects — and a ';' inside a quoted sh argument
-    must not end the statement. The scan tracks '…'/"…" strings, `--`
-    line comments, `/* */` block comments, and {} nesting (a nested
-    FOREACH body's inner ';' is not a statement boundary)."""
-    out, cmds = [], []
-    i, start, depth = 0, 0, 0
-    n = len(src)
-    while i < n:
-        ch = src[i]
-        if ch in "'\"":
-            q = ch
-            i += 1
-            while i < n and src[i] != q:
-                i += 2 if src[i] == "\\" else 1
-            i += 1
+    must not end the statement. Statements end at the ';'s of the code
+    view at brace depth 0 (a nested FOREACH body's inner ';' is not a
+    statement boundary; one in a comment, literal or backtick command
+    is not code)."""
+    view, _ = _code_view(src)
+    edits, cmds, start, depth = [], [], 0, 0
+    for m in _STMT_MARK_RE.finditer(view):
+        if m.group() != ";":
+            depth = depth + 1 if m.group() == "{" else max(0, depth - 1)
             continue
-        if ch == "-" and src.startswith("--", i):
-            j = src.find("\n", i)
-            i = n if j < 0 else j + 1
+        if depth:
             continue
-        if ch == "/" and src.startswith("/*", i):
-            j = src.find("*/", i + 2)
-            i = n if j < 0 else j + 2
-            continue
-        if ch == "{":
-            depth += 1
-        elif ch == "}":
-            depth = max(0, depth - 1)
-        elif ch == ";" and depth == 0:
-            stmt = src[start:i]
-            m = _GRUNT_HEAD.match(stmt)
-            rest = stmt[m.end():].lstrip() if m else ""
-            if m and m.group(1).lower() in _GRUNT_CMDS \
-                    and not rest.startswith("="):
-                cmds.append(stmt.strip())
-                out.append(f" __grunt__ {len(cmds) - 1};")
-            else:
-                out.append(src[start:i + 1])
-            start = i + 1
-        i += 1
-    out.append(src[start:])
-    return "".join(out), cmds
+        head = _GRUNT_HEAD.match(view, start, m.start())
+        if head and head.group(1).lower() in _GRUNT_CMDS \
+                and not view[head.end():m.start()].lstrip().startswith("="):
+            cmds.append(src[head.start(1):m.start()].strip())
+            edits.append((start, m.end(), f" __grunt__ {len(cmds) - 1};"))
+        start = m.end()
+    return _splice(src, edits), cmds
 
 
 def _strip_scheme(p: str) -> str:
@@ -1443,8 +1424,7 @@ class PigParser:
             # COGROUP output carries one bag per input, named after the
             # input relation (compiler bag_name rule) — all addressable
             # from the inner block (FOREACH cg { x = CROSS a, b; … })
-            for cg_idx, cg_inp in enumerate(src.node.inputs):
-                nm = getattr(cg_inp, "alias", None) or f"bag_{cg_idx}"
+            for nm in src.node.input_names:
                 bag_env[nm] = E.Col(nm)
 
         def lower_inner_expr(e: E.Expr, var: E.LambdaVar) -> E.Expr:

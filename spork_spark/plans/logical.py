@@ -91,6 +91,8 @@ class CoGroup(LogicalOp):
     inputs: list[LogicalOp]
     keys: list[list[Expr]]
     inner: list[bool] = field(default_factory=list)  # per-input INNER flag
+    # each input's relation name: Pig names the bags after them
+    input_names: list[str] = field(default_factory=list)
 
     @property
     def children(self):
@@ -111,6 +113,8 @@ class Join(LogicalOp):
     how: str = "inner"              # inner left right full semi anti
     strategy: str = "default"
     parallel: int | None = None
+    # each input's relation name: colliding columns become name::col
+    input_names: list[str] = field(default_factory=list)
 
     @property
     def children(self):
@@ -121,6 +125,7 @@ class Join(LogicalOp):
 class Cross(LogicalOp):
     """CROSS a, b (LOCross; GFCross parallelization is Spark-native)."""
     inputs: list[LogicalOp]
+    input_names: list[str] = field(default_factory=list)  # as Join's
 
     @property
     def children(self):

@@ -168,19 +168,23 @@ class Relation:
 
     def cogroup(self, keys: list[Expr], *others: tuple["Relation", list[Expr]],
                 inner: list[bool] | None = None) -> "Relation":
-        inputs = [self.node] + [r.node for r, _ in others]
+        rels = [self] + [r for r, _ in others]
         all_keys = [keys] + [k for _, k in others]
-        return self._wrap(L.CoGroup(inputs, all_keys, inner or []))
+        return self._wrap(L.CoGroup([r.node for r in rels], all_keys,
+                                    inner or [], [r.alias for r in rels]))
 
     def join(self, keys: list[Expr], other: "Relation", other_keys: list[Expr],
              how: str = "inner", strategy: str = "default",
              parallel: int | None = None) -> "Relation":
         return self._wrap(L.Join([self.node, other.node],
                                  [list(keys), list(other_keys)],
-                                 how, strategy, parallel))
+                                 how, strategy, parallel,
+                                 [self.alias, other.alias]))
 
     def cross(self, *others: "Relation") -> "Relation":
-        return self._wrap(L.Cross([self.node] + [o.node for o in others]))
+        rels = [self, *others]
+        return self._wrap(L.Cross([r.node for r in rels],
+                                  [r.alias for r in rels]))
 
     def order_by(self, *keys, parallel: int | None = None) -> "Relation":
         """keys: Expr (asc) or (Expr, ascending) tuples."""

@@ -266,3 +266,15 @@ def test_grunt_bare_set_lists_properties(eng, monkeypatch, capsys):
         assert "spark.app.name=" in capsys.readouterr().out
     finally:
         eng.spark.conf.unset("spark.spork.test.bare")
+
+
+def test_backtick_command_at_the_prompt():
+    """The prompt reads a backtick command as one span: `--` inside it
+    is not a comment that swallows the ';', and a ';' inside an open
+    one does not end the statement."""
+    assert _statement_complete("DEFINE c `cut --fields=1`;")
+    assert not _statement_complete("DEFINE c `tr a b;\n")
+    assert _statement_complete("DEFINE c `tr a b;\nrm -f x`;\n")
+    chunk = ("DEFINE m(x) RETURNS y { DEFINE c `cut --fields=1`; "
+             "$y = STREAM $x THROUGH c; };\n")
+    assert _textual_state(chunk) == [chunk]

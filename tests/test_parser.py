@@ -808,3 +808,120 @@ def test_dump_prints_pig_tuple_format(eng, capsys):
     assert "(1,x,)" in out                 # null renders empty
     assert "(1,{(1,x,)},[k#1])" in out     # bag + map forms
     assert "+---" not in out               # not a show() table
+
+
+# -- one lexer for every text pass ----------------------------------------
+# Each text pass (tokenizer, parameter and macro expansion, grunt split,
+# grunt prompt) reads the same lexer, so comments, string literals and
+# backtick commands mean the same thing to all of them.
+
+_MACRO_M = "DEFINE m(x) RETURNS y {\n  $y = FILTER $x BY v > 0;\n};\n"
+
+
+def test_macro_call_inside_block_comment_is_dead():
+    """A macro call inside a multi-line /* */ block is comment text, not
+    a call site to expand (it used to raise 'expects 1 args, got 2')."""
+    from spork_spark.parser import preprocess
+    out = preprocess(_MACRO_M + "a = LOAD 'p';\n/*\nb = m(a, c);\n*/\n"
+                     "d = m(a);\n", None)
+    assert "/*\nb = m(a, c);\n*/" in out
+    assert "d = FILTER a BY v > 0;" in out
+
+
+def test_double_dash_inside_backtick_is_not_a_comment():
+    """`--` inside a backtick command is part of the command: it neither
+    hides the next grunt statement nor the '}' that ends a macro."""
+    from spork_spark.parser import preprocess
+    from spork_spark.parser.pig import _extract_grunt_statements
+    out, cmds = _extract_grunt_statements(
+        "DEFINE c `cut --fields=1`;\nrmf out;\n")
+    assert cmds == ["rmf out"]
+    assert out == "DEFINE c `cut --fields=1`; __grunt__ 0;\n"
+    out = preprocess("DEFINE m(x) RETURNS y { DEFINE c `cut --fields=1`; "
+                     "$y = STREAM $x THROUGH c; };\nb = m(a);\n", None)
+    assert "b = STREAM a THROUGH c;" in out
+
+
+def test_semicolon_inside_backtick_does_not_split_grunt_scan():
+    from spork_spark.parser.pig import _extract_grunt_statements
+    src = "DEFINE c `tr a b; rm -f x`;\na = LOAD 'p';\n"
+    assert _extract_grunt_statements(src) == (src, [])
+
+
+def test_macro_alias_masking_skips_string_literals():
+    """Renaming a macro-internal alias `t` must not rewrite the literal
+    't' (that silently changed which rows the filter keeps)."""
+    from spork_spark.parser import preprocess
+    out = preprocess("DEFINE m(x) RETURNS y {\n"
+                     "  t = FILTER $x BY tag == 't';\n"
+                     "  $y = FOREACH t GENERATE tag;\n};\n"
+                     "b = m(a);\n", None)
+    assert "__m1_t = FILTER a BY tag == 't';" in out
+    assert "b = FOREACH __m1_t GENERATE tag;" in out
+
+
+def test_macro_arguments_split_at_code_commas_only():
+    from spork_spark.parser import preprocess
+    out = preprocess("DEFINE m(x, s) RETURNS y {\n"
+                     "  $y = FILTER $x BY tag == $s;\n};\n"
+                     "b = m(a, 'x,y');\n", None)
+    assert "b = FILTER a BY tag == 'x,y';" in out
+
+
+def test_commented_declare_is_dead_in_batch_mode():
+    """A %declare inside /* */ is comment text, in batch mode as at the
+    grunt prompt: the live %default stays in force."""
+    from spork_spark.parser import preprocess
+    out = preprocess("%default N 1\n/*\n%declare N 5\n*/\n"
+                     "b = LIMIT a $N;\n", None)
+    assert "b = LIMIT a 1;" in out
+    assert "%declare N 5" in out          # the comment itself is kept
+
+
+def _literal(pieces):
+    from hypothesis import strategies as st
+    return st.lists(st.sampled_from(pieces), max_size=6).map("".join)
+
+
+def test_lexer_passes_agree_on_statement_boundaries():
+    """Property: for scripts whose literals, comments and backtick
+    commands hold `; { } -- /* ' "`, the tokenizer, the grunt prompt and
+    the grunt-command split see the same statements."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from spork_spark.__main__ import _statement_complete
+    from spork_spark.parser.pig import _extract_grunt_statements, tokenize
+
+    noise = [";", "{", "}", "--", "/*", '"', "a", " "]
+    lit = _literal(noise + ["\\'", "\\\\", "`"])
+    line = _literal(noise + ["'", "*/", "`"])
+    block = _literal(noise + ["'", "`", "\n"]).filter(
+        lambda t: "*/" not in t)
+    tick = _literal(noise + ["'", "*/"])
+    stmt = st.one_of(
+        lit.map(lambda s: f"r = FILTER a BY s == '{s}';"),
+        tick.map(lambda s: f"DEFINE c `{s}`;"),
+        lit.map(lambda s: "r = FOREACH g { t = FILTER a BY s == "
+                          f"'{s}'; GENERATE COUNT(t); }};"))
+    after = st.one_of(st.just("\n"), line.map(lambda s: f" --{s}\n"),
+                      block.map(lambda s: f" /*{s} */\n"))
+
+    @settings(max_examples=300, deadline=None)
+    @given(parts=st.lists(st.tuples(stmt, after), min_size=1, max_size=5))
+    def check(parts):
+        script, end = "", 0
+        for s, tail in parts:
+            end = len(script) + len(s) - 1      # this statement's ';'
+            script += s + tail
+        depth, ends = 0, 0
+        for t in tokenize(script):
+            if t.kind == "op":
+                depth += {"{": 1, "}": -1}.get(t.text, 0)
+                ends += t.text == ";" and depth == 0
+        assert ends == len(parts)
+        assert _statement_complete(script)
+        assert not _statement_complete(script[:end] + script[end + 1:])
+        assert _extract_grunt_statements(script) == (script, [])
+
+    check()

@@ -867,3 +867,53 @@ def test_rewrites_reach_case_and_unary_children(eng, spark, script, twin,
         assert sorted(map(tuple, run(twin).collect())) == expected
     analyzed = df._jdf.queryExecution().analyzed().toString()
     assert ("__ea_" in analyzed) == eager
+
+
+def test_multi_key_cogroup_group_fields_named_after_keys(eng, spark):
+    """A multi-key COGROUP's `group` struct names its fields after the
+    first input's keys, as GROUP does — on the bag path (so `group.k1`
+    resolves) and on the fused aggregate path alike."""
+    from spork_spark.parser import run_script
+    a = spark.createDataFrame([(1, 2, 10.0), (1, 2, 5.0), (2, 3, 1.0)],
+                              "k1 int, k2 int, v double")
+    b = spark.createDataFrame([(1, 2, "x"), (4, 5, "y")],
+                              "k1 int, k2 int, s string")
+    rels_in = {"ta": eng.from_df(a, alias="ta"),
+               "tb": eng.from_df(b, alias="tb")}
+    rels = run_script(eng, """
+        cg = COGROUP ta BY (k1, k2), tb BY (k1, k2);
+        out = FOREACH cg GENERATE group.k1 AS k1, group.k2 AS k2,
+                                  SIZE(ta) AS na, SIZE(tb) AS nb;
+    """, relations=rels_in)
+    assert rels["cg"].df().schema["group"].dataType.fieldNames() == \
+        ["k1", "k2"]
+    assert sorted(map(tuple, rels["out"].df().collect())) == \
+        [(1, 2, 2, 1), (2, 3, 1, 0), (4, 5, 0, 1)]
+    fused = run_script(eng, """
+        cg = COGROUP ta BY (k1, k2), tb BY (k1, k2);
+        out = FOREACH cg GENERATE group, COUNT_STAR(ta) AS n;
+    """, relations=rels_in)["out"].df()
+    assert "collect_list" not in plan_of(fused)
+    assert fused.schema["group"].dataType.fieldNames() == ["k1", "k2"]
+
+
+def test_cogroup_and_join_name_inputs_after_relations(eng, spark):
+    """Bags of a COGROUP and `name::` prefixes of a JOIN come from the
+    script-side relation names, also for relations seeded through
+    run_script(relations=...) whose plan nodes carry other names."""
+    from spork_spark.parser import run_script
+    a = spark.createDataFrame([(1, 10.0), (2, 5.0)], "k int, v double")
+    b = spark.createDataFrame([(1, "x")], "k int, s string")
+    rels = run_script(eng, """
+        cg = COGROUP ta BY k, tb BY k;
+        fused = FOREACH cg GENERATE group AS k, COUNT(ta) AS na,
+                                    COUNT(tb) AS nb;
+        cg2 = COGROUP ta BY k, tb BY k;
+        bags = FOREACH cg2 GENERATE group AS k, SIZE(ta) AS na;
+        j = JOIN ta BY k, tb BY k;
+    """, relations={"ta": eng.from_df(a), "tb": eng.from_df(b)})
+    assert sorted(map(tuple, rels["fused"].df().collect())) == \
+        [(1, 1, 1), (2, 1, 0)]
+    assert sorted(map(tuple, rels["bags"].df().collect())) == \
+        [(1, 1), (2, 1)]
+    assert rels["j"].df().columns == ["ta::k", "v", "tb::k", "s"]
