@@ -41,10 +41,12 @@ def _textual_state(chunk: str) -> list[str]:
     statements (macro expansion and param substitution are pure text
     passes; replaying them is idempotent). Both are found on the code
     view with the finders preprocessing uses, so a commented-out or
-    quoted DEFINE or %declare is NOT harvested; harvested text slices
-    the chunk, so macro bodies keep their literals."""
+    quoted DEFINE or %declare is NOT harvested. A macro is replayed as
+    a slice of the chunk, so its body keeps its literals; a %declare as
+    its name and value, without a trailing comment."""
     view, _ = _code_view(chunk)
-    return [m.group().strip() + "\n" for m in _live_declares(chunk, view)] \
+    return [f"%{m[1]} {m[2]} {val}\n"
+            for m, val in _live_declares(chunk, view)] \
         + [chunk[m.start():end] + "\n" for m, _, end in _macro_defs(view)]
 
 

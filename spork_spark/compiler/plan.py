@@ -833,8 +833,8 @@ class PlanCompiler:
             inputs = list(node.inputs)
             inputs[side] = new_node
             nj = L.Join(inputs, [list(ks) for ks in node.keys],
-                        node.how, node.strategy, node.parallel,
-                        node.input_names)
+                        node.input_names, node.how, node.strategy,
+                        node.parallel)
             nj.alias = getattr(node, "alias", None)
             new_node = nj
 

@@ -212,22 +212,26 @@ def read_param_file(path: str) -> dict[str, str]:
     return params
 
 
-def _live_declares(src: str, view: str | None = None) -> list[re.Match]:
-    """The %declare/%default lines of src that are code: matched on src,
-    kept when the code view keeps their '%' (one inside a comment or a
-    literal is dead text)."""
+def _live_declares(src: str, view: str | None = None) \
+        -> list[tuple[re.Match, str]]:
+    """The %declare/%default lines of src that are code, each as its
+    match on src (the span to remove: the whole line) and its value. A
+    line is kept when the code view keeps its '%' (one inside a comment
+    or a literal is dead text); the value is matched on the view, so a
+    trailing comment is not part of it."""
     if "%declare" not in src and "%default" not in src:
         return []
     view = _code_view(src)[0] if view is None else view
-    return [m for m in _DECLARE_RE.finditer(src)
-            if view[m.start(1) - 1] == "%"]
+    return [(m, src[v.start(3):v.end(3)])
+            for m in _DECLARE_RE.finditer(src) if view[m.start(1) - 1] == "%"
+            for v in [_DECLARE_RE.match(view, m.start())]]
 
 
 def substitute_params(src: str, params: dict[str, str] | None) -> str:
     params = dict(params or {})
     declares = _live_declares(src)
-    for m in declares:
-        kind, name, val = m.groups()
+    for m, val in declares:
+        kind, name = m.group(1, 2)
         if len(val) >= 2 and val[0] == "`" and val[-1] == "`":
             # Pig command substitution (pig:…/tools/parameters/
             # PreprocessorContext processShellCmd): `%declare DATE
@@ -241,7 +245,7 @@ def substitute_params(src: str, params: dict[str, str] | None) -> str:
             val = val.strip("'\"")
         if kind == "declare" or name not in params:
             params[name] = val
-    src = _splice(src, ((m.start(), m.end(), "") for m in declares))
+    src = _splice(src, ((m.start(), m.end(), "") for m, _ in declares))
     for k, v in params.items():
         # function replacement: values are TEXT, not re templates — a
         # regex value like '\d+' must neither crash ("bad escape") nor

@@ -90,9 +90,9 @@ class CoGroup(LogicalOp):
     """COGROUP a BY k1, b BY k2, …  → (group, bag_a, bag_b, …)."""
     inputs: list[LogicalOp]
     keys: list[list[Expr]]
-    inner: list[bool] = field(default_factory=list)  # per-input INNER flag
     # each input's relation name: Pig names the bags after them
-    input_names: list[str] = field(default_factory=list)
+    input_names: list[str]
+    inner: list[bool] = field(default_factory=list)  # per-input INNER flag
 
     @property
     def children(self):
@@ -110,11 +110,11 @@ class Join(LogicalOp):
     """
     inputs: list[LogicalOp]
     keys: list[list[Expr]]
+    # each input's relation name: colliding columns become name::col
+    input_names: list[str]
     how: str = "inner"              # inner left right full semi anti
     strategy: str = "default"
     parallel: int | None = None
-    # each input's relation name: colliding columns become name::col
-    input_names: list[str] = field(default_factory=list)
 
     @property
     def children(self):
@@ -125,7 +125,7 @@ class Join(LogicalOp):
 class Cross(LogicalOp):
     """CROSS a, b (LOCross; GFCross parallelization is Spark-native)."""
     inputs: list[LogicalOp]
-    input_names: list[str] = field(default_factory=list)  # as Join's
+    input_names: list[str]          # as Join's
 
     @property
     def children(self):

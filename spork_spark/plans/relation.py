@@ -171,15 +171,15 @@ class Relation:
         rels = [self] + [r for r, _ in others]
         all_keys = [keys] + [k for _, k in others]
         return self._wrap(L.CoGroup([r.node for r in rels], all_keys,
-                                    inner or [], [r.alias for r in rels]))
+                                    [r.alias for r in rels], inner or []))
 
     def join(self, keys: list[Expr], other: "Relation", other_keys: list[Expr],
              how: str = "inner", strategy: str = "default",
              parallel: int | None = None) -> "Relation":
         return self._wrap(L.Join([self.node, other.node],
                                  [list(keys), list(other_keys)],
-                                 how, strategy, parallel,
-                                 [self.alias, other.alias]))
+                                 [self.alias, other.alias],
+                                 how, strategy, parallel))
 
     def cross(self, *others: "Relation") -> "Relation":
         rels = [self, *others]

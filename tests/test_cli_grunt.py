@@ -278,3 +278,14 @@ def test_backtick_command_at_the_prompt():
     chunk = ("DEFINE m(x) RETURNS y { DEFINE c `cut --fields=1`; "
              "$y = STREAM $x THROUGH c; };\n")
     assert _textual_state(chunk) == [chunk]
+
+
+def test_declare_with_trailing_comment_replays_without_it():
+    """A %declare typed with a trailing `--` comment is replayed as its
+    name and value only: replaying the comment would put the next
+    statement's ';' inside it once $N is substituted."""
+    from spork_spark.parser import preprocess
+    prelude = _textual_state("%declare N 5 -- five rows\n")
+    assert [p.split() for p in prelude] == [["%declare", "N", "5"]]
+    out = preprocess("".join(prelude) + "b = LIMIT a $N;\n", None)
+    assert out.strip() == "b = LIMIT a 5;"

@@ -878,6 +878,17 @@ def test_commented_declare_is_dead_in_batch_mode():
     assert "%declare N 5" in out          # the comment itself is kept
 
 
+def test_declare_value_stops_before_a_trailing_comment():
+    """The value of `%declare N 5 -- five rows` is `5`: the comment is
+    not part of it, and the whole line is removed."""
+    from spork_spark.parser import preprocess
+    out = preprocess("%declare N 5 -- five rows\nb = LIMIT a $N;\n"
+                     "%default S 'a -- b'  /* why */\n"
+                     "c = FILTER b BY s == '$S';\n", None)
+    assert out.split() == "b = LIMIT a 5; c = FILTER b BY s == 'a -- b';" \
+        .split()
+
+
 def _literal(pieces):
     from hypothesis import strategies as st
     return st.lists(st.sampled_from(pieces), max_size=6).map("".join)
