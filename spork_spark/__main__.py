@@ -46,7 +46,7 @@ def _textual_state(chunk: str) -> list[str]:
     its name and value, without a trailing comment."""
     view, _ = _code_view(chunk)
     return [f"%{m[1]} {m[2]} {val}\n"
-            for m, val in _live_declares(chunk, view)] \
+            for m, val, _ in _live_declares(chunk, view)] \
         + [chunk[m.start():end] + "\n" for m, _, end in _macro_defs(view)]
 
 

@@ -74,11 +74,21 @@ class PlanCompiler:
         self._cache: dict[int, DataFrame] = {}
         self._consumers: dict[int, int] = {}
         self._persisted: set[int] = set()   # node ids already track()ed
+        self._confs: dict[str, str] | None = None   # see compile()
 
     # ------------------------------------------------------------------ api
     def compile(self, node: L.LogicalOp) -> DataFrame:
-        """Compile a plan DAG to a (lazy) DataFrame, memoized per node."""
-        return self._compile(node)
+        """Compile a plan DAG to a (lazy) DataFrame, memoized per node.
+        The conf keys the compiler reads are read once per top-level
+        call, so a SET between two statements takes effect at the
+        next one."""
+        if self._confs is not None:         # nested: reuse the reads
+            return self._compile(node)
+        self._confs = {}
+        try:
+            return self._compile(node)
+        finally:
+            self._confs = None
 
     def note_consumers(self, node: L.LogicalOp) -> None:
         """Called at plan-construction time (Engine._rel): consumer counts
@@ -209,10 +219,13 @@ class PlanCompiler:
                                           or e.name.upper() in self.udafs)
 
     def _conf(self, key: str, default: str) -> str:
-        try:
-            return self.spark.conf.get(key, default)
-        except Exception:
-            return default
+        confs = {} if self._confs is None else self._confs
+        if key not in confs:
+            try:
+                confs[key] = self.spark.conf.get(key, default)
+            except Exception:
+                confs[key] = default
+        return confs[key]
 
     def _side_broadcastable(self, left: DataFrame,
                             right: DataFrame) -> bool:

@@ -213,24 +213,34 @@ def read_param_file(path: str) -> dict[str, str]:
 
 
 def _live_declares(src: str, view: str | None = None) \
-        -> list[tuple[re.Match, str]]:
+        -> list[tuple[re.Match, str, int]]:
     """The %declare/%default lines of src that are code, each as its
-    match on src (the span to remove: the whole line) and its value. A
-    line is kept when the code view keeps its '%' (one inside a comment
-    or a literal is dead text); the value is matched on the view, so a
-    trailing comment is not part of it."""
+    match on src, its value and the end of the span to remove. A line is
+    kept when the code view keeps its '%' (one inside a comment or a
+    literal is dead text); the value is matched on the view, so a
+    trailing comment is not part of it. The span removed is the match,
+    the whole line, unless a /* */ comment opened after the directive
+    closes on a later line: then it stops where the directive's code
+    ends, so the comment stays whole and its tail cannot become code."""
     if "%declare" not in src and "%default" not in src:
         return []
     view = _code_view(src)[0] if view is None else view
-    return [(m, src[v.start(3):v.end(3)])
-            for m in _DECLARE_RE.finditer(src) if view[m.start(1) - 1] == "%"
-            for v in [_DECLARE_RE.match(view, m.start())]]
+    out = []
+    for m in _DECLARE_RE.finditer(src):
+        if view[m.start(1) - 1] != "%":
+            continue
+        v = _DECLARE_RE.match(view, m.start())
+        end = m.start() + len(view[m.start():m.end()].rstrip())
+        if not _code_view(src[end:m.end()])[1]:
+            end = m.end()
+        out.append((m, src[v.start(3):v.end(3)], end))
+    return out
 
 
 def substitute_params(src: str, params: dict[str, str] | None) -> str:
     params = dict(params or {})
     declares = _live_declares(src)
-    for m, val in declares:
+    for m, val, _ in declares:
         kind, name = m.group(1, 2)
         if len(val) >= 2 and val[0] == "`" and val[-1] == "`":
             # Pig command substitution (pig:…/tools/parameters/
@@ -245,7 +255,7 @@ def substitute_params(src: str, params: dict[str, str] | None) -> str:
             val = val.strip("'\"")
         if kind == "declare" or name not in params:
             params[name] = val
-    src = _splice(src, ((m.start(), m.end(), "") for m, _ in declares))
+    src = _splice(src, ((m.start(), end, "") for m, _, end in declares))
     for k, v in params.items():
         # function replacement: values are TEXT, not re templates — a
         # regex value like '\d+' must neither crash ("bad escape") nor
@@ -546,6 +556,9 @@ class PigParser:
         # execution points: DUMP, exec/run, grunt fs/sh commands, and a
         # LOAD whose path overlaps a pending STORE's output.
         self._pending_stores: list[tuple[str, object]] = []
+        # spark.spork.* reads, once per run(); SET and a nested
+        # exec/run clear it (_conf_bool)
+        self._confs: dict[str, bool] = {}
 
     # -- token helpers -------------------------------------------------------
     def peek(self, k: int = 0) -> Tok:
@@ -580,6 +593,7 @@ class PigParser:
 
     # -- entry ----------------------------------------------------------------
     def run(self, src: str, params: dict | None = None) -> dict[str, Relation]:
+        self._confs.clear()
         src = preprocess(src, params)
         src, self._grunt = _extract_grunt_statements(src)
         self.src = src
@@ -630,11 +644,13 @@ class PigParser:
                             for p, e in failures))
 
     def _conf_bool(self, key: str, default: bool) -> bool:
-        try:
-            return self.engine.spark.conf.get(
-                key, str(default).lower()) == "true"
-        except Exception:
-            return default
+        if key not in self._confs:
+            try:
+                self._confs[key] = self.engine.spark.conf.get(
+                    key, str(default).lower()) == "true"
+            except Exception:
+                self._confs[key] = default
+        return self._confs[key]
 
     def _flush_if_overlaps(self, load_path: str) -> None:
         """Pig's implicit store→load dependency: a LOAD that reads a
@@ -719,14 +735,8 @@ class PigParser:
           validation never does.
         A failed statement leaves the alias undefined (Pig rejects the
         statement). Gate: spark.spork.validate.eager (default on)."""
-        if self.check:
-            on = True           # -check IS the validation pass
-        else:
-            try:
-                on = self.engine.spark.conf.get(
-                    "spark.spork.validate.eager", "true") == "true"
-            except Exception:
-                on = True
+        # -check IS the validation pass
+        on = self.check or self._conf_bool("spark.spork.validate.eager", True)
         if not on or self._validation_exempt(rel.node):
             return
         try:
@@ -825,11 +835,7 @@ class PigParser:
         """Pig's -no_multiquery switch as a conf: off → every STORE
         executes at its statement (pre-r10 behavior), on (default) →
         STOREs batch to end-of-script (Pig's default)."""
-        try:
-            return self.engine.spark.conf.get(
-                "spark.spork.multiquery.enabled", "true") == "true"
-        except Exception:
-            return True
+        return self._conf_bool("spark.spork.multiquery.enabled", True)
 
     def st_dump(self) -> None:
         self.expect("kw", "dump")
@@ -1022,6 +1028,7 @@ class PigParser:
             sub.stored = self.stored
             sub.dumped = self.dumped
         sub.run(src, params=params or None)
+        self._confs.clear()             # the script may have SET keys
 
     def st_set(self) -> None:
         """SET key value; — keys are dotted identifiers in real scripts
@@ -1055,6 +1062,7 @@ class PigParser:
             self.engine.spark.conf.set(key, val)
         except Exception:
             pass
+        self._confs.clear()
         self.expect("op", ";")
 
     def st_assert(self) -> None:

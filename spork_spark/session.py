@@ -74,6 +74,27 @@ _SCALE_CONF = {
     # directly). Spark's own knob for exactly this: periodic GC every
     # 10 min instead of the 30 min default.
     "spark.cleaner.periodicGC.interval": "10min",
+    # Janino-compiled classes are cached per JVM, keyed by generated
+    # source, and the default 100 entries thrash on a warm session:
+    # counted with CodegenMetrics on local[4], one pass of the 12 PigMix
+    # scripts compiles 127 distinct classes and the five benchmark
+    # operator queries 101, so at the default every warm pass
+    # recompiled ~100 of them. All 47 golden scripts run to completion
+    # compile 524. Guava splits maximumSize over its (4) segments, so
+    # one segment can evict before the total is reached: 2500 is over
+    # 4x the largest count, and a resident session that runs all of
+    # them keeps every class.
+    "spark.sql.codegen.cache.maxEntries": "2500",
+    # PySpark 4.x wraps every functions.*/Column call to record its
+    # Python call site for AnalysisException context: each wrapped call
+    # adds a conf read, a JVM reflection and a PySparkCurrentOrigin
+    # set/clear, about 3,600 of the 5,700 py4j round trips of one
+    # pass of the 12 PigMix scripts. The call site it records is the
+    # compiler's, which means nothing to a Pig user; errors already name
+    # the script statement. A static conf, fixed when the first session
+    # of the JVM is built (PySpark also caches it in a module global,
+    # pyspark/errors/utils.py is_debugging_enabled).
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

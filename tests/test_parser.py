@@ -889,6 +889,21 @@ def test_declare_value_stops_before_a_trailing_comment():
         .split()
 
 
+def test_declare_followed_by_a_multiline_comment_keeps_it_whole():
+    """A /* */ comment opened after a %declare's value and closed on a
+    later line stays a comment: only the directive's code is removed,
+    so the comment's tail does not become code and no newline is
+    lost."""
+    from spork_spark.parser import preprocess
+    from spork_spark.parser.pig import tokenize
+    src = "%declare N 5 /* start\n more */ b = LIMIT a $N;\n"
+    out = preprocess(src, None)
+    assert out == " /* start\n more */ b = LIMIT a 5;\n"
+    assert out.count("\n") == src.count("\n")
+    assert [t.text for t in tokenize(out)] == \
+        [t.text for t in tokenize("b = LIMIT a 5;")]
+
+
 def _literal(pieces):
     from hypothesis import strategies as st
     return st.lists(st.sampled_from(pieces), max_size=6).map("".join)

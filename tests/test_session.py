@@ -89,3 +89,36 @@ def test_input_bytes_recurses_into_partitioned_tables(tmp_path):
         (d / "_metadata").write_bytes(b"y" * 5_000)     # excluded
     (tmp_path / "_SUCCESS").write_bytes(b"")
     assert _input_bytes(str(tmp_path)) == 20_000
+
+
+def test_session_drops_python_call_site_capture(spark):
+    """PySpark's DataFrame debugging records the Python call site of
+    every functions.*/Column call, several py4j round trips each; the
+    engine session is built with it off (a static conf), and
+    configure_session leaves it so. The codegen cache is built large
+    enough to hold a warm pass."""
+    from spork_spark.session import configure_session
+
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"      # the get_spark() session
+    assert configure_session(spark).conf.get(key) == "false"
+    assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 2500
+
+
+def test_warm_pigmix_pass_compiles_no_new_classes(eng):
+    """The Janino class cache holds a whole pass of the benchmark's
+    PigMix scripts: run at the golden-script scale, a second pass
+    compiles next to nothing (the 100-entry default recompiles ~100
+    classes on every pass)."""
+    from perfbench.workloads import PigBatch
+    from tests.test_golden_scripts import GOLDEN_DIR, run_golden
+
+    metrics = eng.spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount
+    scripts = [GOLDEN_DIR / f"{s}.pig" for s in PigBatch.SCRIPTS]
+    for s in scripts:
+        run_golden(eng, s)
+    before = compiled()
+    for s in scripts:
+        run_golden(eng, s)
+    assert compiled() - before <= 5

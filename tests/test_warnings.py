@@ -269,3 +269,58 @@ def test_split_condition_casts_counted(spark, warn_eng):
     rels["lo"].df().count()
     # 2 discards in the hi filter + 2 in the OTHERWISE complement
     assert warn_eng.warnings.harvest() == {"s -> int": 4}
+
+
+def test_set_mid_script_turns_warnings_on_for_later_statements(spark):
+    """The compiler reads spark.spork.* once per statement's compile, not
+    once per script: a SET between two statements takes effect at the
+    next one. `b` is compiled with the flag off (no probe), `c` after
+    the SET (probed)."""
+    from spork_spark.parser import run_script
+
+    spark.conf.set("spark.spork.warnings.enabled", "false")
+    eng = Engine(spark)
+    try:
+        rels = run_script(eng, """
+            b = FOREACH a GENERATE (int)s AS v;
+            SET spark.spork.warnings.enabled true;
+            c = FOREACH a GENERATE (double)s AS w;
+        """, relations={"a": eng.from_df(_dirty(spark))})
+        assert rels["b"].df().count() == 5
+        assert rels["c"].df().count() == 5
+        assert eng.warnings.harvest() == {"s -> double": 2}
+    finally:
+        spark.conf.set("spark.spork.warnings.enabled", "false")
+
+
+def test_spork_confs_read_once_per_script_and_compile(spark, monkeypatch):
+    """spark.spork.* keys cost a py4j round trip per read: the parser
+    reads its keys once per script and the compiler once per top-level
+    compile, not once per expression context or per statement."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from spork_spark.parser import run_script
+
+    reads: dict[str, int] = {}
+    get = RuntimeConfig.get
+
+    def counting(self, key, *args, **kwargs):
+        reads[key] = reads.get(key, 0) + 1
+        return get(self, key, *args, **kwargs)
+
+    spark.conf.set("spark.spork.warnings.enabled", "true")
+    eng = Engine(spark)
+    rel = eng.from_df(_dirty(spark))
+    monkeypatch.setattr(RuntimeConfig, "get", counting)
+    try:
+        run_script(eng, """
+            b = FOREACH a GENERATE (int)s AS v, (long)s AS l, s;
+            c = FILTER b BY v > 0 AND (double)s > 0.5;
+            d = GROUP c BY (int)s;
+            e = FOREACH d GENERATE group, SUM(c.l) AS t, COUNT(c) AS n;
+        """, relations={"a": rel})
+    finally:
+        spark.conf.set("spark.spork.warnings.enabled", "false")
+    assert reads.get("spark.spork.validate.eager") == 1
+    # one compile per statement (eager validation), 4 statements
+    assert reads.get("spark.spork.warnings.enabled", 0) <= 4
