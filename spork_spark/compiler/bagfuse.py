@@ -26,12 +26,17 @@ None and the caller falls back to the existing compilation):
    input (inner FOREACH → projection, inner FILTER → filter), the two
    sides equi-join on the group keys (null-safe — GROUP collects null
    keys into a real group), the pair-level FOREACH becomes a
-   projection on the join output, and the aggregates run as one fused
-   partial aggregation. Groups whose cross is EMPTY still emit their
-   Pig aggregate-over-empty-bag row — COUNT 0, other aggregates null —
-   via a left join from the distinct group keys (the same contract the
-   HOF path implements with size()/aggregate() over an empty array,
-   pinned by the nested_cross oracle).
+   projection on the join output, and the generators — their bag
+   references rewritten onto pair-frame columns — go through the one
+   fused-generator planner (PlanCompiler._plan_fused): their aggregate
+   parts run as one partial aggregation over the pair frame and the
+   shared post-aggregate projection evaluates the rest. Groups whose
+   cross is EMPTY still emit their Pig aggregate-over-empty-bag row —
+   the count aggregates 0, the rest null (plan._fill_absent, the table
+   COGROUP's outer join reads too) — via a left join from the distinct
+   group keys (the same contract the HOF path implements with
+   size()/aggregate() over an empty array, pinned by the nested_cross
+   oracle).
 
 Both fusions bail when cast-discard warnings are enabled
 (spark.spork.warnings.enabled): the rewritten plans relocate row-level
@@ -44,9 +49,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.builtins import ALGEBRAIC_AGGS, BAG_HOFS
+from ..functions.builtins import BAG_HOFS
 from ..plans import expressions as E
-from .plan import _null_safe_eq
+from .plan import _fill_absent, _null_safe_eq
 
 _SIDE_HOFS = ("FILTER_BAG", "TRANSFORM_BAG", "FOREACH_BAG")
 
@@ -335,45 +340,15 @@ def try_fuse_inner_cross(pc, group, gens):
             raise ValueError                 # raw-bag aggregate — bail
         return None
 
-    out_plan = []      # (kind, payload, alias) like _try_fuse_group_agg
-    agg_parts = []     # (tmp_name, rewritten agg Func, is_count)
     try:
-        for i, g in enumerate(gens):
-            alias, inner = None, g
-            if isinstance(inner, E.Aliased):
-                alias, inner = inner.name, inner.child
-            kind = None if any(_is_cross(x) for x in E.nodes(inner)) \
-                else pc._classify_generator(inner, keys)
-            if kind == "group":
-                out_plan.append((kind, inner, alias))
-                continue
-            name = alias or f"col_{i}"
-            if kind == "keyexpr":
-                out_plan.append(("post", (inner, name), None))
-                continue
-            split = pc._split_post_agg(inner, f"__cxa_{i}", set(key_names))
-            if split is None:
-                parts, remainder = [(f"__cxa_{i}", inner)], \
-                    E.Col(f"__cxa_{i}")
-            else:
-                parts, remainder = split
-            if not parts:
-                return None
-            for tmp, sub in parts:
-                if not (isinstance(sub, E.Func)
-                        and sub.name.upper() in ALGEBRAIC_AGGS):
-                    return None              # UDAF / non-algebraic
-                rw = E.transform(sub, rewrite_ref)
-                is_count = sub.name.upper() in ("COUNT", "COUNT_STAR")
-                agg_parts.append((tmp, rw, is_count))
-            if not pc._is_key_scalar(remainder, keys,
-                                     extra={p[0] for p in parts}):
-                return None
-            out_plan.append(("post", (remainder, name), None))
+        gens = [E.transform(g, rewrite_ref) for g in gens]
     except ValueError:
         return None
-    if not agg_parts:
+    plan = pc._plan_fused(gens, keys, "__cxa_{i}", set(key_names),
+                          udafs=False)
+    if plan is None:
         return None
+    parts, outs, _ = plan
 
     # -- build the plan ---------------------------------------------------
     try:
@@ -399,33 +374,18 @@ def try_fuse_inner_cross(pc, group, gens):
             "*", *[pctx.compile(ex).alias(cn) for cn, ex in tx_cols[k]])
 
     actx = pc._ctx(pair)
-    aggs = [actx.compile(rw).alias(tmp) for tmp, rw, _ in agg_parts]
+    aggs = [actx.compile(p).alias(tmp) for tmp, p in parts]
     agg_df = pair.groupBy(*[F.col(n) for n in gk]).agg(*aggs)
 
-    # -- resurrect empty-cross groups (Pig: COUNT 0, other aggs null) ----
+    # -- resurrect empty-cross groups (Pig's aggregates over an empty bag)
     base_keys = base.select(*gk).distinct()
     gkr = [f"{n}__r" for n in gk]
     agg_df = agg_df.select(*[F.col(n).alias(r)
                              for n, r in zip(gk, gkr)],
-                           *[tmp for tmp, _, _ in agg_parts])
+                           *[tmp for tmp, _ in parts])
     cond2 = _null_safe_eq([base_keys[n] for n in gk],
                           [agg_df[r] for r in gkr])
     joined = base_keys.join(agg_df, cond2, "left").select(
-        *[base_keys[n] for n in gk],
-        *[F.coalesce(agg_df[tmp], F.lit(0).cast("long")).alias(tmp)
-          if is_count else agg_df[tmp].alias(tmp)
-          for tmp, _, is_count in agg_parts])
-    for n, kn in zip(gk, key_names):
-        joined = joined.withColumnRenamed(n, kn)
-
-    post_ctx = pc._ctx(joined)
-    final = []
-    for kind, payload, alias in out_plan:
-        if kind == "group":
-            final.append(pc._compile_group_ref(payload, keys, alias,
-                                               joined))
-        else:
-            expr_e, name = payload
-            rewritten = pc._rewrite_key_refs(expr_e, keys)
-            final.append(post_ctx.compile(rewritten).alias(name))
-    return joined.select(*final)
+        *[base_keys[n] for n in gk], *[agg_df[tmp] for tmp, _ in parts])
+    return pc._project_fused(_fill_absent(joined, parts), outs, gk,
+                             key_names)

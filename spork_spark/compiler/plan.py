@@ -10,7 +10,14 @@ because they are about plan generation (SURVEY.md §4.1 conclusion):
 1. **GROUP+FOREACH fusion (§4.3)** — `FOREACH (GROUP x BY k) GENERATE group,
    AGG(x.f)…` compiles straight to `x.groupBy(k).agg(…)`. This buys partial
    aggregation (the reference's CombinerOptimizer/POPartialAgg), spill, and
-   codegen. Bags materialize via collect_list ONLY when they escape.
+   codegen. Bags materialize via collect_list ONLY when they escape. One
+   generator planner (_plan_fused) serves every fused FOREACH — over GROUP,
+   over COGROUP (its FILTER predicates too) and over a GROUP's inner CROSS:
+   each generator is a `group` reference or maximal aggregate parts under a
+   key-scalar remainder. Each caller compiles the parts against its own
+   frame (the child rows, one COGROUP side, the CROSS pair frame), one
+   projection (_project_fused) evaluates the rest post-aggregate, and an
+   absent COGROUP side or empty CROSS reads one table (_fill_absent).
 2. Join strategy hints — `USING 'replicated'` → broadcast(), 'merge' →
    merge hint, 'skewed' → AQE skew join (session conf).
 3. Multi-consumer persist — an alias consumed more than once (SPLIT,
@@ -48,14 +55,48 @@ def _null_safe_eq(left: list[Column], right: list[Column]) -> Column:
                                             for l, r in zip(left, right)))
 
 
-def _group_col(names: list[str], fields: list[str] | None = None
-               ) -> Column:
-    """The `group` value over its key columns: the key itself for one
-    key, a struct of the keys for several (its fields renamed to
-    ``fields`` when given)."""
+def _equi(left: list[Column], right: list[Column]) -> Column | None:
+    """AND of `l == r` over paired key columns — JOIN's rule, where null
+    keys never match; None for no keys (a cross join)."""
+    conds = [l == r for l, r in zip(left, right)]
+    return functools.reduce(operator.and_, conds) if conds else None
+
+
+# Aggregates whose value over an empty bag is 0; every other aggregate
+# reads null there (Pig's builtins over an empty bag).
+_COUNT_AGGS = frozenset({"COUNT", "COUNT_STAR", "COUNT_DISTINCT",
+                         "APPROX_COUNT_DISTINCT"})
+
+
+def _fill_absent(df: DataFrame, parts: list[tuple[str, E.Func]]
+                 ) -> DataFrame:
+    """Fused aggregate parts where their input was absent (a COGROUP
+    side missing from the outer join, a group whose inner CROSS is
+    empty) read Pig's aggregate over an empty bag: 0 for the
+    count-valued aggregates; the rest stay null."""
+    for name, part in parts:
+        if part.name.upper() in _COUNT_AGGS:
+            df = df.withColumn(name, F.coalesce(df[name],
+                                                F.lit(0).cast("bigint")))
+    return df
+
+
+def _is_group_ref(e: E.Expr) -> bool:
+    """`group` itself or one field of it (group.f / group.$i)."""
+    if isinstance(e, E.Deref):
+        e = e.child
+    return isinstance(e, E.Col) and e.name == GROUP_COL
+
+
+def _group_col(df: DataFrame, names: list[str],
+               fields: list[str] | None = None) -> Column:
+    """The `group` value over the key columns ``names`` of ``df``: the
+    key itself for one key, a struct of the keys for several (its
+    fields renamed to ``fields`` when given). Columns bind to ``df``
+    (``df[name]``: one py4j round trip, where ``F.col`` costs three)."""
     if len(names) == 1:
-        return F.col(names[0])
-    cols = [F.col(n) for n in names]
+        return df[names[0]]
+    cols = [df[n] for n in names]
     if fields:
         cols = [c.alias(f) for c, f in zip(cols, fields)]
     return F.struct(*cols)
@@ -139,9 +180,9 @@ class PlanCompiler:
         ORDER/RANK key expressions, fused-aggregate ARGUMENT casts
         (_probe_keys / _agg_arg_casts), and post-agg casts in fused
         generators — wrapping ((long)SUM(x)), interior
-        (ROUND((double)SUM(x))), and group-ref ((int)group — the
-        keyexpr/remainder projections compile through the probing
-        post-agg context, one probe row per group, matching POForEach's
+        (ROUND((double)SUM(x))), and group-ref ((int)group — every
+        remainder compiles through _project_fused's probing post-agg
+        context, one probe row per group, matching POForEach's
         post-combine evaluation) — via the aggregate/remainder split
         (_split_post_agg). POCast warns at every cast site
         (pig:…/expressionOperators/POCast.java warn()); every site is
@@ -171,33 +212,111 @@ class PlanCompiler:
             kctx.compile(k)
         return self._attach_probes(df, kctx)
 
-    def _split_post_agg(self, e: E.Expr, prefix: str,
-                        reserved: set | frozenset = frozenset()) \
-            -> tuple[list[tuple[str, E.Expr]], E.Expr] | None:
-        """Split a fused generator into (aggregate parts, post-agg
-        scalar remainder): each MAXIMAL aggregate-rooted subtree is
-        replaced by a Col ref to a temp agg alias. Returns None when
-        the generator is a bare aggregate (nothing evaluates post-agg
-        — keep the plain fused compile). ``reserved`` holds the group
-        key names: a temp named like a key would be ambiguous on the
-        aggregated frame."""
-        base = prefix
-        while base in reserved:
-            base = f"__post_{base}"
-        parts: list[tuple[str, E.Expr]] = []
+    def _split_post_agg(self, e: E.Expr, prefix: str, reserved: set
+                        ) -> tuple[list[tuple[str, E.Func]], E.Expr]:
+        """Split a fused generator or predicate into (aggregate parts,
+        post-agg scalar remainder): each MAXIMAL aggregate call is
+        replaced by a Col ref to a temp named after ``prefix``; a bare
+        aggregate is one part whose remainder is its temp. IsEmpty(bag)
+        reads as COUNT_STAR(bag) == 0. ``reserved`` holds the names a
+        temp must not take (the group keys: a temp named like a key
+        would be ambiguous on the aggregated frame) and gains each temp
+        allocated."""
+        parts: list[tuple[str, E.Func]] = []
 
         def cut(n: E.Expr) -> E.Expr | None:
+            if isinstance(n, E.Func) and n.name.upper() == "ISEMPTY" \
+                    and len(n.args) == 1 and not any(
+                        _is_group_ref(a) for a in E.nodes(n.args[0])):
+                return E.BinOp("==", cut(E.Func("COUNT_STAR", n.args)),
+                               E.Lit(0))
             if not self._is_agg_call(n):
                 return None
-            nm = base if not parts else f"{base}__{len(parts)}"
+            nm = prefix if not parts else f"{prefix}__{len(parts)}"
+            while nm in reserved:
+                nm = f"__post_{nm}"
+            reserved.add(nm)
             parts.append((nm, n))
             return E.Col(nm)
 
-        remainder = E.transform(e, cut)
-        if len(parts) == 1 and isinstance(remainder, E.Col) \
-                and remainder.name == parts[0][0]:
-            return None                     # bare aggregate — no split
-        return parts, remainder
+        return parts, E.transform(e, cut)
+
+    def _plan_fused(self, gens: list[E.Expr], keys: list[E.Expr],
+                    prefix: str, reserved: set, preds: list[E.Expr] = (),
+                    udafs: bool = True):
+        """The generator planner of every fused FOREACH — over GROUP,
+        over COGROUP (with the FILTERs between them) and over a GROUP's
+        inner CROSS. Each generator is a `group` reference, or it splits
+        (_split_post_agg) into aggregate parts and a remainder that is a
+        key scalar over the parts' temps (a generator without aggregates
+        is all remainder); each predicate splits the same way. A part is
+        a builtin aggregate call — or a registered UDAF when ``udafs`` —
+        with no lambda or bag HOF inside it. Temps are named ``prefix``
+        formatted with the generator's index ``i`` and output ``name``;
+        predicate temps are ``__f<j>``.
+
+        Returns (parts, outs, conds): parts are (temp, aggregate) pairs
+        for the caller to compile against its own frame, outs are
+        ("group", ref, alias) / ("post", remainder, name) in generator
+        order for _project_fused, conds the predicate remainders. None
+        when a bag escapes or nothing aggregates: the caller then
+        materializes the bags."""
+        parts: list[tuple[str, E.Func]] = []
+
+        def split(e: E.Expr, pfx: str) -> E.Expr | None:
+            ps, rem = self._split_post_agg(e, pfx, reserved)
+            for _, p in ps:
+                if not udafs and p.name.upper() not in ALGEBRAIC_AGGS:
+                    return None
+                if any(isinstance(n, E.Lambda) or (
+                        isinstance(n, E.Func) and n.name.upper() in BAG_HOFS)
+                       for n in E.nodes(p)):
+                    return None
+            if not self._is_key_scalar(rem, keys, {t for t, _ in ps}):
+                return None
+            parts.extend(ps)
+            return rem
+
+        outs = []
+        for i, g in enumerate(gens):
+            alias, inner = (g.name, g.child) if isinstance(g, E.Aliased) \
+                else (None, g)
+            if _is_group_ref(inner):
+                outs.append(("group", inner, alias))
+                continue
+            name = alias or f"col_{i}"
+            rem = split(inner, prefix.format(i=i, name=name))
+            if rem is None:
+                return None
+            outs.append(("post", rem, name))
+        conds = [split(p, f"__f{j}") for j, p in enumerate(preds)]
+        if not parts or any(c is None for c in conds):
+            return None
+        return parts, outs, conds
+
+    def _project_fused(self, df: DataFrame, outs: list[tuple],
+                       names: list[str], fields: list[str] | None = None
+                       ) -> DataFrame:
+        """The one post-aggregate projection of every fused FOREACH:
+        `group` references and remainders (_plan_fused outs) over an
+        aggregated frame whose key columns are ``names`` (the key
+        fields ``fields`` when named otherwise; references bind to
+        ``df`` as in _group_col). Remainders compile through one
+        probing context — their casts warn once per group, POCast's
+        post-combine site."""
+        ctx = self._ctx(df)
+        cols = []
+        for kind, e, name in outs:
+            if kind == "group":
+                cols.append(self._compile_group_ref(df, e, names, name,
+                                                    fields))
+            elif isinstance(e, E.Col):         # a bare aggregate part
+                cols.append(df[e.name].alias(name) if e.name != name
+                            else df[name])
+            else:
+                e = self._rewrite_key_refs(e, names, fields)
+                cols.append(ctx.compile(e).alias(name))
+        return self._attach_probes(df, ctx).select(*cols)
 
     def _agg_arg_casts(self, e: E.Expr) -> list:
         """Collect Cast subexpressions that sit INSIDE an aggregate's
@@ -530,13 +649,10 @@ class PlanCompiler:
 
     def _try_fuse_group_agg(self, group: L.Group,
                             gens: list[E.Expr]) -> DataFrame | None:
-        """Pattern-match FOREACH(GROUP) generators; None ⇒ bag escapes.
-
-        A generator is fusable when it is (a) a reference to `group` (whole
-        key or key field), or (b) an algebraic aggregate whose arguments
-        only dereference the bag. Anything else (FLATTEN of the bag, the
-        bag itself, non-algebraic fns) falls back to materialization.
-        """
+        """FOREACH(GROUP) generators planned by _plan_fused, their
+        aggregate parts compiled against the child rows; None ⇒ the
+        bag escapes (FLATTEN of the bag, the bag itself, a bag HOF the
+        pre-passes below do not rewrite)."""
         child_df = None
         if isinstance(group.child, L.Join) and group.mode == "by" and \
                 self._consumers.get(group.child._id, 0) <= 1:
@@ -552,127 +668,37 @@ class PlanCompiler:
         if topk is not None:
             child_df, gens = topk
             ctx = self._ctx(child_df)
+        first = child_df.columns[0] if child_df.columns else None
         # Same-column PERCENTILEs fuse into one shared buffer (map
         # computed over all generators; compiled per-node in _c_func)
-        pm = self._percentile_fusion_map(
-            gens, child_df.columns[0] if child_df.columns else None)
+        pm = self._percentile_fusion_map(gens, first)
         if pm:
             ctx.pctl_multi = pm
-        # an agg output named like a group key would be ambiguous on
-        # the aggregated frame — such columns compute under a safe
-        # name and alias back in the final projection
-        key_names = {self._key_name(k, i) for i, k in enumerate(keys)}
-        agg_cols, out_cols, saw_agg = [], [], False
-        row_casts: list[E.Expr] = []       # casts inside aggregate args
-
-        for i, g in enumerate(gens):
-            alias, inner = None, g
-            if isinstance(inner, E.Aliased):
-                alias, inner = inner.name, inner.child
-            inner = self._normalize_distinct_agg(
-                inner, child_df.columns[0] if child_df.columns else None)
-            kind = self._classify_generator(inner, keys)
-            if kind == "group":
-                out_cols.append(("group", inner, alias))
-            elif kind == "agg":
-                # Casts OUTSIDE the aggregates ((long)SUM(x),
-                # ROUND((double)SUM(x))) evaluate per OUTPUT row; a
-                # discard probe there would nest an aggregate in the
-                # observe metric (illegal). With warnings on, split the
-                # generator: each maximal aggregate subtree compiles
-                # into the agg under a temp alias, the scalar remainder
-                # re-applies in the post-agg projection where its cast
-                # probes see one row per group — POCast warns at the
-                # cast site, post-combine. Flag-off plans keep the
-                # single fused expression (byte-identical).
-                name = alias or f"col_{i}"
-                first = child_df.columns[0] if child_df.columns else None
-                split = self._split_post_agg(inner, name, key_names) \
-                    if self._warnings_on() else None
-                if split is not None:
-                    parts, remainder = split
-                    for tmp, sub in parts:
-                        rw = self._rewrite_bag_refs(sub, first)
-                        agg_cols.append((ctx.compile(rw).alias(tmp), tmp,
-                                         self._mentions_udaf(rw)))
-                        row_casts.extend(self._agg_arg_casts(rw))
-                    out_cols.append(("post", (remainder, name), None))
-                    saw_agg = True
-                    continue
-                rewritten = self._rewrite_bag_refs(inner, first)
-                safe = name
-                while safe in key_names:
-                    safe = f"__post_{safe}"
-                col = ctx.compile(rewritten).alias(safe)
-                agg_cols.append((col, safe, self._mentions_udaf(rewritten)))
-                out_cols.append(("agg", (safe, name), None))
-                saw_agg = True
-                if self._warnings_on():
-                    row_casts.extend(self._agg_arg_casts(rewritten))
-            elif kind == "keyexpr":
-                out_cols.append(("post", (inner, alias or f"col_{i}"),
-                                 None))
-            else:
-                # MIXED generator — scalar over keys AND aggregates in
-                # one expression (CONCAT((chararray)group, ':',
-                # (chararray)COUNT(x))): split the aggregates into the
-                # agg and evaluate the remainder post-agg. Without
-                # this, one such generator de-fuses the whole FOREACH.
-                name = alias or f"col_{i}"
-                first = child_df.columns[0] if child_df.columns else None
-                split = self._split_post_agg(inner, name, key_names)
-                if split is None:
-                    return None
-                parts, remainder = split
-                if not parts \
-                        or any(not self._is_algebraic_agg(p)
-                               for _, p in parts) \
-                        or not self._is_key_scalar(
-                            remainder, keys, extra={p[0] for p in parts}):
-                    return None
-                for tmp, sub in parts:
-                    rw = self._rewrite_bag_refs(sub, first)
-                    agg_cols.append((ctx.compile(rw).alias(tmp), tmp,
-                                     self._mentions_udaf(rw)))
-                    if self._warnings_on():
-                        row_casts.extend(self._agg_arg_casts(rw))
-                out_cols.append(("post", (remainder, name), None))
-                saw_agg = True
-        if not saw_agg:
+        key_names = [self._key_name(k, i) for i, k in enumerate(keys)]
+        plan = self._plan_fused(
+            [self._normalize_distinct_agg(g, first) for g in gens], keys,
+            "{name}", set(key_names))
+        if plan is None:
             return None
+        parts, outs, _ = plan
+        agg_cols, row_casts = [], []
+        for tmp, sub in parts:
+            rw = self._rewrite_bag_refs(sub, first)
+            agg_cols.append((ctx.compile(rw).alias(tmp), tmp,
+                             self._mentions_udaf(rw)))
+            row_casts.extend(self._agg_arg_casts(rw))
 
         # Cast discards in the fused plan ride the aggregation input,
         # where the rows still exist per-input-row: group-KEY casts +
         # casts inside aggregate ARGUMENTS (SUM((int)x)) — both
         # compiled once in a throwaway probe context. Post-agg casts
-        # (wrapping, interior, and group-ref — keyexpr generators and
-        # split remainders alike) compile through post_ctx below and
-        # probe on the aggregated frame, one row per group.
+        # probe in _project_fused, one row per group.
         child_df = self._probe_keys(child_df, keys)
         child_df = self._probe_keys(child_df, row_casts)
         agg_df = self._grouped_agg(group, child_df, ctx, keys, agg_cols)
-
-        # Re-project to the requested generator shape/order. Split
-        # post-agg scalar remainders re-compile here through a
-        # probe-collecting context on the aggregated frame (one probe
-        # row per group).
-        post_ctx = self._ctx(agg_df)
-        final = []
-        for kind, payload, alias in out_cols:
-            if kind == "agg":
-                safe, name = payload
-                final.append(F.col(safe).alias(name) if safe != name
-                             else F.col(name))
-            elif kind == "post":
-                expr_e, name = payload
-                rewritten = self._rewrite_key_refs(expr_e, keys)
-                final.append(post_ctx.compile(rewritten).alias(name))
-            else:
-                final.append(self._compile_group_ref(payload, keys, alias,
-                                                     agg_df))
-        result = self._attach_probes(agg_df, post_ctx).select(*final)
+        result = self._project_fused(agg_df, outs, key_names)
         if getattr(group, "partitioner", None):
-            key_cols = self._partitioner_key_cols(out_cols, keys,
+            key_cols = self._partitioner_key_cols(outs, key_names,
                                                   result.columns)
             if key_cols is not None:
                 placed = self._apply_partitioner(group, result, key_cols)
@@ -685,7 +711,8 @@ class PlanCompiler:
                     "the FOREACH generators; custom placement skipped")
         return result
 
-    def _partitioner_key_cols(self, out_cols, keys,
+    @staticmethod
+    def _partitioner_key_cols(outs, key_names: list[str],
                               result_columns) -> list[str] | None:
         """Output columns carrying the group key for custom placement, in
         DECLARED key order (the getPartition contract — projection order
@@ -694,20 +721,19 @@ class PlanCompiler:
         field derefs qualify only when together they cover every declared
         key. Returns None when the key cannot be reconstructed."""
         field_pos: dict[int, int] = {}        # declared key idx → out idx
-        key_names = [self._key_name(k, i) for i, k in enumerate(keys)]
-        for i, (kind, payload, _alias) in enumerate(out_cols):
+        for i, (kind, ref, _alias) in enumerate(outs):
             if kind != "group":
                 continue
-            if isinstance(payload, E.Col):     # whole `group`
+            if isinstance(ref, E.Col):         # whole `group`
                 return [result_columns[i]]
-            fld = payload.field
+            fld = ref.field
             idx = fld if isinstance(fld, int) else (
                 key_names.index(fld) if fld in key_names else None)
             if idx is not None and idx not in field_pos:
                 field_pos[idx] = i
-        if len(field_pos) != len(keys):
+        if len(field_pos) != len(key_names):
             return None
-        return [result_columns[field_pos[i]] for i in range(len(keys))]
+        return [result_columns[field_pos[i]] for i in range(len(key_names))]
 
     _EAGER_AGGS = {"SUM", "COUNT", "COUNT_STAR", "MIN", "MAX", "AVG"}
     _EAGER_FINAL = {"SUM": "SUM", "COUNT": "SUM", "COUNT_STAR": "SUM",
@@ -735,27 +761,34 @@ class PlanCompiler:
         None when the shape doesn't apply (the normal fusion path runs).
         """
         # -- collect the aggregates and their field references ------------
-        aggs: list[tuple[E.Func, str, str | None]] = []   # (node, fn, field)
+        def sig_of(e) -> tuple[str, str | None] | None:
+            """(function, field) of an aggregate this pass pre-aggregates:
+            COUNT_STAR() or AGG(bag.field) over _EAGER_AGGS."""
+            if not isinstance(e, E.Func):
+                return None
+            name = e.name.upper()
+            if name == "COUNT_STAR" and not e.args:
+                return name, None
+            if name in self._EAGER_AGGS and len(e.args) == 1 and \
+                    isinstance(e.args[0], E.Deref) and \
+                    isinstance(e.args[0].field, str):
+                return name, e.args[0].field
+            return None                       # VAR/UDAF/COUNT(bag)/…
+
+        aggs: list[tuple[str, str | None]] = []   # (fn, field)
 
         def walk(e):
             if not self._is_agg_call(e):
                 return all(walk(c) for c in E.children(e))
-            name = e.name.upper()
-            if name not in self._EAGER_AGGS:
-                return False                  # AVG/VAR/UDAF…: not eager
-            if name == "COUNT_STAR" and len(e.args) == 0:
-                aggs.append((e, name, None))
-                return True
-            if len(e.args) == 1 and isinstance(e.args[0], E.Deref) \
-                    and isinstance(e.args[0].field, str):
-                aggs.append((e, name, e.args[0].field))
-                return True
-            return False                      # COUNT(bag)/odd shapes: bail
+            sig = sig_of(e)
+            if sig is not None:
+                aggs.append(sig)
+            return sig is not None
 
         for g in gens:
             if not walk(g.child if isinstance(g, E.Aliased) else g):
                 return None
-        fields = {f for _, _, f in aggs if f is not None}
+        fields = {f for _, f in aggs if f is not None}
         if not fields:
             return None                       # nothing pins a fact side
         key_refs = {n.name for k in group.keys for n in E.nodes(k)
@@ -823,7 +856,7 @@ class PlanCompiler:
                 partials.append(make().alias(pname))
             return partial_of[sig]
 
-        for _, fname, field in aggs:
+        for fname, field in aggs:
             if fname == "SUM":
                 partial((fname, field), lambda: F.sum(field))
             elif fname == "COUNT":
@@ -853,18 +886,10 @@ class PlanCompiler:
 
         # -- rewrite generators onto the partial columns ------------------
         def rewrite(e):
-            if not isinstance(e, E.Func):
-                return None
-            name = e.name.upper()
-            sig = None
-            if name == "COUNT_STAR" and len(e.args) == 0:
-                sig = (name, None)
-            elif name in self._EAGER_AGGS and len(e.args) == 1 and \
-                    isinstance(e.args[0], E.Deref) and \
-                    isinstance(e.args[0].field, str):
-                sig = (name, e.args[0].field)
+            sig = sig_of(e)
             if sig is None:
                 return None
+            name = sig[0]
             if name == "AVG":
                 # AVG = SUM(partial sums) / SUM(partial counts); the
                 # double cast defeats Pig's truncating integer '/' when
@@ -956,31 +981,37 @@ class PlanCompiler:
         return any(isinstance(n, E.Func) and n.name.upper() in self.udafs
                    for n in E.nodes(e))
 
-    def _compile_group_ref(self, e: E.Expr, keys: list[E.Expr],
-                           alias: str | None, agg_df: DataFrame):
-        """Compile a reference to the group key in the fused plan."""
-        key_names = [self._key_name(k, i) for i, k in enumerate(keys)]
-        if isinstance(e, E.Col) and e.name == GROUP_COL:
-            if not keys:                       # GROUP ALL → group = 'all'
-                return F.lit("all").alias(alias or GROUP_COL)
-            return _group_col(key_names).alias(alias or GROUP_COL)
-        if isinstance(e, E.Deref) and isinstance(e.child, E.Col) \
-                and e.child.name == GROUP_COL:
-            name = e.field if isinstance(e.field, str) else key_names[e.field]
-            return F.col(name).alias(alias or name)
-        raise AssertionError("unreachable: classified as group ref")
+    @staticmethod
+    def _key_field(field: str | int, names: list[str],
+                   fields: list[str] | None) -> tuple[str, str | None]:
+        """Resolve group.<field> to (key column, field of that column or
+        None). A field named like a key (``fields``, default the column
+        ``names``) or a position is that key; any other name on a single
+        key is a field of the key itself (a struct-typed key)."""
+        fields = fields or names
+        if isinstance(field, int):
+            return names[field], None
+        if field in fields:
+            return names[fields.index(field)], None
+        if len(names) == 1:
+            return names[0], field
+        return field, None                   # Spark reports it unresolved
 
-    def _classify_generator(self, e: E.Expr, keys: list[E.Expr]) -> str:
-        if isinstance(e, E.Col) and e.name == GROUP_COL:
-            return "group"
-        if isinstance(e, E.Deref) and isinstance(e.child, E.Col) \
-                and e.child.name == GROUP_COL:
-            return "group"
-        if self._is_algebraic_agg(e):
-            return "agg"
-        if self._is_key_scalar(e, keys):
-            return "keyexpr"
-        return "other"
+    def _compile_group_ref(self, df: DataFrame, e: E.Expr,
+                           names: list[str], alias: str | None,
+                           fields: list[str] | None = None) -> Column:
+        """Compile a `group` reference over the key columns ``names`` of
+        the aggregated frame ``df`` (GROUP ALL → the literal 'all');
+        ``fields`` names the key fields when the columns are named
+        otherwise."""
+        if isinstance(e, E.Col):
+            if not names:
+                return F.lit("all").alias(alias or GROUP_COL)
+            return _group_col(df, names, fields).alias(alias or GROUP_COL)
+        col, sub = self._key_field(e.field, names, fields)
+        c = df[col] if sub is None else df[col].getField(sub)
+        return c.alias(alias or (e.field if isinstance(e.field, str)
+                                 else (fields or names)[e.field]))
 
     def _is_key_scalar(self, e: E.Expr, keys: list[E.Expr],
                        extra: frozenset | set = frozenset()) -> bool:
@@ -1014,20 +1045,17 @@ class PlanCompiler:
 
         return ok(e)
 
-    def _rewrite_key_refs(self, e: E.Expr, keys: list[E.Expr]) -> E.Expr:
-        """Rewrite group-key references in a keyexpr generator to the
-        aggregated frame's key columns (GROUP ALL → the literal
-        'all')."""
-        key_names = [self._key_name(k, i) for i, k in enumerate(keys)]
-
+    def _rewrite_key_refs(self, e: E.Expr, names: list[str],
+                          fields: list[str] | None = None) -> E.Expr:
+        """Rewrite `group` references in a post-agg remainder to the
+        aggregated frame's key columns ``names`` (GROUP ALL → the
+        literal 'all'; fields resolve as in _key_field)."""
         def key_col(n: E.Expr) -> E.Expr | None:
             if isinstance(n, E.Col) and n.name == GROUP_COL:
-                return E.Col(key_names[0]) if keys else E.Lit("all")
-            if isinstance(n, E.Deref) and isinstance(n.child, E.Col) \
-                    and n.child.name == GROUP_COL:
-                fld = n.field
-                return E.Col(fld if isinstance(fld, str)
-                             else key_names[fld])
+                return E.Col(names[0]) if names else E.Lit("all")
+            if isinstance(n, E.Deref) and _is_group_ref(n):
+                col, sub = self._key_field(n.field, names, fields)
+                return E.Col(col) if sub is None else E.Deref(E.Col(col), sub)
             return None
 
         return E.transform(e, key_col)
@@ -1118,33 +1146,6 @@ class PlanCompiler:
             return None
         return out
 
-    def _contains_inner_plan(self, e: E.Expr) -> bool:
-        """Nested-FOREACH constructs (bag HOFs / lambdas) can't fuse into
-        groupBy().agg() — they need the materialized bag."""
-        return any(isinstance(n, E.Lambda)
-                   or (isinstance(n, E.Func) and n.name.upper() in BAG_HOFS)
-                   for n in E.nodes(e))
-
-    def _is_algebraic_agg(self, e: E.Expr) -> bool:
-        """True if e is AGG(args…) over bag fields, incl. scalar expressions
-        on top of aggregates (e.g. SUM(x.a)/COUNT(x), ROUND_TO(SUM(x.a),2))."""
-        if self._contains_inner_plan(e):
-            return False
-        if self._is_agg_call(e):
-            return True
-        if isinstance(e, E.Func):
-            # scalar fn over aggregates: ≥1 algebraic arg, rest literals
-            args_ok = all(self._is_algebraic_agg(a) or isinstance(a, E.Lit)
-                          for a in e.args)
-            return args_ok and any(self._is_algebraic_agg(a) for a in e.args)
-        if isinstance(e, E.BinOp):
-            return (self._is_algebraic_agg(e.left) or isinstance(e.left, E.Lit)) and \
-                   (self._is_algebraic_agg(e.right) or isinstance(e.right, E.Lit)) and \
-                   (self._is_algebraic_agg(e.left) or self._is_algebraic_agg(e.right))
-        if isinstance(e, E.Cast):
-            return self._is_algebraic_agg(e.child)
-        return False
-
     def _percentile_fusion_map(self, gens: list[E.Expr],
                                first_col: str | None) -> dict:
         """repr(child-expr) → sorted distinct percentage literals, for
@@ -1223,7 +1224,9 @@ class PlanCompiler:
         grouped = self._grouped_agg(node, df, ctx, keys,
                                     [(bag, bag_alias, False)])
         out = grouped.select(
-            self._compile_group_ref(E.Col(GROUP_COL), keys, None, grouped),
+            self._compile_group_ref(
+                grouped, E.Col(GROUP_COL),
+                [self._key_name(k, i) for i, k in enumerate(keys)], None),
             F.col(bag_alias))
         if node.mode == "all":
             return out
@@ -1266,34 +1269,6 @@ class PlanCompiler:
             return k.name
         return f"group_{i}"
 
-    # COGROUP bags consumed ONLY through these aggregates (plus IsEmpty
-    # filters) fuse to per-side groupBy().agg() — the conservative subset
-    # whose empty-bag semantics are pinned below (COUNT/COUNT_STAR → 0,
-    # the rest → null, matching Pig's empty-bag aggregates).
-    _COGROUP_FUSABLE = {"COUNT", "COUNT_STAR", "SUM", "AVG", "MIN", "MAX"}
-
-    def _cogroup_conj_terms(self, pred: E.Expr) -> list | None:
-        """Flatten an AND tree into terms; None when any other operator
-        appears (the filter then needs the materialized bags)."""
-        if isinstance(pred, E.BinOp) and pred.op.lower() == "and":
-            left = self._cogroup_conj_terms(pred.left)
-            right = self._cogroup_conj_terms(pred.right)
-            return None if left is None or right is None else left + right
-        return [pred]
-
-    @staticmethod
-    def _cogroup_isempty_term(t: E.Expr, bag_names: list[str]):
-        """(bag_name, must_be_empty) for IsEmpty(bag) / NOT IsEmpty(bag);
-        None for anything else."""
-        want_empty = True
-        if isinstance(t, E.UnOp) and t.op == "not":
-            want_empty, t = False, t.child
-        if isinstance(t, E.Func) and t.name.upper() == "ISEMPTY" \
-                and len(t.args) == 1 and isinstance(t.args[0], E.Col) \
-                and t.args[0].name in bag_names:
-            return t.args[0].name, want_empty
-        return None
-
     @staticmethod
     def _cogroup_bag_refs(e: E.Expr, bag_names: list[str]) -> set | None:
         """Bag names referenced by an aggregate argument tree; None when
@@ -1309,29 +1284,24 @@ class PlanCompiler:
         return refs
 
     def _try_fuse_cogroup_agg(self, node: L.ForEach) -> DataFrame | None:
-        """FOREACH (FILTER* (COGROUP …)) whose bag uses are ALL algebraic
-        aggregates — and whose filters are IsEmpty tests — runs the
-        COGROUP spine (_cogroup_sides) with each side's partial
-        aggregates in place of its bag: the exchanges then carry one
-        partial-aggregate row per key instead of collect_list'ing every
-        input column of every row (the COGROUP+IsEmpty anti-join idiom
-        shuffled 11-column structs to count them). Empty-bag semantics
-        are preserved exactly: an absent side leaves its aggregate
-        columns null after the outer join — which IS Pig's
-        SUM/AVG/MIN/MAX over an empty bag — and COUNT/COUNT_STAR
-        coalesce to 0; IsEmpty(bag) ⇔ the side's group-presence count
-        is null. Disabled under the warnings surface (the fallback bag
+        """FOREACH (FILTER* (COGROUP …)) planned by _plan_fused — the
+        generators and the FILTER predicates — whose every aggregate part
+        reads one side: the COGROUP spine (_cogroup_sides) runs with
+        each side's parts in place of its bag, so the exchanges carry
+        one partial-aggregate row per key instead of collect_list'ing
+        every input column of every row (the COGROUP + IsEmpty anti-join
+        idiom shuffled 11-column structs to count them). A side absent
+        from the outer join reads Pig's aggregate over an empty bag
+        (_fill_absent), so IsEmpty(bag) — COUNT_STAR(bag) == 0 — holds
+        there. Disabled under the warnings surface (the fallback bag
         path carries the cast probes)."""
         if self._warnings_on():
             return None
-        terms: list[E.Expr] = []
+        preds: list[E.Expr] = []
         cur = node.child
         while isinstance(cur, L.Filter) and \
                 self._consumers.get(cur._id, 0) <= 1:
-            ts = self._cogroup_conj_terms(cur.predicate)
-            if ts is None:
-                return None
-            terms.extend(ts)
+            preds.insert(0, cur.predicate)
             cur = cur.child
         if not isinstance(cur, L.CoGroup) or \
                 self._consumers.get(cur._id, 0) > 1:
@@ -1341,90 +1311,65 @@ class PlanCompiler:
             # (which part-file each group lands in under STORE) that
             # _c_cogroup honors via _apply_partitioner — the fused
             # shape would silently drop it, so fall back to the bag
-            # path (r10 advisor).
+            # path.
             return None
         bag_names = cur.input_names
         if len(set(bag_names)) != len(bag_names) or GROUP_COL in bag_names:
             return None
-        parsed_terms = []
-        for t in terms:
-            p = self._cogroup_isempty_term(t, bag_names)
-            if p is None:
-                return None
-            parsed_terms.append(p)
-        # classify generators: group refs, or one-bag algebraic aggs
-        plan_gens = []   # ("group", name) | ("agg", side_idx, expr, name, fn)
-        for i, g in enumerate(node.generators):
-            alias, inner = (g.name, g.child) if isinstance(g, E.Aliased) \
-                else (None, g)
-            if isinstance(inner, E.Col) and inner.name == GROUP_COL:
-                plan_gens.append(("group", alias or GROUP_COL))
-                continue
-            if isinstance(inner, E.Deref) and \
-                    isinstance(inner.child, E.Col) and \
-                    inner.child.name == GROUP_COL:
-                # group.field on a struct-typed key: the fused path
-                # compiled this as the WHOLE key (and misnamed it
-                # 'group') — fall back to the bag path, which projects
-                # the dereferenced field correctly (r10 advisor).
-                return None
-            if not isinstance(inner, E.Func) or \
-                    inner.name.upper() not in self._COGROUP_FUSABLE:
-                return None
-            refs = self._cogroup_bag_refs(inner, bag_names)
+        plan = self._plan_fused(node.generators, cur.keys[0], "__a{i}",
+                                set(), preds, udafs=False)
+        if plan is None:
+            return None
+        parts, outs, conds = plan
+        sides = []
+        for _, p in parts:
+            refs = self._cogroup_bag_refs(p, bag_names)
             if not refs or len(refs) != 1:
                 return None
-            plan_gens.append(("agg", bag_names.index(next(iter(refs))),
-                              inner, alias or f"col_{i}",
-                              inner.name.upper()))
-        if not any(pg[0] == "agg" for pg in plan_gens):
-            return None
+            sides.append(bag_names.index(refs.pop()))
+
+        inner = cur.inner or [False] * len(cur.inputs)
 
         def partials(idx: int, df: DataFrame, ctx: ExprCompiler) -> list:
-            # presence count + this side's aggregates (replaces its bag)
+            # this side's aggregates in place of its bag; a presence
+            # count where an INNER flag tests it or nothing else
+            # aggregates (a side must aggregate to join its keys)
             first = df.columns[0] if df.columns else None
-            return [F.count(F.lit(1)).alias(f"__n{idx}")] + [
-                ctx.compile(self._rewrite_bag_refs(pg[2], first))
-                   .alias(f"__a{gi}")
-                for gi, pg in enumerate(plan_gens)
-                if pg[0] == "agg" and pg[1] == idx]
+            mine = [ctx.compile(self._rewrite_bag_refs(p, first)).alias(tmp)
+                    for (tmp, p), side in zip(parts, sides) if side == idx]
+            if inner[idx] or not mine:
+                mine.insert(0, F.count(F.lit(1)).alias(f"__n{idx}"))
+            return mine
 
-        out, knames, group = self._cogroup_sides(cur, partials)
-        inner_flags = cur.inner or [False] * len(cur.inputs)
-        for idx, is_inner in enumerate(inner_flags):
+        out, knames, fields = self._cogroup_sides(cur, partials)
+        for idx, is_inner in enumerate(inner):
             if is_inner:
                 out = out.filter(F.col(f"__n{idx}").isNotNull())
-        for bag, want_empty in parsed_terms:
-            n = F.col(f"__n{bag_names.index(bag)}")
-            out = out.filter(n.isNull() if want_empty else n.isNotNull())
+        out = _fill_absent(out, parts)
+        if conds:
+            ctx = self._ctx(out)
+            out = out.filter(functools.reduce(operator.and_, (
+                ctx.compile(self._rewrite_key_refs(c, knames, fields))
+                for c in conds)))
         if getattr(cur, "parallel", None):
             # PARALLEL on the COGROUP sets the reduce-side partition
             # count (observable as part-file count under STORE);
             # _c_cogroup honors it with a group-keyed repartition, so
-            # the fused shape must too (r10 advisor).
+            # the fused shape must too.
             out = out.repartition(cur.parallel,
                                   *[F.col(k) for k in knames])
-        final = []
-        for gi, pg in enumerate(plan_gens):
-            if pg[0] == "group":
-                final.append(group.alias(pg[1]))
-            else:
-                c = F.col(f"__a{gi}")
-                if pg[4] in ("COUNT", "COUNT_STAR"):
-                    c = F.coalesce(c, F.lit(0).cast("bigint"))
-                final.append(c.alias(pg[3]))
-        return out.select(*final)
+        return self._project_fused(out, outs, knames, fields)
 
     def _cogroup_sides(self, node: L.CoGroup, side_aggs) \
-            -> tuple[DataFrame, list[str]]:
+            -> tuple[DataFrame, list[str], list[str]]:
         """The COGROUP spine: per input, groupBy(keys).agg(<that side's
         aggregates>), then a FULL OUTER join of the sides on the keys.
         ``side_aggs(idx, df, ctx)`` gives input idx's aggregate columns
         — its bag (_c_cogroup) or its partial aggregates
         (_try_fuse_cogroup_agg). Returns the joined frame, its key
-        column names (__k0, __k1, …) and the `group` column over them,
-        whose fields are named after the first input's keys as GROUP
-        names them (_key_name). The key join is null-safe
+        column names (__k0, __k1, …) and the names of the `group`
+        fields over them: the first input's keys as GROUP names them
+        (_key_name). The key join is null-safe
         (_null_safe_eq) with the keys coalesced: a USING join would
         split the null-key group per side."""
         knames = [f"__k{i}" for i in range(len(node.keys[0]))]
@@ -1449,8 +1394,8 @@ class PlanCompiler:
                 out = out.withColumn(lname,
                                      F.coalesce(F.col(lname), F.col(rname))) \
                          .drop(rname)
-        fields = [self._key_name(k, i) for i, k in enumerate(node.keys[0])]
-        return out, knames, _group_col(knames, fields)
+        return out, knames, [self._key_name(k, i)
+                             for i, k in enumerate(node.keys[0])]
 
     def _c_cogroup(self, node: L.CoGroup) -> DataFrame:
         """COGROUP a BY k, b BY k → (group, bag_a, bag_b): the COGROUP
@@ -1466,11 +1411,12 @@ class PlanCompiler:
             return [F.collect_list(F.struct(*[F.col(c) for c in df.columns]))
                     .alias(bag_names[idx])]
 
-        out, _, group = self._cogroup_sides(node, bag)
+        out, knames, fields = self._cogroup_sides(node, bag)
         bag_cols = [F.coalesce(F.col(bag_name),
                                F.array().cast(bag_type)).alias(bag_name)
                     for bag_name, bag_type in zip(bag_names, bag_types)]
-        out = out.select(group.alias(GROUP_COL), *bag_cols)
+        out = out.select(_group_col(out, knames, fields).alias(GROUP_COL),
+                         *bag_cols)
         for bag_name, is_inner in zip(bag_names, inner):
             if is_inner:
                 out = out.filter(F.size(F.col(bag_name)) > 0)
@@ -1544,10 +1490,8 @@ class PlanCompiler:
                           for j, k in enumerate(lkeys)]).distinct()
                     rk = [self._ctx(dfs[i]).compile(k)
                           for k in node.keys[i]]
-                    pcond = None
-                    for j, r in enumerate(rk):
-                        c = r == F.col(f"__msk{j}")
-                        pcond = c if pcond is None else pcond & c
+                    pcond = _equi(rk, [F.col(f"__msk{j}")
+                                       for j in range(len(rk))])
                     right = right.join(F.broadcast(probe), on=pcond,
                                        how="left_semi")
                 right = right.hint("merge")
@@ -1577,10 +1521,7 @@ class PlanCompiler:
                     # it's also the smaller, already-reduced side).
                     left = left.hint(hint)
             rkeys = [self._ctx(dfs[i]).compile(k) for k in node.keys[i]]
-            cond = None
-            for lk, rk in zip(lkeys, rkeys):
-                c = lk == rk
-                cond = c if cond is None else (cond & c)
+            cond = _equi(lkeys, rkeys)
             how = {"semi": "left_semi", "anti": "left_anti"}.get(node.how,
                                                                  node.how)
             left = left.join(right, on=cond, how=how)

@@ -722,14 +722,14 @@ def test_percentile_fusion_shares_one_buffer(eng, li):
 
 def _cogroup_pair(eng, a, b, by, gens):
     """Run one COGROUP script twice: anti-joined with IsEmpty(tb) (the
-    aggregate-only shape) and with COUNT_STAR(tb) == 0 (the same test,
-    but not an IsEmpty term, so the bags materialize; COUNT would skip
-    tb tuples whose first field is null). Returns the two frames."""
+    aggregate-only shape) and with SIZE(tb) == 0 (the same test, but
+    SIZE is not an aggregate, so the bags materialize). Returns the two
+    frames."""
     from spork_spark.parser import run_script
     rels_in = {"ta": eng.from_df(a, alias="ta"),
                "tb": eng.from_df(b, alias="tb")}
     out = []
-    for test in ("IsEmpty(tb)", "COUNT_STAR(tb) == 0"):
+    for test in ("IsEmpty(tb)", "SIZE(tb) == 0"):
         script = f"""
             cg = COGROUP ta BY {by}, tb BY {by};
             anti = FILTER cg BY {test};
@@ -786,11 +786,10 @@ def test_cogroup_agg_fusion_multi_key(eng, spark):
                                       ((3, 3), 1, None, 0)], key=str)
 
 
-def test_cogroup_agg_fusion_bails_on_group_deref(eng, spark):
-    """group.field on a struct-typed single cogroup key must not fuse:
-    the fused path compiled any Deref of group as the WHOLE key (and
-    misnamed it). It now falls back to the bag path, which projects the
-    dereferenced field (r10 advisor)."""
+def test_cogroup_agg_fusion_fuses_group_deref(eng, spark):
+    """group.field on a struct-typed single cogroup key is a field of
+    the key on the fused path too: the shape fuses (no collect_list)
+    and projects the dereferenced field, as the bag path does."""
     from pyspark.sql import functions as SF
     from spork_spark.parser import run_script
     a = spark.createDataFrame(
@@ -808,8 +807,121 @@ def test_cogroup_agg_fusion_bails_on_group_deref(eng, spark):
     """
     df = run_script(eng, script, relations=rels_in)["out"].df()
     rows = sorted(map(tuple, df.collect()))
+    assert "collect_list" not in plan_of(df)
     assert df.columns == ["kf", "n"]
     assert rows == [(1, 1), (1, 1)]  # field value per struct group
+
+
+def test_fused_group_deref_on_struct_key(eng, spark):
+    """group.<field> on a single struct-typed GROUP key reads that field
+    of the key in the fused plan (it was read as a key column named
+    <field>, which does not exist)."""
+    from pyspark.sql import functions as SF
+    from spork_spark.parser import run_script
+    a = spark.createDataFrame(
+        [(1, 10, 10.0), (1, 20, 5.0), (1, 20, 2.0), (2, 10, 1.0)],
+        "f1 int, f2 int, v double")
+    ta = eng.from_df(a.select(SF.struct("f1", "f2").alias("k"), "v"),
+                     alias="ta")
+    df = run_script(eng, """
+        g = GROUP ta BY k;
+        out = FOREACH g GENERATE group.f1 AS kf, group.f2 + 1 AS k2,
+                                 COUNT_STAR(ta) AS n;
+    """, relations={"ta": ta})["out"].df()
+    assert "collect_list" not in plan_of(df)
+    assert sorted(map(tuple, df.collect())) == \
+        [(1, 11, 1), (1, 21, 2), (2, 11, 1)]
+
+
+def test_cogroup_bag_hof_inside_aggregate_keeps_bag(eng, spark):
+    """An aggregate over a nested-block bag operator (COUNT of a
+    DISTINCT bag) on a COGROUP side is not a fusable part: the bag
+    materializes and the rows are the bag path's."""
+    from spork_spark.parser import run_script
+    rels = {"ta": eng.from_df(spark.createDataFrame(
+                [(1, 1), (2, 2)], "k int, v int"), alias="ta"),
+            "tb": eng.from_df(spark.createDataFrame(
+                [(1, 5), (1, 5), (1, 6)], "k int, w int"), alias="tb")}
+    df = run_script(eng, """
+        cg = COGROUP ta BY k, tb BY k;
+        out = FOREACH cg { d = DISTINCT tb.w;
+                           GENERATE group AS g, COUNT(d) AS n; };
+    """, relations=rels)["out"].df()
+    assert sorted(map(tuple, df.collect())) == [(1, 2), (2, 0)]
+
+
+def test_absent_side_reads_empty_bag_aggregates(eng, spark):
+    """A COGROUP side absent from a group and a group whose inner CROSS
+    is empty read Pig's aggregates over an empty bag on both fused
+    paths: COUNT_STAR, COUNT and COUNT_DISTINCT 0, SUM null."""
+    from spork_spark.parser import run_script
+    t = eng.from_df(spark.createDataFrame(
+        [(1, 10), (1, 1), (2, 10)], "k int, v int"), alias="t")
+    tb = eng.from_df(spark.createDataFrame([(1, 4)], "k int, w int"),
+                     alias="tb")
+    rels = run_script(eng, """
+        cg = COGROUP t BY k, tb BY k;
+        co = FOREACH cg GENERATE group AS k, COUNT_STAR(tb) AS ns,
+                                 COUNT(tb) AS nc, SUM(tb.w) AS s,
+                                 COUNT_DISTINCT(tb.w) AS nd;
+        g = GROUP t BY k;
+        cx = FOREACH g {
+            hv0 = FOREACH t GENERATE v AS hv;
+            hi = FILTER hv0 BY hv > 5;
+            lv0 = FOREACH t GENERATE v AS lv;
+            lo = FILTER lv0 BY lv < 2;
+            c = CROSS hi, lo;
+            GENERATE group AS k, COUNT_STAR(c) AS ns, COUNT(c) AS nc,
+                     SUM(c.hv) AS s, COUNT_DISTINCT(c.hv) AS nd;
+        };
+    """, relations={"t": t, "tb": tb})
+    co, cx = rels["co"].df(), rels["cx"].df()
+    assert "collect_list" not in plan_of(co)
+    assert "collect_list" not in plan_of(cx)
+    assert sorted(map(tuple, co.collect())) == [(1, 1, 1, 4, 1),
+                                                (2, 0, 0, None, 0)]
+    assert sorted(map(tuple, cx.collect())) == [(1, 1, 1, 10, 1),
+                                                (2, 0, 0, None, 0)]
+
+
+@pytest.mark.parametrize("filt,gens,twin_filt,twin_gens", [
+    pytest.param("COUNT(tb) == 0", "group AS k",
+                 "SIZE(tb) == 0", "group AS k", id="count_filter"),
+    pytest.param(None, "group AS k, (IsEmpty(tb) ? 1 : 0) AS anti",
+                 None, "group AS k, (SIZE(tb) == 0 ? 1 : 0) AS anti",
+                 id="isempty_bincond"),
+    pytest.param(None, "(chararray)group AS g, COUNT_STAR(ta) AS n",
+                 None, "(chararray)group AS g, SIZE(ta) AS n",
+                 id="key_cast"),
+    pytest.param(None, "group AS k, SUM(ta.v) / COUNT_STAR(ta) AS m",
+                 None, "group AS k, SUM(ta.v) / SIZE(ta) AS m",
+                 id="agg_ratio"),
+])
+def test_cogroup_fused_shapes_match_bag_twin(eng, spark, filt, gens,
+                                             twin_filt, twin_gens):
+    """Each COGROUP shape the generator planner fuses (an aggregate
+    predicate, IsEmpty under a BINCOND, a key cast, a ratio of
+    aggregates) has no collect_list and returns the rows of its twin,
+    which uses SIZE (not an aggregate) and so keeps the bags."""
+    from spork_spark.parser import run_script
+    rels = {"ta": eng.from_df(spark.createDataFrame(
+                [(1, 10.0), (1, 5.0), (2, 1.0), (None, 7.0)],
+                "k int, v double"), alias="ta"),
+            "tb": eng.from_df(spark.createDataFrame(
+                [("x", 2), ("y", 3), ("z", None)], "s string, k int"),
+                alias="tb")}
+
+    def run(f, g):
+        src = "cg = COGROUP ta BY k, tb BY k;\n"
+        if f:
+            src += f"cg2 = FILTER cg BY {f};\n"
+        src += f"out = FOREACH {'cg2' if f else 'cg'} GENERATE {g};"
+        return run_script(eng, src, relations=rels)["out"].df()
+    fused, twin = run(filt, gens), run(twin_filt, twin_gens)
+    assert "collect_list" not in plan_of(fused)
+    assert "collect_list" in plan_of(twin)
+    assert sorted(map(tuple, fused.collect()), key=str) == \
+        sorted(map(tuple, twin.collect()), key=str)
 
 
 _A_ROWS = [(1, 10), (1, 20), (2, 5), (3, -1)]
