@@ -282,7 +282,13 @@ class PlanCompiler:
             alias, inner = (g.name, g.child) if isinstance(g, E.Aliased) \
                 else (None, g)
             if _is_group_ref(inner):
-                outs.append(("group", inner, alias))
+                # an unaliased position among several keys takes the
+                # key's name
+                if alias is None and len(keys) > 1 and \
+                        isinstance(getattr(inner, "field", None), int):
+                    alias = self._key_name(keys[inner.field], inner.field)
+                outs.append(("group", inner,
+                             alias or self._default_name(inner, i)))
                 continue
             name = alias or f"col_{i}"
             rem = split(inner, prefix.format(i=i, name=name))
@@ -308,7 +314,7 @@ class PlanCompiler:
         cols = []
         for kind, e, name in outs:
             if kind == "group":
-                cols.append(self._compile_group_ref(df, e, names, name,
+                cols.append(self._compile_group_ref(df, ctx, e, names, name,
                                                     fields))
             elif isinstance(e, E.Col):         # a bare aggregate part
                 cols.append(df[e.name].alias(name) if e.name != name
@@ -727,8 +733,10 @@ class PlanCompiler:
             if isinstance(ref, E.Col):         # whole `group`
                 return [result_columns[i]]
             fld = ref.field
-            idx = fld if isinstance(fld, int) else (
-                key_names.index(fld) if fld in key_names else None)
+            if isinstance(fld, int):    # on one key: a field of the key
+                idx = fld if len(key_names) > 1 else None
+            else:
+                idx = key_names.index(fld) if fld in key_names else None
             if idx is not None and idx not in field_pos:
                 field_pos[idx] = i
         if len(field_pos) != len(key_names):
@@ -982,36 +990,37 @@ class PlanCompiler:
                    for n in E.nodes(e))
 
     @staticmethod
-    def _key_field(field: str | int, names: list[str],
-                   fields: list[str] | None) -> tuple[str, str | None]:
-        """Resolve group.<field> to (key column, field of that column or
-        None). A field named like a key (``fields``, default the column
-        ``names``) or a position is that key; any other name on a single
-        key is a field of the key itself (a struct-typed key)."""
+    def _key_ref(field: str | int, names: list[str],
+                 fields: list[str] | None) -> E.Expr:
+        """group.<field> as an expression over the aggregated frame's
+        key columns ``names``. A field named like a key (``fields``,
+        default ``names``) is that key, and so is a position among
+        several keys; on a single key any other field, named or
+        positional, is a field of the key itself (a struct-typed key),
+        dereferenced as the bag path dereferences it."""
         fields = fields or names
-        if isinstance(field, int):
-            return names[field], None
-        if field in fields:
-            return names[fields.index(field)], None
+        if isinstance(field, str) and field in fields:
+            return E.Col(names[fields.index(field)])
         if len(names) == 1:
-            return names[0], field
-        return field, None                   # Spark reports it unresolved
+            return E.Deref(E.Col(names[0]), field)
+        if isinstance(field, int):
+            return E.Col(names[field])
+        return E.Col(field)                  # Spark reports it unresolved
 
-    def _compile_group_ref(self, df: DataFrame, e: E.Expr,
-                           names: list[str], alias: str | None,
+    def _compile_group_ref(self, df: DataFrame, ctx: ExprCompiler,
+                           e: E.Expr, names: list[str], alias: str,
                            fields: list[str] | None = None) -> Column:
         """Compile a `group` reference over the key columns ``names`` of
         the aggregated frame ``df`` (GROUP ALL → the literal 'all');
         ``fields`` names the key fields when the columns are named
-        otherwise."""
+        otherwise. A field of a key compiles in ``ctx``."""
         if isinstance(e, E.Col):
             if not names:
-                return F.lit("all").alias(alias or GROUP_COL)
-            return _group_col(df, names, fields).alias(alias or GROUP_COL)
-        col, sub = self._key_field(e.field, names, fields)
-        c = df[col] if sub is None else df[col].getField(sub)
-        return c.alias(alias or (e.field if isinstance(e.field, str)
-                                 else (fields or names)[e.field]))
+                return F.lit("all").alias(alias)
+            return _group_col(df, names, fields).alias(alias)
+        ref = self._key_ref(e.field, names, fields)
+        c = df[ref.name] if isinstance(ref, E.Col) else ctx.compile(ref)
+        return c.alias(alias)
 
     def _is_key_scalar(self, e: E.Expr, keys: list[E.Expr],
                        extra: frozenset | set = frozenset()) -> bool:
@@ -1035,9 +1044,11 @@ class PlanCompiler:
                 if not (isinstance(n.child, E.Col)
                         and n.child.name == GROUP_COL):
                     return False
-                # positional key deref must be in range (group.$5 with
-                # 2 keys falls back to the unfused path's own error)
-                return not isinstance(n.field, int) or n.field < len(keys)
+                # a position among several keys must be in range
+                # (group.$5 with 2 keys falls back to the unfused path's
+                # own error); on one key it is a field of the key
+                return not isinstance(n.field, int) or len(keys) == 1 \
+                    or n.field < len(keys)
             if isinstance(n, (E.Lambda, E.Star)) or self._is_agg_call(n) \
                     or (isinstance(n, E.Func) and n.name.upper() in BAG_HOFS):
                 return False
@@ -1049,13 +1060,12 @@ class PlanCompiler:
                           fields: list[str] | None = None) -> E.Expr:
         """Rewrite `group` references in a post-agg remainder to the
         aggregated frame's key columns ``names`` (GROUP ALL → the
-        literal 'all'; fields resolve as in _key_field)."""
+        literal 'all'; fields resolve as in _key_ref)."""
         def key_col(n: E.Expr) -> E.Expr | None:
             if isinstance(n, E.Col) and n.name == GROUP_COL:
                 return E.Col(names[0]) if names else E.Lit("all")
             if isinstance(n, E.Deref) and _is_group_ref(n):
-                col, sub = self._key_field(n.field, names, fields)
-                return E.Col(col) if sub is None else E.Deref(E.Col(col), sub)
+                return self._key_ref(n.field, names, fields)
             return None
 
         return E.transform(e, key_col)
@@ -1223,11 +1233,9 @@ class PlanCompiler:
         df = self._probe_keys(df, keys)     # group-key cast discards
         grouped = self._grouped_agg(node, df, ctx, keys,
                                     [(bag, bag_alias, False)])
-        out = grouped.select(
-            self._compile_group_ref(
-                grouped, E.Col(GROUP_COL),
-                [self._key_name(k, i) for i, k in enumerate(keys)], None),
-            F.col(bag_alias))
+        names = [self._key_name(k, i) for i, k in enumerate(keys)]
+        group = _group_col(grouped, names) if names else F.lit("all")
+        out = grouped.select(group.alias(GROUP_COL), F.col(bag_alias))
         if node.mode == "all":
             return out
         placed = self._apply_partitioner(node, out, [GROUP_COL])

@@ -833,6 +833,42 @@ def test_fused_group_deref_on_struct_key(eng, spark):
         [(1, 11, 1), (1, 21, 2), (2, 11, 1)]
 
 
+def test_fused_positional_group_deref_on_struct_key(eng, spark):
+    """group.$i on a single struct-typed key is field i of the key on
+    the fused GROUP and COGROUP paths, bare and inside a remainder, and
+    the rows equal the bag path's (its twin counts with SIZE, which is
+    not an aggregate); group.$1 was read as a second key."""
+    from pyspark.sql import functions as SF
+    from spork_spark.parser import run_script
+    a = spark.createDataFrame(
+        [(1, 10, 10.0), (1, 20, 5.0), (1, 20, 2.0), (2, 10, 1.0)],
+        "f1 int, f2 int, v double")
+    b = spark.createDataFrame([(2, 10, "x"), (3, 30, "y")],
+                              "f1 int, f2 int, s string")
+    rels = {"ta": eng.from_df(a.select(SF.struct("f1", "f2").alias("k"),
+                                       "v"), alias="ta"),
+            "tb": eng.from_df(b.select(SF.struct("f1", "f2").alias("k"),
+                                       "s"), alias="tb")}
+    gens = "group.$0 AS x, group.$1 AS y, group.$0 + 1 AS z, {}(ta) AS n"
+    got = {}
+    for agg in ("COUNT_STAR", "SIZE"):
+        outs = run_script(eng, f"""
+            g = GROUP ta BY k;
+            go = FOREACH g GENERATE {gens.format(agg)};
+            cg = COGROUP ta BY k, tb BY k;
+            co = FOREACH cg GENERATE {gens.format(agg)};
+        """, relations=rels)
+        got[agg] = {r: outs[r].df() for r in ("go", "co")}
+    for r, want in (("go", [(1, 10, 2, 1), (1, 20, 2, 2), (2, 10, 3, 1)]),
+                    ("co", [(1, 10, 2, 1), (1, 20, 2, 2), (2, 10, 3, 1),
+                            (3, 30, 4, 0)])):
+        fused, twin = got["COUNT_STAR"][r], got["SIZE"][r]
+        assert "collect_list" not in plan_of(fused)
+        assert "collect_list" in plan_of(twin)
+        assert sorted(map(tuple, fused.collect())) == \
+            sorted(map(tuple, twin.collect())) == want
+
+
 def test_cogroup_bag_hof_inside_aggregate_keeps_bag(eng, spark):
     """An aggregate over a nested-block bag operator (COUNT of a
     DISTINCT bag) on a COGROUP side is not a fusable part: the bag
