@@ -398,7 +398,13 @@ class ExprCompiler:
 
     @staticmethod
     def _field_name(st: T.StructType, f: Any) -> str:
-        return st.fields[f].name if isinstance(f, int) else f
+        if not isinstance(f, int):
+            return f
+        if f >= len(st.fields):
+            raise ValueError(
+                f"Out of bound access: ${f} on a {len(st.fields)}-field "
+                f"tuple {st.fieldNames()}")
+        return st.fields[f].name
 
     def _c_aliased(self, e: E.Aliased) -> Column:
         return self.compile(e.child).alias(e.name)
@@ -540,8 +546,9 @@ class ExprCompiler:
     def _bag_mode_agg(self, name: str, e: E.Func) -> Column | None:
         """Pig aggregates are EvalFuncs over BAGS. Outside a fused groupBy
         (i.e. the bag is a materialized array column), compile them as
-        array expressions: COUNT=non-null first field, SUM/AVG fold,
-        MIN/MAX array extrema; empty bag → null (Pig)."""
+        array expressions: COUNT=non-null first field, COUNT_DISTINCT=
+        distinct non-null first field, SUM/AVG fold, MIN/MAX array
+        extrema; empty bag → null (Pig)."""
         if not e.args:
             return None
         arg = e.args[0]
@@ -569,6 +576,8 @@ class ExprCompiler:
             return F.size(nn).cast("long")
         if name == "COUNT_STAR":
             return F.size(c).cast("long")
+        if name == "COUNT_DISTINCT":
+            return F.size(F.array_distinct(nn)).cast("long")
         vt = elem.fields[0].dataType if isinstance(elem, T.StructType) \
             else elem
         if isinstance(vt, T.DecimalType) and vt.scale <= 37:
@@ -621,7 +630,8 @@ class ExprCompiler:
         hof = self._bag_hofs(name, e)
         if hof is not None:
             return hof
-        if name in ("COUNT", "COUNT_STAR", "SUM", "AVG", "MIN", "MAX"):
+        if name in ("COUNT", "COUNT_STAR", "COUNT_DISTINCT", "SUM", "AVG",
+                    "MIN", "MAX"):
             bagged = self._bag_mode_agg(name, e)
             if bagged is not None:
                 return bagged

@@ -41,6 +41,7 @@ from ..caching import track
 from ..functions.builtins import ALGEBRAIC_AGGS, BAG_HOFS
 from ..plans import expressions as E
 from ..plans import logical as L
+from ..session import shuffle_partitions
 from .expr import ExprCompiler
 
 GROUP_COL = "group"
@@ -1265,8 +1266,7 @@ class PlanCompiler:
                 "Spark's hash placement")
             return None
         from ..operators.partitioner import custom_partition
-        n = node.parallel or int(
-            self.spark.conf.get("spark.sql.shuffle.partitions"))
+        n = node.parallel or shuffle_partitions(self.spark)
         return custom_partition(df, key_cols, n, fn)
 
     @staticmethod

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import shuffle_partitions
 from .text import tokens, word_ngrams
 
 
@@ -582,8 +583,9 @@ def pareto_frontier(df: DataFrame, dims: dict[str, str],
     scan — each partition's output is its own skyline, usually tiny);
     stage 2 TREE-MERGES the local frontiers: repartition the pruned
     survivors onto ``fan_in``× fewer tasks, re-prune, and repeat until
-    one partition remains — log_fan_in(P) rounds, so no single task
-    ever concatenates more than ``fan_in`` already-pruned frontiers
+    one partition remains — log_fan_in(P) rounds for P the session's
+    shuffle partitions, so no single task ever concatenates more than
+    ``fan_in`` already-pruned frontiers
     (the old coalesce(1) gather put the UNION of all local frontiers —
     potentially input-sized for anti-correlated dims — in one Python
     task; worse, a shuffle-free coalesce(1) also collapses the stage-1
@@ -659,11 +661,7 @@ def pareto_frontier(df: DataFrame, dims: dict[str, str],
     # would pull the UPSTREAM prune pass into the same n tasks,
     # serializing stage 1; the shuffle boundary keeps every prune
     # round at its own parallelism and only frontier rows travel.
-    try:
-        n = int(df.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", "32"))
-    except Exception:
-        n = 32
+    n = shuffle_partitions(df.sparkSession)
     out = local
     while n > 1:
         n = max(1, n // fan_in)

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import shuffle_partitions
+
 MERSENNE_PRIME = (1 << 61) - 1
 
 
@@ -656,7 +658,7 @@ def containment_pairs(df: DataFrame, id_col: str, text_col: str,
     inst = _shingle_instances(uniq_gn, id_col, text_col, n, carry=("__gn",))
     spark = df.sparkSession
     npart = max(spark.sparkContext.defaultParallelism,
-                int(spark.conf.get("spark.sql.shuffle.partitions")))
+                shuffle_partitions(spark))
     vocab = (inst.repartition(npart, "__s")
                  .groupBy("__s")
                  .agg(F.collect_set(

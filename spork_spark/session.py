@@ -8,7 +8,10 @@ expressionOperators/POCast.java). PySpark 4.x defaults to ANSI mode, which
 *throws* on bad casts / overflow — so the engine session turns ANSI off and
 compiles Pig casts to ``try_cast`` equivalents (SURVEY.md §1.3).
 
-Scale posture (100 TB design, tested on local[32]):
+Scale posture (100 TB design):
+- Shuffle partitions sized to the session's cores (``defaultParallelism``:
+  N on ``local[N]``, the executor cores on a cluster), raised by the
+  input's bytes when the input directory is known (``autosize_conf``).
 - AQE on: runtime coalescing of shuffle partitions, skew-join splitting
   (replaces the reference's SkewedPartitioner machinery, SURVEY.md §4.2).
 - Broadcast threshold tuned so small dims (region/nation/supplier at any
@@ -19,12 +22,13 @@ Scale posture (100 TB design, tested on local[32]):
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the local[32] test harness; on a real cluster the
-# caller passes its own master/conf and only the semantic confs below matter.
+# On a real cluster the caller passes its own master/conf; the semantic
+# confs below are the ones the engine's results depend on.
 _SEMANTIC_CONF = {
     # Pig semantics: bad cast -> null, int overflow wraps (Java semantics).
     "spark.sql.ansi.enabled": "false",
@@ -35,6 +39,11 @@ _SEMANTIC_CONF = {
     # mutated per-read — it is a session-global knob.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
+# The debugging conf is static, fixed for the JVM a Python process
+# drives, so configure_session reads it once per process.
+_debugging_checked = False
 
 _SCALE_CONF = {
     "spark.sql.adaptive.enabled": "true",
@@ -54,9 +63,6 @@ _SCALE_CONF = {
     "spark.sql.autoBroadcastJoinThreshold": "-1",
     "spark.sql.adaptive.autoBroadcastJoinThreshold": str(10 * 1024 * 1024),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # local[32] default; a real deployment sizes this to cluster cores and
-    # lets AQE coalesce down.
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
     # Long-lived driver hygiene: the status store retains per-execution /
     # per-job/stage metadata forever at the defaults (1000 executions,
     # 1000 jobs); a driver serving tens of thousands of queries (a soak
@@ -94,7 +100,7 @@ _SCALE_CONF = {
     # the script statement. A static conf, fixed when the first session
     # of the JVM is built (PySpark also caches it in a module global,
     # pyspark/errors/utils.py is_debugging_enabled).
-    "spark.python.sql.dataFrameDebugging.enabled": "false",
+    _DEBUGGING: "false",
 }
 
 
@@ -128,19 +134,22 @@ def autosize_conf(input_bytes: int, cores: int | None = None) -> dict:
     (SCALE_r03.json finding 5: the sf0.1 profile applied 10x data left
     `distinct` at 1.70 s; input-derived sizing brought it to 0.86 s).
 
-    - ``shuffle.partitions``: an UPPER bound of ~3 MB of scan input per
-      shuffle partition, floored at the core count and capped at 2048.
-      AQE (on by default) coalesces DOWN at runtime using exact shuffle
-      bytes, so oversizing is safe both ways; static undersizing is the
-      failure mode this prevents.
+    - ``shuffle.partitions``: ~3 MB of scan input per shuffle partition,
+      floored at the core count and capped at 2048. AQE coalesces only
+      the reduce-side reads at runtime; every map task still writes one
+      shuffle block per partition, every ORDER BY samples one range
+      bound per partition, and an explicit ``repartition(n)`` taken from
+      this conf runs n tasks. So the count starts at the cores and grows
+      only with the input.
     - ``files.maxPartitionBytes``: split scans so the map side has >=2
       tasks per core (the sf1 fixture is 16 x 11 MB files; the default
       128 MB splits would cap the scan at 16 of 32 cores).
     At 100 TB the same rule lands near the cap and AQE takes over.
+    ``cores`` defaults to this machine's CPU count.
     """
-    cores = cores or os.cpu_count() or 8
     if input_bytes <= 0:
         return {}
+    cores = cores or os.cpu_count()
     parts = max(cores, min(2048, input_bytes // (3 * 1024 * 1024) or 1))
     split = max(4 * 1024 * 1024,
                 min(128 * 1024 * 1024, input_bytes // (2 * cores) or 1))
@@ -148,6 +157,26 @@ def autosize_conf(input_bytes: int, cores: int | None = None) -> dict:
         "spark.sql.shuffle.partitions": str(parts),
         "spark.sql.files.maxPartitionBytes": str(split),
     }
+
+
+def _sizing_conf(spark: SparkSession, data_dir: str | None) -> dict:
+    """The engine's partition sizing for ``spark``: $SPARK_GRAFT_SHUFFLE
+    when set; else one shuffle partition per core of the session
+    (``defaultParallelism``), raised by ``autosize_conf`` when the input
+    directory is known."""
+    shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE")
+    if shuffle:
+        return {"spark.sql.shuffle.partitions": shuffle}
+    cores = spark.sparkContext.defaultParallelism
+    auto = autosize_conf(_input_bytes(data_dir), cores) if data_dir else {}
+    return {"spark.sql.shuffle.partitions": str(cores), **auto}
+
+
+def shuffle_partitions(spark: SparkSession) -> int:
+    """The session's shuffle-partition count, for operators that size an
+    explicit ``repartition(n)``; ``get_spark`` (or ``SET default_parallel``)
+    sets it."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def get_spark(app_name: str = "spork-spark", master: str | None = None,
@@ -158,19 +187,20 @@ def get_spark(app_name: str = "spork-spark", master: str | None = None,
     Master resolution: explicit arg > $SPARK_GRAFT_CPUS (local[N]) >
     existing session > local[*].
 
-    Session sizing follows the data by default: if ``data_dir`` (or
-    $SPARK_GRAFT_SF_DIR) names the input directory, shuffle-partition
-    upper bound and scan split size are derived from the largest table's
-    bytes (see ``autosize_conf``); explicit ``extra_conf`` and
-    $SPARK_GRAFT_SHUFFLE always win.
+    Shuffle partitions default to the session's cores; if ``data_dir``
+    (or $SPARK_GRAFT_SF_DIR) names the input directory, the partition
+    count and scan split size are derived from the largest table's bytes
+    (see ``autosize_conf``). $SPARK_GRAFT_SHUFFLE replaces that rule, and
+    explicit ``extra_conf`` wins over both.
     """
+    extra_conf = extra_conf or {}
     builder = SparkSession.builder.appName(app_name)
     # local-mode JVMs default to a 1g heap regardless of machine size —
     # fine at the correctness-gate scale, but 32 concurrent tasks'
     # shuffle/join buffers overrun it at sf1+. Create-time-only conf, so
     # it is a no-op when attaching to an existing session; explicit
     # extra_conf / $SPARK_GRAFT_DRIVER_MEM stay authoritative.
-    if not (extra_conf and "spark.driver.memory" in extra_conf):
+    if "spark.driver.memory" not in extra_conf:
         builder = builder.config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -180,16 +210,7 @@ def get_spark(app_name: str = "spork-spark", master: str | None = None,
             master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
-    cores = None
-    if master and master.startswith("local[") and master[6:-1].isdigit():
-        cores = int(master[6:-1])
-    sized = dict(_SCALE_CONF)
-    data_dir = data_dir or os.environ.get("SPARK_GRAFT_SF_DIR")
-    auto = {}
-    if data_dir and "SPARK_GRAFT_SHUFFLE" not in os.environ:
-        auto = autosize_conf(_input_bytes(data_dir), cores)
-        sized.update(auto)
-    for k, v in {**_SEMANTIC_CONF, **sized, **(extra_conf or {})}.items():
+    for k, v in {**_SEMANTIC_CONF, **_SCALE_CONF, **extra_conf}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # Semantic confs are runtime-settable; enforce them even on a session we
@@ -199,24 +220,43 @@ def get_spark(app_name: str = "spork-spark", master: str | None = None,
             spark.conf.set(k, v)
         except Exception:
             pass
-    # Sizing confs are runtime-settable too; re-apply on a reused session so
-    # a long-lived driver pointed at new data resizes without restart.
+    # Sizing confs are runtime-settable and need the live context's core
+    # count, so they are set on the built session; on a reused one a
+    # long-lived driver pointed at new data resizes without restart.
     # Explicit extra_conf keys stay authoritative.
-    for k, v in auto.items():
-        if extra_conf and k in extra_conf:
-            continue
-        try:
+    data_dir = data_dir or os.environ.get("SPARK_GRAFT_SF_DIR")
+    for k, v in _sizing_conf(spark, data_dir).items():
+        if k not in extra_conf:
             spark.conf.set(k, v)
-        except Exception:
-            pass
     return spark
 
 
 def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply the engine's semantic confs to an externally-created session."""
+    """Apply the engine's semantic confs to an externally-created session.
+
+    Two things only ``get_spark`` can do stay as the session's builder
+    left them:
+    - ``spark.python.sql.dataFrameDebugging.enabled`` is static, fixed
+      when the JVM's first session was built. With it on, PySpark
+      records a Python call site for every Column call, about 3,600 extra
+      py4j round trips per pass of the 12 PigMix scripts; one warning
+      per process says so.
+    - The engine's partition sizing (``_sizing_conf``) is not applied:
+      the session's owner chose its ``spark.sql.shuffle.partitions``.
+    """
+    global _debugging_checked
     for k, v in _SEMANTIC_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:
             pass
+    if _debugging_checked:
+        return spark
+    _debugging_checked = True
+    if spark.conf.get(_DEBUGGING, "true").lower() == "true":
+        logging.getLogger(__name__).warning(
+            "%s is on in this session and is static, so it cannot be "
+            "turned off here: every Column call records its Python call "
+            "site, several py4j round trips each. Build the session "
+            "with it false (get_spark does).", _DEBUGGING)
     return spark

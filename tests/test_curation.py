@@ -413,3 +413,29 @@ def test_pareto_frontier_per_group(spark):
                                {"a": "max", "b": "max"})
         grouped = {r.id for r in out.filter(F.col("g") == g).collect()}
         assert {r.id for r in solo.collect()} == grouped
+
+
+def test_pareto_frontier_merge_rounds_follow_shuffle_partitions(spark):
+    """The tree merge takes its round count from the session's shuffle
+    partitions: on a 4-partition session one merge round (fan-in 4)
+    follows the local pass, so the plan has exactly 2 MapInPandas, and
+    the rows are the brute-force skyline."""
+    from spork_spark.operators import pareto_frontier
+    import random
+    rng = random.Random(5)
+    rows = [(i, rng.uniform(0, 1), rng.uniform(0, 1)) for i in range(120)]
+    df = spark.createDataFrame(rows, "id bigint, a double, b double")
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        out = pareto_frontier(df, {"a": "max", "b": "max"})
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        got = {r.id for r in out.collect()}
+    finally:
+        spark.conf.set(key, before)
+    assert plan.count("MapInPandas") == 2
+    ref = {x[0] for x in rows
+           if not any(y[1] >= x[1] and y[2] >= x[2] and y[1:] != x[1:]
+                      for y in rows)}
+    assert got == ref

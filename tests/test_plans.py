@@ -920,6 +920,26 @@ def test_absent_side_reads_empty_bag_aggregates(eng, spark):
                                                 (2, 0, 0, None, 0)]
 
 
+def test_count_distinct_over_materialized_bag(eng, spark):
+    """COUNT_DISTINCT(t.v) next to a bag-only builtin (SIZE) keeps the
+    bag and counts its distinct non-null values, the rows of the fused
+    form; it used to fail with MISSING_GROUP_BY."""
+    from spork_spark.parser import run_script
+    t = eng.from_df(spark.createDataFrame(
+        [(1, 10), (1, 10), (1, None), (1, 20), (2, None), (3, 5)],
+        "k int, v int"), alias="t")
+    bag, fused = (run_script(eng, f"""
+        g = GROUP t BY k;
+        out = FOREACH g GENERATE group AS k, {n}(t) AS n,
+                                 COUNT_DISTINCT(t.v) AS nd;
+    """, relations={"t": t})["out"].df() for n in ("SIZE", "COUNT_STAR"))
+    assert "collect_list" in plan_of(bag)
+    assert "collect_list" not in plan_of(fused)
+    assert sorted(map(tuple, bag.collect())) == \
+        sorted(map(tuple, fused.collect())) == [(1, 4, 2), (2, 1, 0),
+                                                (3, 1, 1)]
+
+
 @pytest.mark.parametrize("filt,gens,twin_filt,twin_gens", [
     pytest.param("COUNT(tb) == 0", "group AS k",
                  "SIZE(tb) == 0", "group AS k", id="count_filter"),

@@ -288,6 +288,21 @@ def test_positional_ref_out_of_bounds_is_a_clean_error(eng):
                         "r = FILTER a BY $9 == 1;")
 
 
+@pytest.mark.parametrize("text", [
+    pytest.param("out = FOREACH t GENERATE s.$5 AS x;", id="tuple"),
+    pytest.param("out = FOREACH (GROUP t BY s) GENERATE group.$5, SIZE(t);",
+                 id="group_key"),
+])
+def test_tuple_position_out_of_bounds_is_a_clean_error(eng, spark, text):
+    """$5 on a 2-field tuple, in a FOREACH and as group.$5 of a GROUP on
+    that tuple: the same 'Out of bound access' error, not a raw
+    IndexError."""
+    t = eng.from_df(spark.createDataFrame(
+        [((1, 2), 3)], "s struct<a:int,b:int>, x int"), alias="t")
+    with pytest.raises(ValueError, match=r"Out of bound access: \$5"):
+        run_script(eng, text, relations={"t": t})["out"].df()
+
+
 def test_truncated_define_is_a_parse_error(eng):
     """`DEFINE a;` / `DEFINE a` (EOF) must be clean PigSyntaxErrors —
     found by the near-valid fuzz as raw IndexErrors."""

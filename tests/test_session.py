@@ -66,7 +66,8 @@ def test_get_spark_applies_autosize_at_runtime(spark):
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         s = get_spark(data_dir=SF1)
-        expect = autosize_conf(_input_bytes(SF1), None)
+        expect = autosize_conf(_input_bytes(SF1),
+                               s.sparkContext.defaultParallelism)
         assert (s.conf.get("spark.sql.shuffle.partitions")
                 == expect["spark.sql.shuffle.partitions"])
         assert (s.conf.get("spark.sql.files.maxPartitionBytes")
@@ -74,6 +75,74 @@ def test_get_spark_applies_autosize_at_runtime(spark):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
         spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+
+@pytest.fixture
+def sizing(spark, monkeypatch):
+    """The shared session with no sizing override in the environment;
+    its partition sizing is restored afterwards."""
+    for var in ("SPARK_GRAFT_SHUFFLE", "SPARK_GRAFT_SF_DIR"):
+        monkeypatch.delenv(var, raising=False)
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.files.maxPartitionBytes")
+    before = {k: spark.conf.get(k) for k in keys}
+    yield spark
+    for k, v in before.items():
+        spark.conf.set(k, v)
+
+
+def test_get_spark_sizes_shuffle_to_session_cores(sizing):
+    """No override: one shuffle partition per core of the session."""
+    s = get_spark()
+    assert (s.conf.get("spark.sql.shuffle.partitions")
+            == str(s.sparkContext.defaultParallelism))
+
+
+def test_get_spark_explicit_shuffle_wins(sizing, monkeypatch, tmp_path):
+    """$SPARK_GRAFT_SHUFFLE replaces the core rule and the data_dir
+    autosize; explicit extra_conf wins over it."""
+    (tmp_path / "t.parquet").write_bytes(b"x" * 1024)
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE", "7")
+    s = get_spark(data_dir=str(tmp_path))
+    assert s.conf.get("spark.sql.shuffle.partitions") == "7"
+    s = get_spark(extra_conf={"spark.sql.shuffle.partitions": "5"})
+    assert s.conf.get("spark.sql.shuffle.partitions") == "5"
+
+
+def test_get_spark_data_dir_autosize_floors_at_session_cores(sizing,
+                                                             tmp_path):
+    """A small input directory leaves the count at the session's cores;
+    a large one raises it by bytes."""
+    (tmp_path / "t.parquet").write_bytes(b"x" * 1024)
+    s = get_spark(data_dir=str(tmp_path))
+    cores = s.sparkContext.defaultParallelism
+    assert s.conf.get("spark.sql.shuffle.partitions") == str(cores)
+    with open(tmp_path / "t.parquet", "r+b") as f:     # sparse
+        f.truncate(cores * 6 * 1024 * 1024)
+    s = get_spark(data_dir=str(tmp_path))
+    assert s.conf.get("spark.sql.shuffle.partitions") == str(2 * cores)
+
+
+def test_configure_session_warns_once_on_debugging(monkeypatch, caplog):
+    """A session built elsewhere with DataFrame debugging on (a static
+    conf configure_session cannot change) gets one warning per process,
+    however many times it is configured."""
+    from spork_spark import session
+
+    class Conf(dict):
+        def set(self, k, v):
+            self[k] = v
+
+    class Session:
+        conf = Conf({session._DEBUGGING: "true"})
+
+    monkeypatch.setattr(session, "_debugging_checked", False)
+    with caplog.at_level("WARNING", logger="spork_spark.session"):
+        session.configure_session(Session())
+        session.configure_session(Session())
+    hits = [r for r in caplog.records if session._DEBUGGING in r.getMessage()]
+    assert len(hits) == 1
+    assert Session.conf["spark.sql.ansi.enabled"] == "false"
 
 
 def test_input_bytes_recurses_into_partitioned_tables(tmp_path):

@@ -12,6 +12,11 @@ lambda variable counters (`x_12`), JVM object hashes (`@1a2b3c`) and
 RDD ids (`MapPartitionsRDD[126]`, which checkpoint-staged scans print).
 
 Usage: python tools/dump_plans.py before q1,golden/case_when,... [--round r10]
+       [--default-session]
+
+The session pins bench.py's LATENCY_PROFILE (shuffle partitions
+included), so dumps compare across engine sizing changes;
+``--default-session`` dumps on the engine's own sizing instead.
 """
 import contextlib
 import io
@@ -43,15 +48,21 @@ def main() -> None:
     if "--round" in sys.argv:
         rnd = sys.argv[sys.argv.index("--round") + 1]
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    default = "--default-session" in sys.argv
+    if default:
+        # the engine's own sizing, as perfbench/run.py builds its session:
+        # no pinned profile and no sizing override from the environment
+        for var in ("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_SHUFFLE"):
+            os.environ.pop(var, None)
     import bench
     import __spark_entry__ as m
     from spork_spark import Engine, get_spark
     from spork_spark.parser import run_script
     from tests.test_golden_scripts import GOLDEN_DIR, SF
-    spark = get_spark(master="local[4]",
-                      extra_conf={**bench.LATENCY_PROFILE,
-                                  "spark.ui.enabled": "false",
-                                  "spark.ui.showConsoleProgress": "false"})
+    conf = {"spark.ui.enabled": "false",
+            "spark.ui.showConsoleProgress": "false"}
+    spark = get_spark(master="local[4]", extra_conf=(
+        conf if default else {**bench.LATENCY_PROFILE, **conf}))
     spark.sparkContext.setLogLevel("ERROR")
     qs = m.queries()
     eng = Engine(spark)
